@@ -21,7 +21,7 @@ for rep in range(2):
         addresses = addresses.persist(); buildings = buildings.persist()
         addresses.count(); buildings.count()
         t = time.monotonic()
-        pw = sj.pick_pip_winner(sj.pip_candidates(addresses, buildings, strategy="pairjoin"))
+        pw = sj.pick_pip_winner(sj.pip_candidates(addresses, buildings))
         npw = pw.count()
         res.setdefault(("pip_pairjoin", cores), []).append(time.monotonic() - t)
         spark.stop()

@@ -17,7 +17,6 @@ KNN_CUTOFF_M = 100.0  # kNN fallback max distance, meters (engine-chosen*)
 ADDR_DEDUPE_EPS_M = 25.0  # J4: identical address within eps meters (engine-chosen*)
 DEDUPE_JOIN_LEVEL = 16  # J3 candidate-join cell level (~600 x 300 m cells)
 REFINE_INDEX_LEVEL = 15  # broadcast-path fine index level (~1.2 km x 600 m; width >= kNN cutoff up to |lat| 80)
-SPATIAL_JOIN_STRATEGY = "pairjoin"  # shuffle strategy when not broadcast: "pairjoin" (fine-cell equi-join + per-pair refine, AQE skew) or "cogroup" (salted applyInPandas groups)
 
 # --- tiling (§8.5) ------------------------------------------------------
 CELL_LEVEL = 12  # default Morton level: ~9.8 km x 4.9 km cells at equator
@@ -31,8 +30,8 @@ TILE_MAX_ELEMS = 10_000  # per-tile element budget (engine-chosen*)
 # to ~10 km across — far beyond any real building.
 MAX_COVER_CELLS = 1024
 
-# --- skew handling (SURVEY.md §4) ---------------------------------------
-SALT_THRESHOLD = 20_000  # addresses per cell above which the PIP group is salted
+# --- spatial-join path choice (SURVEY.md §4) ----------------------------
+# above this the pair-join shuffles, and AQE's skew-join split handles hot cells
 BROADCAST_BUILDINGS_MAX = 200_000  # rows below which the building side is broadcast
 
 # --- decision / method labels (§1.2) -------------------------------------

@@ -247,37 +247,6 @@ def flatten_polys(ring_lats, ring_lons, hole_lats, hole_lons):
     return flat_lat, flat_lon, ring_off, poly_off
 
 
-def flatten_polys_packed(ring_lats, ring_lons, hflat_lat, hflat_lon, hole_lens):
-    """Like :func:`flatten_polys`, but holes arrive PACKED per polygon:
-    ``hflat_lat[j]``/``hflat_lon[j]`` are polygon j's hole vertices
-    concatenated, ``hole_lens[j]`` the per-hole ring lengths. Used by
-    the cogroup join strategy, whose Arrow serializer cannot ship
-    ``array<array<double>>`` columns (segfaults in pyarrow's nested
-    list path at real batch sizes — operators/spatial_join.py); plain
-    ``array<double>``/``array<int>`` columns round-trip fine."""
-    all_lats: list = []
-    all_lons: list = []
-    poly_off = np.zeros(len(ring_lats) + 1, dtype=np.int64)
-    for j, (rla, rlo) in enumerate(zip(ring_lats, ring_lons)):
-        all_lats.append(rla)
-        all_lons.append(rlo)
-        n_rings = 1
-        lens = hole_lens[j] if hole_lens is not None else None
-        if lens is not None and len(lens):
-            fl = np.asarray(hflat_lat[j], dtype=np.float64)
-            fo = np.asarray(hflat_lon[j], dtype=np.float64)
-            s = 0
-            for ln in lens:
-                ln = int(ln)
-                all_lats.append(fl[s:s + ln])
-                all_lons.append(fo[s:s + ln])
-                s += ln
-                n_rings += 1
-        poly_off[j + 1] = poly_off[j] + n_rings
-    flat_lat, flat_lon, ring_off = flatten_rings(all_lats, all_lons)
-    return flat_lat, flat_lon, ring_off, poly_off
-
-
 def _poly_pair_expand(pair_poly: np.ndarray, poly_off: np.ndarray):
     """Expand (pair → polygon) to (pair, ring) granularity: returns
     (orig_pair_idx, ring_idx) with each pair's rings contiguous and in

@@ -151,8 +151,9 @@ def grid_epsilon_cluster(points: DataFrame, eps: int,
 
     Scale shape: the probe side explodes 9x (bounded constant); the
     join is an equi-join on cell id, so dense urban cells are the only
-    hotspot — the same skew profile spatial_join handles by salting,
-    and eps chosen ~ the match cutoff keeps per-cell membership small.
+    hotspot — the same skew profile as spatial_join's pair-join, which
+    AQE's skew-join split handles, and eps chosen ~ the match cutoff
+    keeps per-cell membership small.
     ``scratch_dir`` follows dup_clusters' contract (shared filesystem
     on a real cluster).
     """

@@ -2,7 +2,7 @@
 (SURVEY.md §2.3 J3, J4).
 
 - J3 (buildings): a new footprint overlapping an existing way is
-  dropped. Cell-cover equi-join (cogroup) + bbox prefilter + exact
+  dropped. Cell-cover equi-join + bbox prefilter + exact
   ring-overlap kernel → left_anti on the hit list.
 - J4 (addresses): a new address with the same normalized
   (street, housenumber) within ε meters of an existing address node is

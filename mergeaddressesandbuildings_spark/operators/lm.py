@@ -13,8 +13,7 @@ per-row driver work. Scale shape (100 TB corpus):
   then two hash aggs ((w1,w2) and (w1) counts) — both map-side
   combinable; the model is O(distinct bigrams), not O(corpus).
 - vocabulary size: one distinct-count job returning a single scalar
-  (bounded metadata, same contract as the salt-factor collects in
-  operators/spatial_join.py).
+  (bounded metadata).
 - scoring: the corpus bigram stream equi-joins the count tables on
   (w1, w2) and (w1). Stopword bigrams are the classic hot keys — AQE
   skew-join splitting applies, and the count tables (MB-GB next to a

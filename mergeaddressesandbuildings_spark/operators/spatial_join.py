@@ -1,27 +1,28 @@
 """J1/J2: the distributed spatial join (SURVEY.md §2.3; BASELINE.json:6).
 
-Architecture — the standard partition-based spatial merge join
-(PAPERS.md, EDBT 2020): both sides are keyed by level-L Morton cell so
-Catalyst sees a plain equi-join/cogroup; the exact geometry test runs as
-a numpy kernel inside ``applyInPandas`` groups ("STRtree-per-partition
-PIP/kNN test inside pandas UDFs", BASELINE.json:6 — here the in-group
-index is a vectorized bbox prefilter, the right structure for rectangle
-candidates at county building sizes).
+Two physical paths with bit-identical winners
+(tests/test_join_strategies.py). :func:`broadcast_index_for` picks one
+from what it can observe, the building count against ``broadcast_max``:
 
-Scale design:
-- **cogroup, not join-then-refine**: addresses are NOT replicated per
-  candidate building; each (cell) group gets the address block and the
-  building block once.
-- **skew**: hot urban cells exceed executor-friendly group sizes → the
-  address side is salted (`pmod(xxhash64(addr_id), s)`), the building
-  side replicated per salt (correctness: every address still sees every
-  building of its cell), group key = (cell, salt). AQE cannot split a
-  single applyInPandas group, hence explicit salting (SURVEY.md §4).
-- **broadcast path** (J6): when the building side is small, skip the
-  shuffle entirely — ship a pandas copy in the UDF closure and run the
-  same kernel in mapInPandas over unshuffled addresses.
-- kNN candidate expansion (J2) = explode of the 3×3 Morton neighborhood,
-  valid while cutoff ≤ one cell width (§8.5; asserted at plan build).
+- **broadcast index** (J6, small building side): the buildings become a
+  numpy index (flattened rings, bboxes, a sorted fine-cell bbox cover)
+  shipped once per executor as a Spark broadcast variable. Addresses
+  are never shuffled; a mapInPandas kernel finds each address's
+  candidates by binary search on the cover and runs the exact PIP /
+  distance test.
+- **fine-cell pair-join** (the shuffle path, corpus scale): the
+  partition-based spatial merge join (PAPERS.md, EDBT 2020). Addresses
+  are keyed by their fine (``REFINE_INDEX_LEVEL``) Morton cell — for
+  kNN, the 3×3 neighborhood pruned to the cutoff — and buildings are
+  exploded to their bbox-cover cells. Catalyst sees a plain equi-join
+  plus a bbox predicate in the JVM; the exact geometry test runs per
+  candidate pair in a mapInPandas Arrow kernel.
+- **skew**: the pair-join has no per-cell group, so nothing can outgrow
+  an executor. A hot urban cell is ordinary join skew, and AQE's
+  skew-join split divides it at the level of candidate pairs — the
+  balancing the EDBT paper argues for.
+- kNN candidate expansion covers the 3×3 fine-cell neighborhood, valid
+  while cutoff ≤ one fine-cell width (§8.5; asserted at plan build).
 """
 
 from __future__ import annotations
@@ -46,176 +47,10 @@ CAND_SCHEMA = T.StructType(
 )
 
 _ADDR_KERNEL_COLS = ["addr_id", "lat", "lon"]
-_BLD_KERNEL_COLS = [
+_BLD_INDEX_COLS = [
     "building_id", "ring_lats", "ring_lons", "hole_lats", "hole_lons",
     "min_lat", "min_lon", "max_lat", "max_lon", "area_m2",
 ]
-# cogroup variant: holes packed flat (array<array<double>> segfaults in
-# the cogroup Arrow serializer — see geom.flatten_polys_packed)
-_BLD_COGROUP_COLS = [
-    "building_id", "ring_lats", "ring_lons",
-    "hflat_lat", "hflat_lon", "hole_lens",
-    "min_lat", "min_lon", "max_lat", "max_lon", "area_m2",
-]
-_EMPTY_HOLES = "CAST(array() AS ARRAY<ARRAY<DOUBLE>>)"
-
-
-def _pack_holes(buildings: DataFrame) -> DataFrame:
-    """hole_lats/hole_lons → (hflat_lat, hflat_lon, hole_lens)."""
-    hla = F.coalesce(F.col("hole_lats"), F.expr(_EMPTY_HOLES))
-    hlo = F.coalesce(F.col("hole_lons"), F.expr(_EMPTY_HOLES))
-    return buildings.withColumn("hflat_lat", F.flatten(hla)) \
-                    .withColumn("hflat_lon", F.flatten(hlo)) \
-                    .withColumn("hole_lens", F.transform(hla, lambda h: F.size(h)))
-
-
-_MASK_BLD_CHUNK = 4096  # bounds the dense bbox-prefilter mask: even a
-# salted 20k-point group peaks at 20k×4096 bools ≈ 80 MB per chunk,
-# independent of how many buildings a hot urban cell holds
-
-
-def _bbox_pairs(plat, plon, min_lat, max_lat, min_lon, max_lon,
-                pad_lat=None, pad_lon=None):
-    """(point, building) candidate pairs whose (optionally padded) bbox
-    contains the point — computed in building-axis chunks so the dense
-    mask is bounded regardless of group size."""
-    pts, blds = [], []
-    for s in range(0, len(min_lat), _MASK_BLD_CHUNK):
-        e = s + _MASK_BLD_CHUNK
-        lo_lat = min_lat[None, s:e]
-        hi_lat = max_lat[None, s:e]
-        lo_lon = min_lon[None, s:e]
-        hi_lon = max_lon[None, s:e]
-        if pad_lat is not None:
-            lo_lat = lo_lat - pad_lat
-            hi_lat = hi_lat + pad_lat
-            lo_lon = lo_lon - pad_lon
-            hi_lon = hi_lon + pad_lon
-        m = (
-            (plat[:, None] >= lo_lat) & (plat[:, None] <= hi_lat)
-            & (plon[:, None] >= lo_lon) & (plon[:, None] <= hi_lon)
-        )
-        p, b = np.nonzero(m)
-        pts.append(p)
-        blds.append(b + s)
-    return np.concatenate(pts), np.concatenate(blds)
-
-
-def _pip_kernel(adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-    """All (address, containing building) pairs within one cell group."""
-    if adf.empty or bdf.empty:
-        return pd.DataFrame(columns=["addr_id", "building_id", "dist_m", "area_m2"])
-    plat = adf["lat"].to_numpy(dtype=np.float64)
-    plon = adf["lon"].to_numpy(dtype=np.float64)
-    pair_pt, pair_bld = _bbox_pairs(
-        plat, plon,
-        bdf["min_lat"].to_numpy(), bdf["max_lat"].to_numpy(),
-        bdf["min_lon"].to_numpy(), bdf["max_lon"].to_numpy(),
-    )
-    if len(pair_pt) == 0:
-        return pd.DataFrame(columns=["addr_id", "building_id", "dist_m", "area_m2"])
-    flat_lat, flat_lon, ring_off, poly_off = geom.flatten_polys_packed(
-        bdf["ring_lats"].to_numpy(), bdf["ring_lons"].to_numpy(),
-        bdf["hflat_lat"].to_numpy(), bdf["hflat_lon"].to_numpy(),
-        bdf["hole_lens"].to_numpy(),
-    )
-    hit = geom.pairs_points_in_polys(
-        plat, plon, pair_pt, pair_bld, flat_lat, flat_lon, ring_off, poly_off
-    )
-    pi, bi = pair_pt[hit], pair_bld[hit]
-    return pd.DataFrame(
-        {
-            "addr_id": adf["addr_id"].to_numpy()[pi],
-            "building_id": bdf["building_id"].to_numpy()[bi],
-            "dist_m": np.zeros(len(pi), dtype=np.float64),
-            "area_m2": bdf["area_m2"].to_numpy()[bi],
-        }
-    )
-
-
-def _knn_kernel(adf: pd.DataFrame, bdf: pd.DataFrame, cutoff_m: float) -> pd.DataFrame:
-    """(address, building, dist) pairs with dist ≤ cutoff in one group."""
-    if adf.empty or bdf.empty:
-        return pd.DataFrame(columns=["addr_id", "building_id", "dist_m", "area_m2"])
-    plat = adf["lat"].to_numpy(dtype=np.float64)
-    plon = adf["lon"].to_numpy(dtype=np.float64)
-    # bbox-expanded prefilter: only buildings whose bbox inflated by the
-    # cutoff contains the point can be within cutoff
-    pad_lat = cutoff_m / config.DEG_TO_M
-    pad_lon = cutoff_m / (config.DEG_TO_M * np.cos(np.radians(plat[:, None])))
-    pair_pt, pair_bld = _bbox_pairs(
-        plat, plon,
-        bdf["min_lat"].to_numpy(), bdf["max_lat"].to_numpy(),
-        bdf["min_lon"].to_numpy(), bdf["max_lon"].to_numpy(),
-        pad_lat=pad_lat, pad_lon=pad_lon,
-    )
-    if len(pair_pt) == 0:
-        return pd.DataFrame(columns=["addr_id", "building_id", "dist_m", "area_m2"])
-    flat_lat, flat_lon, ring_off, poly_off = geom.flatten_polys_packed(
-        bdf["ring_lats"].to_numpy(), bdf["ring_lons"].to_numpy(),
-        bdf["hflat_lat"].to_numpy(), bdf["hflat_lon"].to_numpy(),
-        bdf["hole_lens"].to_numpy(),
-    )
-    d = geom.pairs_point_to_polys_dist_m(
-        plat, plon, pair_pt, pair_bld, flat_lat, flat_lon, ring_off, poly_off
-    )
-    ok = d <= cutoff_m
-    pi, bi = pair_pt[ok], pair_bld[ok]
-    return pd.DataFrame(
-        {
-            "addr_id": adf["addr_id"].to_numpy()[pi],
-            "building_id": bdf["building_id"].to_numpy()[bi],
-            "dist_m": d[ok],
-            "area_m2": bdf["area_m2"].to_numpy()[bi],
-        }
-    )
-
-
-def _salt_factors(addresses: DataFrame, threshold: int) -> dict[int, int]:
-    """cell → salt fan-out for cells whose address count exceeds the
-    threshold. Collected to the driver: only over-threshold cells travel
-    (bounded: ≤ total_rows/threshold entries)."""
-    hot = (
-        addresses.groupBy("cell").count()
-        .filter(F.col("count") > threshold)
-        .collect()
-    )
-    return {r["cell"]: int(np.ceil(r["count"] / threshold)) for r in hot}
-
-
-def _with_salt(addresses: DataFrame, buildings_exploded: DataFrame,
-               factors: dict[int, int]):
-    """Salt the address side; replicate the building side per salt."""
-    spark = addresses.sparkSession
-    if not factors:
-        a = addresses.withColumn("salt", F.lit(0))
-        b = buildings_exploded.withColumn("salt", F.lit(0))
-        return a, b
-    fmap = F.create_map(*[F.lit(v) for kv in factors.items() for v in kv])
-    a = addresses.withColumn("_s", F.coalesce(fmap[F.col("cell")], F.lit(1)))
-    a = a.withColumn("salt", F.pmod(F.xxhash64("addr_id"), F.col("_s")).cast("int")).drop("_s")
-    b = buildings_exploded.withColumn("_s", F.coalesce(fmap[F.col("cell")], F.lit(1)))
-    b = b.withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("_s") - 1)).cast("int")).drop("_s")
-    return a, b
-
-
-def _cogroup_refine(addresses: DataFrame, buildings: DataFrame, kernel,
-                    salt_threshold: int) -> DataFrame:
-    """Shuffle path: cogroup on (cell, salt), run the kernel per group."""
-    b_exp = _pack_holes(buildings).select(
-        F.explode("cells").alias("cell"), *_BLD_COGROUP_COLS
-    )
-    a, b = _with_salt(addresses.select("cell", *_ADDR_KERNEL_COLS), b_exp,
-                      _salt_factors(addresses, salt_threshold))
-
-    def run(_key, adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(adf, bdf)
-
-    return (
-        a.groupBy("cell", "salt")
-        .cogroup(b.groupBy("cell", "salt"))
-        .applyInPandas(run, schema=CAND_SCHEMA)
-    )
 
 
 class BldIndex:
@@ -276,6 +111,16 @@ class BldIndex:
 def build_broadcast_index(buildings_pdf: pd.DataFrame,
                           level: int = config.REFINE_INDEX_LEVEL) -> BldIndex:
     return BldIndex(buildings_pdf, level)
+
+
+def broadcast_index_for(buildings: DataFrame,
+                        broadcast_max: int) -> BldIndex | None:
+    """The J6 decision: a building side of at most ``broadcast_max``
+    rows becomes a broadcast index (no shuffle at all); a larger one
+    gives None, and J1/J2 take the fine-cell pair-join."""
+    if buildings.count() > broadcast_max:
+        return None
+    return build_broadcast_index(buildings.select(*_BLD_INDEX_COLS).toPandas())
 
 
 def _broadcast_refine(addresses: DataFrame, index: BldIndex,
@@ -394,11 +239,11 @@ def _flat_pair_frame(pdf: pd.DataFrame, dists: np.ndarray | None = None,
 
 def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
                           level: int, knn_cutoff_m: float | None) -> DataFrame:
-    """Shuffle strategy for J1/J2 at corpus scale: a Catalyst equi-join
+    """Shuffle path for J1/J2 at corpus scale: a Catalyst equi-join
     on FINE-level cells (addresses at their cell — or its 3×3
     neighborhood for kNN — against exploded building bbox-cover cells),
     a bbox predicate in the JVM, then a per-PAIR Arrow refine via
-    mapInPandas. No applyInPandas groups exist, so there is no group
+    mapInPandas. No per-cell group exists, so there is no group
     that can outgrow an executor: skewed hot cells are ordinary join
     skew, which AQE's skew-join split handles. Shuffle volume carries
     each candidate pair's ring once; candidate counts stay near-linear
@@ -508,19 +353,12 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
 
 
 def pip_candidates(addresses: DataFrame, buildings: DataFrame,
-                   broadcast_index: BldIndex | None = None,
-                   salt_threshold: int = config.SALT_THRESHOLD,
-                   strategy: str = config.SPATIAL_JOIN_STRATEGY) -> DataFrame:
-    """J1: (addr, containing-building) candidate pairs.
-
-    Strategies: broadcast (small building side, no shuffle at all),
-    pair-join (default shuffle path — fine-cell equi-join + per-pair
-    refine, skew handled by AQE), cogroup (salted applyInPandas groups —
-    kept for the explicit hot-cell-salting strategy and tests)."""
+                   broadcast_index: BldIndex | None = None) -> DataFrame:
+    """J1: (addr, containing-building) candidate pairs — over the
+    broadcast index when one is given (:func:`broadcast_index_for`),
+    else by the fine-cell pair-join."""
     if broadcast_index is not None:
         return _broadcast_refine(addresses, broadcast_index, _pip_pairs)
-    if strategy == "cogroup":
-        return _cogroup_refine(addresses, buildings, _pip_kernel, salt_threshold)
     return _pair_join_candidates(
         addresses, buildings, config.REFINE_INDEX_LEVEL, knn_cutoff_m=None
     )
@@ -529,68 +367,26 @@ def pip_candidates(addresses: DataFrame, buildings: DataFrame,
 def knn_candidates(addresses: DataFrame, buildings: DataFrame,
                    cutoff_m: float = config.KNN_CUTOFF_M,
                    level: int = config.CELL_LEVEL,
-                   broadcast_index: BldIndex | None = None,
-                   salt_threshold: int = config.SALT_THRESHOLD,
-                   strategy: str = config.SPATIAL_JOIN_STRATEGY) -> DataFrame:
-    """J2 candidates: addresses matched against building cover cells in
-    their 3×3 cell neighborhood (T3). Same strategy set as
-    :func:`pip_candidates`."""
+                   broadcast_index: BldIndex | None = None) -> DataFrame:
+    """J2: (addr, building, dist) candidate pairs within ``cutoff_m``
+    over each address's 3×3 fine-cell neighborhood (T3); same path
+    choice as :func:`pip_candidates`. Both paths search at the fine
+    level (the index's own, or ``REFINE_INDEX_LEVEL``), so ``level`` is
+    not read; it is still accepted so existing keyword callers keep
+    working. A pair can surface more than once (a building cover
+    spanning several neighbor cells) with identical rows — harmless for
+    the top-1 window; callers needing distinct pairs dedupe."""
+    fine_level = (broadcast_index.level if broadcast_index is not None
+                  else config.REFINE_INDEX_LEVEL)
+    assert cells.min_cell_width_m(fine_level, 80.0) >= cutoff_m, (
+        "kNN cutoff exceeds one fine-cell width — neighborhood incomplete (§8.5)"
+    )
     if broadcast_index is not None:
-        assert cells.min_cell_width_m(broadcast_index.level, 80.0) >= cutoff_m, (
-            "kNN cutoff exceeds one fine-cell width — neighborhood incomplete (§8.5)"
-        )
         pair_fn = lambda plat, plon, ids, idx: _knn_pairs(plat, plon, ids, idx, cutoff_m)
         return _broadcast_refine(addresses, broadcast_index, pair_fn)
-    if strategy != "cogroup":
-        assert cells.min_cell_width_m(config.REFINE_INDEX_LEVEL, 80.0) >= cutoff_m, (
-            "kNN cutoff exceeds one fine-cell width — neighborhood incomplete (§8.5)"
-        )
-        return _pair_join_candidates(
-            addresses, buildings, config.REFINE_INDEX_LEVEL, knn_cutoff_m=cutoff_m
-        )
-
-    assert cells.min_cell_width_m(level, 80.0) >= cutoff_m, (
-        "kNN cutoff exceeds one cell width — neighbor expansion incomplete (§8.5)"
+    return _pair_join_candidates(
+        addresses, buildings, config.REFINE_INDEX_LEVEL, knn_cutoff_m=cutoff_m
     )
-
-    # candidate expansion (T3): 3×3 Morton neighborhood. An all-expression
-    # explode(neighbors_expr) inlines the 60-op bit-spread chain into all
-    # 9 generator elements and overflows janino's method-size limit, so
-    # the expansion stays a (tiny) Arrow kernel over the unmatched set.
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if b.empty:
-                continue
-            nb = cells.neighbors(b["cell"].to_numpy(dtype=np.int64))  # (n, 9)
-            rep = b.loc[b.index.repeat(9)].reset_index(drop=True)
-            rep["cell"] = nb.reshape(-1)
-            yield rep
-
-    a_schema = "cell long, addr_id long, lat double, lon double"
-    a_exp = (
-        addresses.select("cell", *_ADDR_KERNEL_COLS)
-        .mapInPandas(expand, schema=a_schema)
-    )
-    b_exp = _pack_holes(buildings).select(
-        F.explode("cells").alias("cell"), *_BLD_COGROUP_COLS
-    )
-    # factors computed on the un-expanded addresses (1 row per addr,
-    # not 9) — avoids re-running the expansion job just for counts
-    a, b = _with_salt(a_exp, b_exp, _salt_factors(addresses, salt_threshold))
-
-    def run(_key, adf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
-        return _knn_kernel(adf, bdf, cutoff_m)
-
-    raw = (
-        a.groupBy("cell", "salt")
-        .cogroup(b.groupBy("cell", "salt"))
-        .applyInPandas(run, schema=CAND_SCHEMA)
-    )
-    # an (addr, building) pair can surface via several neighbor cells
-    # with identical dist — harmless for the top-1 window (row_number
-    # picks exactly one of the identical rows), so no dedup shuffle here;
-    # callers needing distinct pairs dedupe themselves
-    return raw
 
 
 def pick_pip_winner(cands: DataFrame) -> DataFrame:

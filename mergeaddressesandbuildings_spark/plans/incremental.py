@@ -159,36 +159,24 @@ def _record_cells(records: DataFrame) -> DataFrame:
 
 
 def _winners(spark: SparkSession, addresses: DataFrame,
-             buildings: DataFrame, level: int, knn_cutoff_m: float,
-             salt_threshold: int,
+             buildings: DataFrame, knn_cutoff_m: float,
              broadcast_max: int) -> tuple[DataFrame, DataFrame]:
     """The J1→J2 winner pass of plans/merge.py over an arbitrary
     (addresses, buildings) slice — identical strategy choices, so the
     sub-run of an increment picks bit-identical winners. Winners come
     back with the address ``cell`` attached (the state tables' splice
     key)."""
-    n_bld = buildings.count()
-    broadcast_idx = None
-    if n_bld <= broadcast_max:
-        broadcast_idx = sj.build_broadcast_index(
-            buildings.select(
-                "building_id", "ring_lats", "ring_lons",
-                "hole_lats", "hole_lons",
-                "min_lat", "min_lon", "max_lat", "max_lon", "area_m2",
-            ).toPandas()
-        )
+    broadcast_idx = sj.broadcast_index_for(buildings, broadcast_max)
     acells = addresses.select("addr_id", "cell")
     pip = sj.pip_candidates(addresses, buildings,
-                            broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+                            broadcast_index=broadcast_idx)
     pip_w = sj.pick_pip_winner(pip).join(acells, "addr_id")
     pip_w = pip_w.persist()
     pip_w.count()
     unmatched = addresses.join(pip_w.select("addr_id"), "addr_id",
                                "left_anti")
     knn = sj.knn_candidates(unmatched, buildings, cutoff_m=knn_cutoff_m,
-                            level=level, broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+                            broadcast_index=broadcast_idx)
     knn_w = sj.pick_knn_winner(knn).join(acells, "addr_id")
     return pip_w, knn_w
 
@@ -197,7 +185,6 @@ def full_build(spark: SparkSession, pages: DataFrame,
                existing_osm: DataFrame | None, state_dir: str,
                level: int = config.CELL_LEVEL,
                knn_cutoff_m: float = config.KNN_CUTOFF_M,
-               salt_threshold: int = config.SALT_THRESHOLD,
                broadcast_max: int = config.BROADCAST_BUILDINGS_MAX) -> dict:
     """Run the full pipeline once and persist the incremental state
     tables. Returns {table: manifest} plus the run parameters."""
@@ -245,8 +232,8 @@ def full_build(spark: SparkSession, pages: DataFrame,
     addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
     buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
 
-    pip_w, knn_w = _winners(spark, addresses, buildings, level,
-                            knn_cutoff_m, salt_threshold, broadcast_max)
+    pip_w, knn_w = _winners(spark, addresses, buildings,
+                            knn_cutoff_m, broadcast_max)
     # RANGE-cluster the winner tables by cell: an increment's purge
     # set is a set of spatially-local cells, so range clustering keeps
     # the copy-on-write rewrite to the ring-intersecting files
@@ -261,7 +248,6 @@ def full_build(spark: SparkSession, pages: DataFrame,
     pip_w.unpersist()
 
     meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
-            "salt_threshold": salt_threshold,
             "broadcast_max": broadcast_max}
     with open(_meta_path(state_dir), "w") as f:
         json.dump(meta, f)
@@ -373,8 +359,8 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     # the semi-join inherits the snapshot scan's partitioning (ring1
     # broadcasts), i.e. the table's FILE count — after maintenance
     # that can be far below the core count, and every map stage of the
-    # winner recompute (pack/explode/salt before the cogroup shuffle)
-    # would then run nearly serial. One bounded shuffle here buys full
+    # winner recompute (the fine-cell explode and the pair-join's map
+    # side) would then run nearly serial. One bounded shuffle here buys full
     # parallelism for the expensive Arrow kernels downstream.
     par = spark.sparkContext.defaultParallelism
     sub_addr = addresses.join(ring1, "cell", "left_semi")
@@ -393,9 +379,8 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     n_sub_bld = sub_bld.count()
     _lap("closure_slices")
 
-    pip_w, knn_w = _winners(spark, sub_addr, sub_bld, level,
-                            meta["knn_cutoff_m"], meta["salt_threshold"],
-                            meta["broadcast_max"])
+    pip_w, knn_w = _winners(spark, sub_addr, sub_bld,
+                            meta["knn_cutoff_m"], meta["broadcast_max"])
 
     # splice winners BY CELL (module docstring): every winner that can
     # change sits in a ring1 cell, so the purge key set is ring1

@@ -7,7 +7,7 @@
                                                           ▼
                       buildings universe = survivors ∪ existing ways
                                                           │
-        J1 PIP cogroup-on-cell ──► winners ──┐            │
+        J1 PIP fine-cell join ───► winners ──┐            │
         J2 kNN on the unmatched remainder ───┤◄───────────┘
                                              ▼
               decisions (A1/J5) ──► assignments + output sets
@@ -73,16 +73,13 @@ def run_merge(
     level: int = config.CELL_LEVEL,
     budget: int = config.TILE_MAX_ELEMS,
     knn_cutoff_m: float = config.KNN_CUTOFF_M,
-    salt_threshold: int = config.SALT_THRESHOLD,
     broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
     county_ring: tuple | None = None,
-    barrier_dir: str | None = "auto",
+    barrier_dir: str = "auto",
 ) -> MergeResult:
     """See module docstring. ``barrier_dir``: scratch directory for
     lineage barriers (parquet write + re-read of the small intermediate
-    tables); ``"auto"`` creates a temp dir, ``None`` disables barriers
-    (pure-lazy mode — correct but slow, the persisted frames keep full
-    lineage and every downstream action pays plan re-analysis)."""
+    tables); ``"auto"`` creates a temp dir."""
     # parquet splitting is SIZE-based; page html is small but extraction
     # is CPU-heavy per row, so a compact fixture scan yields far fewer
     # partitions than cores and the Arrow kernels run almost serial.
@@ -130,33 +127,19 @@ def run_merge(
     else:
         buildings = new_buildings
 
-    if barrier_dir is not None:
-        # lineage barrier #1: addresses/buildings feed four downstream
-        # consumers each (PIP, kNN, decisions, tiling) — cap the plan
-        # they all inherit. This is also the cache-consistency barrier
-        # (parquet is immutable, so the parallel stage submission race
-        # that lazily-persisted frames suffer cannot occur).
-        addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
-        buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
-    else:
-        addresses = addresses.persist(StorageLevel.MEMORY_AND_DISK)
-        buildings = buildings.persist(StorageLevel.MEMORY_AND_DISK)
+    # lineage barrier #1: addresses/buildings feed four downstream
+    # consumers each (PIP, kNN, decisions, tiling) — cap the plan they
+    # all inherit. This is also the cache-consistency barrier (parquet
+    # is immutable, so the parallel stage submission race that
+    # lazily-persisted frames suffer cannot occur).
+    addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
+    buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
 
-    # J6 broadcast decision: small building side → ship as closure, no
-    # shuffle at all. (On a cluster this is the per-region fast path.)
-    n_bld = buildings.count()
-    broadcast_idx = None
-    if n_bld <= broadcast_max:
-        broadcast_idx = sj.build_broadcast_index(
-            buildings.select(
-                "building_id", "ring_lats", "ring_lons",
-                "hole_lats", "hole_lons",
-                "min_lat", "min_lon", "max_lat", "max_lon", "area_m2",
-            ).toPandas()
-        )
+    # J6: small building side → broadcast index, no shuffle at all.
+    # (On a cluster this is the per-region fast path.)
+    broadcast_idx = sj.broadcast_index_for(buildings, broadcast_max)
 
-    pip = sj.pip_candidates(addresses, buildings, broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+    pip = sj.pip_candidates(addresses, buildings, broadcast_index=broadcast_idx)
     # winners feed three consumers (unmatched anti-join, decisions,
     # output sets) — persist AND materialize eagerly: a lazily-persisted
     # frame referenced from several branches of one downstream job gets
@@ -168,20 +151,14 @@ def run_merge(
 
     unmatched = addresses.join(pip_winners.select("addr_id"), "addr_id", "left_anti")
     knn = sj.knn_candidates(unmatched, buildings, cutoff_m=knn_cutoff_m,
-                            level=level, broadcast_index=broadcast_idx,
-                            salt_threshold=salt_threshold)
+                            broadcast_index=broadcast_idx)
     knn_winners = sj.pick_knn_winner(knn).persist(StorageLevel.MEMORY_AND_DISK)
     knn_winners.count()
 
     assignments = dec.assign(addresses, pip_winners, knn_winners, buildings)
-    if barrier_dir is not None:
-        # lineage barrier #2: assignments fan into output sets, tiling,
-        # and the caller's writes.
-        assignments = _lineage_barrier(
-            spark, assignments, f"{barrier_dir}/assignments")
-    else:
-        assignments = assignments.persist(StorageLevel.MEMORY_AND_DISK)
-        assignments.count()  # see pip_winners note: materialize before fan-out
+    # lineage barrier #2: assignments fan into output sets, tiling, and
+    # the caller's writes.
+    assignments = _lineage_barrier(spark, assignments, f"{barrier_dir}/assignments")
     sets = dec.output_sets(assignments, buildings)
 
     points = tiling.tile_points(assignments, buildings)

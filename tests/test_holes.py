@@ -83,39 +83,6 @@ def test_holed_assignments_match_oracle_pairjoin(spark, rows, golden):
     assert got == want
 
 
-def test_holed_strategy_equivalence(spark, rows, golden):
-    """All three join strategies (incl. the cogroup path, which ships
-    holes PACKED through Arrow — geom.flatten_polys_packed) agree with
-    the oracle on the holed fixture."""
-    from mergeaddressesandbuildings_spark.operators import (
-        extract, spatial_join as sj,
-    )
-
-    pages, existing = _engine_frames(spark, rows)
-    records = extract.extract_records(pages).persist()
-    addresses, new_b = extract.split_records(records)
-    _, ex_ways = extract.existing_to_tables(existing)
-    buildings = new_b.unionByName(ex_ways)
-
-    def fp(df):
-        import pyspark.sql.functions as F
-        r = df.agg(F.expr("bit_xor(xxhash64(addr_id, building_id))").alias("f"),
-                   F.count("*").alias("n")).collect()[0]
-        return r["f"], r["n"]
-
-    cg = fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="cogroup")))
-    pj = fp(sj.pick_pip_winner(
-        sj.pip_candidates(addresses, buildings, strategy="pairjoin")))
-    assert cg == pj and cg[1] > 0
-    cgk = fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="cogroup")))
-    pjk = fp(sj.pick_knn_winner(
-        sj.knn_candidates(addresses, buildings, strategy="pairjoin")))
-    assert cgk == pjk and cgk[1] > 0
-    records.unpersist()
-
-
 def test_courtyard_semantics(engine, golden):
     """The intended per-scenario outcomes, stated explicitly."""
     by_url = {}

@@ -97,7 +97,7 @@ def test_pair_join_strategy_is_equi_join(spark):
 
     records = extract.extract_records(pg.pages_df(spark, 200), level=config.CELL_LEVEL)
     addresses, buildings = extract.split_records(records)
-    plan = explain(sj.pip_candidates(addresses, buildings, strategy="pairjoin"))
+    plan = explain(sj.pip_candidates(addresses, buildings))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
