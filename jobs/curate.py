@@ -18,7 +18,7 @@ Chain (every stage an operator this repo already oracle-checks):
     → optional Hamilton token-budget apportionment across languages
       (sampling.apportion_budget, --budget 0 = keep all)
     → shard assignment (webpipe.shard_assign)
-    → snapshot commit (sources/snapshots.py) — each run appends ONE
+    → Iceberg commit (sources/iceberg.py) — each run appends ONE
       snapshot, so successive crawl increments are time-travelable
       and consumable exactly-once via read_changes.
 
@@ -46,7 +46,7 @@ def main() -> None:
     ap.add_argument("--pages-path", default=None,
                     help="read a pages parquet table instead of generating")
     ap.add_argument("--out", required=True,
-                    help="snapshot table directory (sources/snapshots.py)")
+                    help="Iceberg table directory (sources/iceberg.py)")
     ap.add_argument("--master", default=None)
     ap.add_argument("--lang", default=None,
                     help="keep only this lang value (default: keep all)")
@@ -71,7 +71,7 @@ def main() -> None:
     )
     from mergeaddressesandbuildings_spark.session import get_spark
     from mergeaddressesandbuildings_spark.sources import pages as pg
-    from mergeaddressesandbuildings_spark.sources import snapshots
+    from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
     spark = get_spark(master=args.master, app_name="curate-job")
     spark.sparkContext.setLogLevel("ERROR")
@@ -139,7 +139,12 @@ def main() -> None:
         "coalesce(bit_xor(xxhash64(url, text)), 0L)").alias("fp"),
         F.count("*").alias("n"))
     fp_row = fp_df.collect()[0]
-    manifest = snapshots.write_snapshot(out, args.out, mode="append")
+    try:
+        ice.load_metadata(args.out)
+    except ice.IcebergError:
+        sid = ice.write_iceberg(out, args.out)
+    else:
+        sid = ice.append_iceberg(out, args.out)
 
     print(json.dumps({
         "job": "curate",
@@ -148,8 +153,8 @@ def main() -> None:
         "after_quality": after_quality,
         "after_content_dedup": after_dedup,
         "rows_out": int(fp_row["n"]),
-        "snapshot_id": manifest["snapshot_id"],
-        "snapshot_rows_total": manifest["n_rows"],
+        "snapshot_id": sid,
+        "snapshot_rows_total": ice.record_count(args.out, sid),
         "fingerprint": int(fp_row["fp"]),
         "wall_s": round(time.monotonic() - t0, 2),
         "pages_per_sec": round(pages_in / (time.monotonic() - t0), 1),

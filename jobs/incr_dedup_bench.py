@@ -1,6 +1,6 @@
 """spark-submit entry point: chained incremental near-dup absorption
 at volume — round-4 verdict task 5's probe. Maintains the (doc_id,
-sig) signature table as a SNAPSHOT TABLE (sources/snapshots.py)
+sig) signature table as an ICEBERG TABLE (sources/iceberg.py)
 through ``--rounds`` successive deltas against the lsh_bench 1M-doc
 replica corpus, measuring per-delta absorption cost against the
 full-rebuild floor and asserting at volume what
@@ -23,8 +23,8 @@ Per round, the timed absorption is exactly what a rolling-crawl
 maintenance job would run: read the CURRENT signature snapshot →
 ``doc_dedupe.incremental_near_dup`` (delta never re-shingles the
 corpus; corpus side is a narrow scan of the signature table) →
-append the returned delta signatures back to the snapshot table
-(``snapshots.write_snapshot(mode="append")``) so round r+1 sees the
+append the returned delta signatures back to the table
+(``iceberg.append_iceberg``) so round r+1 sees the
 round-r docs through table state alone, never through recomputation.
 
 Prints one JSON line {build_s, rounds: [{docs, wall_s, n_pairs,
@@ -81,7 +81,7 @@ def main() -> None:
 
     from mergeaddressesandbuildings_spark.operators import doc_dedupe
     from mergeaddressesandbuildings_spark.session import get_spark
-    from mergeaddressesandbuildings_spark.sources import snapshots
+    from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
     spark = get_spark(master=args.master, app_name="incr-dedup-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -148,7 +148,7 @@ def main() -> None:
         t0 = time.monotonic()
         corpus_sigs = doc_dedupe.minhash_signatures(
             doc_dedupe.shingles(corpus, 2), hash="xxhash64")
-        snapshots.write_snapshot(corpus_sigs, table_dir, mode="append")
+        ice.write_iceberg(corpus_sigs, table_dir)
         out["build_s"] = round(time.monotonic() - t0, 2)
         out["corpus_docs"] = corpus.count()
 
@@ -157,21 +157,20 @@ def main() -> None:
         corpus_so_far = corpus
         for r in range(args.rounds):
             tr = time.monotonic()
-            sig_table = snapshots.read_snapshot(spark, table_dir)
+            sig_table = ice.read_iceberg(spark, table_dir)
             pairs_r, dsigs_r = doc_dedupe.incremental_near_dup(
                 deltas[r], corpus_so_far, sig_table,
                 n=2, threshold=args.threshold, hash="xxhash64")
             pairs_r = pairs_r.select("doc_a", "doc_b").persist()
             n_pairs_r = pairs_r.count()
-            man = snapshots.write_snapshot(dsigs_r, table_dir,
-                                           mode="append")
+            sid = ice.append_iceberg(dsigs_r, table_dir)
             wall_r = round(time.monotonic() - tr, 2)
             rrec = {
                 "round": r,
                 "docs": deltas[r].count(),
                 "wall_s": wall_r,
                 "n_pairs": n_pairs_r,
-                "sig_rows": int(man.get("n_rows", -1)),
+                "sig_rows": ice.record_count(table_dir, sid),
             }
             out["rounds"].append(rrec)
             # progress line per round so a later failure can't lose

@@ -17,6 +17,10 @@ merge state, recomputing only the affected-cell closure.
     # write the current outputs (assignments+tile fingerprint JSON)
     ... outputs --state /tmp/merge_state --out /tmp/incr_out
 
+    # between deltas: compact the state's merge-on-read deletes away
+    # and expire superseded snapshots
+    ... maintain --state /tmp/merge_state
+
 Each subcommand prints one JSON line. `delta` reports the recompute
 scope (affected addresses / total) and wall time — the number that
 shows absorption cost tracks the DELTA, not the corpus. `outputs`
@@ -150,9 +154,9 @@ def main() -> None:
                         else pg.existing_osm_df(spark, args.pages_count))
         m = inc.full_build(spark, pages, existing, args.state,
                            level=args.level or config.CELL_LEVEL)
-        out.update({"n_records": m["records"]["n_rows"],
-                    "n_addresses": m["addresses"]["n_rows"],
-                    "n_buildings": m["buildings"]["n_rows"]})
+        out.update({"n_records": m["records"],
+                    "n_addresses": m["addresses"],
+                    "n_buildings": m["buildings"]})
 
     elif args.cmd == "delta":
         if args.delta_path:
@@ -173,33 +177,9 @@ def main() -> None:
             out["rep_walls_s"] = walls
 
     elif args.cmd == "maintain":
-        # long-run state health: every delta commit leaves rewrite
-        # files behind and pins replaced files via old manifests —
-        # compaction packs the small files, expiry reclaims the disk
-        from mergeaddressesandbuildings_spark.sources import snapshots
-
-        per_table = {}
-        for tbl in inc._TABLES:
-            tdir = os.path.join(args.state, tbl)
-            if snapshots.current_snapshot_id(tdir) is None:
-                continue
-            cm = snapshots.compact_files(spark, tdir)
-            em = snapshots.expire_snapshots(tdir, keep_last=1)
-            # post-maintenance layout health: live file count and
-            # bytes are the early-warning signal for layout rot
-            # (encoding bloat / parallelism collapse — see
-            # BENCH/BASELINE.md round-3 part 6)
-            live = cm.get("files", [])
-            per_table[tbl] = {
-                "compacted_files": cm.get("n_compacted_files", 0),
-                "expired_snapshots": len(
-                    em.get("expired_snapshot_ids", [])),
-                "deleted_files": em.get("n_deleted_files", 0),
-                "live_files": len(live),
-                "live_bytes": sum(os.path.getsize(f) for f in live),
-                "cluster_by": cm.get("cluster_by"),
-            }
-        out["tables"] = per_table
+        # long-run state health: compaction materializes the deltas'
+        # equality deletes, expiry reclaims the superseded files
+        out["tables"] = inc.maintain(spark, args.state)
 
     else:  # outputs
         assignments, sets, tiles, tm = inc.current_outputs(spark,

@@ -6,8 +6,8 @@ checkpoints" — this is the re-RUN side of resumability).
 At 10^12 pages a crawl increment touches a vanishing fraction of
 urls; re-running the full pipeline to absorb it wastes O(corpus)
 extraction + spatial-join work. This plan keeps the expensive stages'
-results in snapshot-versioned tables (sources/snapshots.py) keyed so
-a url-level change set can be SPLICED in:
+results in Iceberg tables (sources/iceberg.py) keyed so a url-level
+change set can be SPLICED in:
 
     state tables (all under one state dir)
       records      extract_records output, keyed by url   [O(pages)]
@@ -16,11 +16,17 @@ a url-level change set can be SPLICED in:
                    keyed by url ('osm://existing' rows
                    are the static OSM state)              [O(elems)]
       pip_winners  §8.4(1) winners + the address CELL,
-                   keyed and range-clustered by cell      [O(elems)]
+                   keyed by cell                          [O(elems)]
       knn_winners  §8.4(2) winners, same layout           [O(elems)]
       ex_nodes     existing OSM address nodes (static)
       meta.json    the merge parameters the state was built with
                    (level, cutoff, …) — an increment MUST reuse them
+
+A splice is merge-on-read: one `merge_upsert` snapshot per table that
+adds an equality-delete file on the splice key plus the key's new
+rows, and rewrites no existing file — commit cost is O(delta), not
+O(state). Reads apply the accumulated deletes; `maintain` compacts
+them away and expires the superseded snapshots.
 
 Change propagation is bounded by the same invariant the spatial join
 already asserts (§8.5: kNN cutoff ≤ one cell width at ``level``), so
@@ -39,10 +45,8 @@ so the spatial join re-runs ONLY over (addresses in ring1) ×
 CELL: every winner that can change sits in a ring1 cell (sub
 addresses by construction; removed urls' addresses because their
 cells are in base ⊆ ring1), so "delete ring1 cells, insert the
-sub-run's winners" is exact — and since the winner tables are
-range-clustered by cell, the copy-on-write rewrite touches only the
-ring-intersecting files, not the table (an addr_id key would
-hash-scatter a spatially-local purge across EVERY file). Decisions
+sub-run's winners" is exact, and the equality delete is ring1 itself
+— a few hundred cells — whatever the winner count. Decisions
 CANNOT be spliced — §8.4's per-building vote
 (conflict/keep-node/merged) aggregates over ALL addresses assigned to
 a building, so one spliced winner can flip the decision of an
@@ -69,6 +73,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Iterator
 
 import numpy as np
@@ -84,7 +89,7 @@ from mergeaddressesandbuildings_spark.operators import (
     spatial_join as sj,
     tiling,
 )
-from mergeaddressesandbuildings_spark.sources import snapshots as snap
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 _TABLES = ("records", "addresses", "buildings",
            "pip_winners", "knn_winners", "ex_nodes")
@@ -187,8 +192,14 @@ def full_build(spark: SparkSession, pages: DataFrame,
                knn_cutoff_m: float = config.KNN_CUTOFF_M,
                broadcast_max: int = config.BROADCAST_BUILDINGS_MAX) -> dict:
     """Run the full pipeline once and persist the incremental state
-    tables. Returns {table: manifest} plus the run parameters."""
+    tables, replacing any state a previous build left in ``state_dir``
+    (only this engine's tables and meta.json are removed). Returns
+    {table: row count} plus the run parameters."""
     os.makedirs(state_dir, exist_ok=True)
+    for name in _TABLES:
+        shutil.rmtree(_t(state_dir, name), ignore_errors=True)
+    if os.path.exists(_meta_path(state_dir)):
+        os.remove(_meta_path(state_dir))
 
     # extraction is CPU-bound per row; fan a compact input out to the
     # session's parallelism first (plans/merge.py has the same prolog)
@@ -196,17 +207,18 @@ def full_build(spark: SparkSession, pages: DataFrame,
     if pages.rdd.getNumPartitions() < par:
         pages = pages.repartition(par * 2)
 
-    # state tables are written CLUSTERED BY their splice key: a changed
-    # key then hits O(1) data files, so replace_keys' copy-on-write
-    # rewrites a bounded file set instead of the whole table (the same
-    # reason Iceberg tables bucket by merge key)
+    # file layout: each table spread over 2× the session's parallelism
+    # in files, grouped by its splice key (url hash, or cell range for
+    # the winner tables), so every later scan runs at full parallelism
+    # and each file's manifest bounds on the key stay tight
     nfiles = par * 2
 
-    records = extract.extract_records(pages, level=level) \
-        .repartition(nfiles, "url")
-    m_rec = snap.write_snapshot(records, _t(state_dir, "records"),
-                                mode="overwrite", cluster_by=["url"])
-    records = snap.read_snapshot(spark, _t(state_dir, "records"))
+    def write(df: DataFrame, name: str) -> DataFrame:
+        ice.write_iceberg(df, _t(state_dir, name))
+        return ice.read_iceberg(spark, _t(state_dir, name))
+
+    records = write(extract.extract_records(pages, level=level)
+                    .repartition(nfiles, "url"), "records")
 
     addresses, new_buildings = extract.split_records(records)
     if existing_osm is not None:
@@ -220,39 +232,25 @@ def full_build(spark: SparkSession, pages: DataFrame,
             [], "addr_id long, lat double, lon double, "
                 "housenumber string, street string")
         buildings = new_buildings
-    snap.write_snapshot(ex_nodes, _t(state_dir, "ex_nodes"),
-                        mode="overwrite")
+    ice.write_iceberg(ex_nodes, _t(state_dir, "ex_nodes"))
 
-    m_addr = snap.write_snapshot(addresses.repartition(nfiles, "url"),
-                                 _t(state_dir, "addresses"),
-                                 mode="overwrite", cluster_by=["url"])
-    m_bld = snap.write_snapshot(buildings.repartition(nfiles, "url"),
-                                _t(state_dir, "buildings"),
-                                mode="overwrite", cluster_by=["url"])
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    addresses = write(addresses.repartition(nfiles, "url"), "addresses")
+    buildings = write(buildings.repartition(nfiles, "url"), "buildings")
 
     pip_w, knn_w = _winners(spark, addresses, buildings,
                             knn_cutoff_m, broadcast_max)
-    # RANGE-cluster the winner tables by cell: an increment's purge
-    # set is a set of spatially-local cells, so range clustering keeps
-    # the copy-on-write rewrite to the ring-intersecting files
-    m_pip = snap.write_snapshot(
-        pip_w.repartitionByRange(nfiles, "cell"),
-        _t(state_dir, "pip_winners"), mode="overwrite",
-        cluster_by=["cell"], cluster_kind="range")
-    m_knn = snap.write_snapshot(
-        knn_w.repartitionByRange(nfiles, "cell"),
-        _t(state_dir, "knn_winners"), mode="overwrite",
-        cluster_by=["cell"], cluster_kind="range")
+    ice.write_iceberg(pip_w.repartitionByRange(nfiles, "cell"),
+                      _t(state_dir, "pip_winners"))
+    ice.write_iceberg(knn_w.repartitionByRange(nfiles, "cell"),
+                      _t(state_dir, "knn_winners"))
     pip_w.unpersist()
 
     meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
             "broadcast_max": broadcast_max}
     with open(_meta_path(state_dir), "w") as f:
         json.dump(meta, f)
-    return {"records": m_rec, "addresses": m_addr, "buildings": m_bld,
-            "pip_winners": m_pip, "knn_winners": m_knn, **meta}
+    return {**{name: ice.record_count(_t(state_dir, name))
+               for name in _TABLES}, **meta}
 
 
 def apply_delta(spark: SparkSession, page_changes: DataFrame,
@@ -301,7 +299,7 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     _lap("extract_delta")
 
     records_tbl = _t(state_dir, "records")
-    old_changed = (snap.read_snapshot(spark, records_tbl)
+    old_changed = (ice.read_iceberg(spark, records_tbl)
                    .join(changed_urls, "url", "left_semi")
                    .persist())
     n_old_records = old_changed.count()
@@ -314,49 +312,41 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     ring1, ring2 = _closure_rings(base)
     _lap("closure_rings")
 
-    # splice the element tables by url (replace_keys: delete-then-
-    # insert). The three tables are independent — their commits run
-    # concurrently (Spark schedules the jobs side by side; the
-    # snapshot layer is single-writer PER TABLE, which threads here
+    # splice the element tables by url: each merge_upsert drops every
+    # row of a changed url (deleted urls included) and adds the url's
+    # new rows, as one snapshot. The three tables are independent —
+    # their commits run concurrently (Spark schedules the jobs side by
+    # side; commits are single-writer PER TABLE, which threads here
     # respect). NOTE: ex_ways must come from the PRE-splice buildings
-    # snapshot, so resolve the frozen file list before launching.
+    # snapshot, so plan its scan before launching.
     addr_delta, bld_delta = extract.split_records(new_records)
-    ex_nodes = snap.read_snapshot(spark, _t(state_dir, "ex_nodes"))
-    ex_ways = (snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
+    ex_ways = (ice.read_iceberg(spark, _t(state_dir, "buildings"))
                .filter(F.col("existing")))
-    addr_delta = dedupe.dedupe_addresses(addr_delta, ex_nodes)
-    bld_delta = dedupe.dedupe_buildings(bld_delta, ex_ways)
+    # each splice reads its rows twice (delete keys, then data)
+    addr_delta = dedupe.dedupe_addresses(addr_delta, ex_nodes).persist()
+    bld_delta = dedupe.dedupe_buildings(bld_delta, ex_ways).persist()
     from concurrent.futures import ThreadPoolExecutor
 
-    # inserts_covered: every insert row's url IS a changed url by
-    # construction (the inserts derive from the upsert half of the
-    # change set)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(snap.replace_keys, spark, records_tbl, ["url"],
-                        changed_urls, new_records,
-                        inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "addresses"), ["url"],
-                        changed_urls, addr_delta,
-                        inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "buildings"), ["url"],
-                        changed_urls, bld_delta,
-                        inserts_covered=True),
-        ]
+        futs = [pool.submit(ice.merge_upsert, spark, _t(state_dir, name),
+                            rows, ["url"], deletes=changed_urls)
+                for name, rows in (("records", new_records),
+                                   ("addresses", addr_delta),
+                                   ("buildings", bld_delta))]
         for f in futs:
             f.result()
     _lap("element_splices")
-    new_records.unpersist()
+    for df in (new_records, addr_delta, bld_delta):
+        df.unpersist()
 
     # recompute winners on the closure slice only
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
     n_addr_total = addresses.count()
 
     # widen the slices to the session's parallelism BEFORE caching:
-    # the semi-join inherits the snapshot scan's partitioning (ring1
+    # the semi-join inherits the table scan's partitioning (ring1
     # broadcasts), i.e. the table's FILE count — after maintenance
     # that can be far below the core count, and every map stage of the
     # winner recompute (the fine-cell explode and the pair-join's map
@@ -383,23 +373,17 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
                             meta["knn_cutoff_m"], meta["broadcast_max"])
 
     # splice winners BY CELL (module docstring): every winner that can
-    # change sits in a ring1 cell, so the purge key set is ring1
-    # itself — a few hundred rows — and the cell-range-clustered
-    # tables rewrite only their ring-intersecting files
+    # change sits in a ring1 cell (sub addresses are the ring1
+    # semi-join by construction), so the delete key set is ring1
+    # itself — a few hundred rows
     knn_w = knn_w.persist()
     knn_w.count()  # materialize before the concurrent splices race it
     _lap("winners")
-    # inserts_covered: every sub-run winner's cell ∈ ring1 (sub
-    # addresses are the ring1 semi-join by construction)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "pip_winners"), ["cell"],
-                        ring1, pip_w, inserts_covered=True),
-            pool.submit(snap.replace_keys, spark,
-                        _t(state_dir, "knn_winners"), ["cell"],
-                        ring1, knn_w, inserts_covered=True),
-        ]
+        futs = [pool.submit(ice.merge_upsert, spark, _t(state_dir, name),
+                            rows, ["cell"], deletes=ring1)
+                for name, rows in (("pip_winners", pip_w),
+                                   ("knn_winners", knn_w))]
         for f in futs:
             f.result()
     _lap("winner_splices")
@@ -432,13 +416,13 @@ def current_outputs(spark: SparkSession, state_dir: str,
     fingerprint-bearing flat output."""
     with open(_meta_path(state_dir)) as f:
         meta = json.load(f)
-    addresses = snap.read_snapshot(spark, _t(state_dir, "addresses"))
-    buildings = snap.read_snapshot(spark, _t(state_dir, "buildings"))
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
     # the stored winners carry their splice key (cell) — drop it
     # before assign, whose address join brings its own cell column
-    pip_w = snap.read_snapshot(spark, _t(state_dir, "pip_winners")) \
+    pip_w = ice.read_iceberg(spark, _t(state_dir, "pip_winners")) \
         .drop("cell")
-    knn_w = snap.read_snapshot(spark, _t(state_dir, "knn_winners")) \
+    knn_w = ice.read_iceberg(spark, _t(state_dir, "knn_winners")) \
         .drop("cell")
 
     assignments = dec.assign(addresses, pip_w, knn_w, buildings)
@@ -450,3 +434,29 @@ def current_outputs(spark: SparkSession, state_dir: str,
     tiles = tiling.assign_tiles(points, budget=budget,
                                 level=meta["level"], tm=tm)
     return assignments, sets, tiles, tm
+
+
+def maintain(spark: SparkSession, state_dir: str) -> dict:
+    """State maintenance between deltas: every splice leaves an
+    equality-delete file that each later read applies, and pins the
+    superseded rows' files through older snapshots. Tables carrying
+    delete files are compacted (deletes materialized into fresh data
+    files), then every table expires all but its current snapshot,
+    which reclaims the disk. Returns per-table counts plus the live
+    data files and bytes — the early-warning signal for small-file
+    drift."""
+    out = {}
+    for name in _TABLES:
+        tdir = _t(state_dir, name)
+        meta = ice.load_metadata(tdir)
+        _, deletes = ice.plan_scan(meta, ice.select_snapshot(meta))
+        if deletes:
+            ice.compact_table(spark, tdir)
+        expired = ice.expire_snapshots(tdir, keep_last=1)
+        meta = ice.load_metadata(tdir)
+        data, _ = ice.plan_scan(meta, ice.select_snapshot(meta))
+        out[name] = {"compacted": bool(deletes), **expired,
+                     "live_files": len(data),
+                     "live_bytes": sum(os.path.getsize(t.path)
+                                       for t in data)}
+    return out

@@ -3339,25 +3339,22 @@ def order_price_bands(spark, sf_dir):
     """,
 )
 def snapshot_time_travel(spark, sf_dir):
-    """Snapshot-table time travel (sources/snapshots.py): commit the
-    even documents as snapshot 1, the odd ones as snapshot 2, then
-    read the table AS OF snapshot 1 — the oracle is the even half,
-    so a hash match proves the manifest chain isolates snapshots
-    (the s2 data files exist on disk but must stay invisible).
-    Iceberg-spec shape: immutable data files + per-snapshot manifest
-    + atomically swapped current pointer; readers plan over the
-    frozen file list, never a directory listing."""
+    """Snapshot time travel on the Iceberg table layer
+    (sources/iceberg.py): commit the even documents as snapshot 1,
+    append the odd ones as snapshot 2, then read the table AS OF
+    snapshot 1 — the oracle is the even half, so a hash match proves
+    the manifest chain isolates snapshots (the s2 data files exist on
+    disk but must stay invisible). Readers plan over the snapshot's
+    frozen manifest list, never a directory listing."""
     import tempfile
 
-    from mergeaddressesandbuildings_spark.sources import snapshots as S
+    from mergeaddressesandbuildings_spark.sources import iceberg as I
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source",
-        F.col("n_chars").cast("long").alias("n_chars"))
+    docs = _ice_docs(spark, sf_dir)
     tdir = tempfile.mkdtemp(prefix="snap_tbl_")
-    S.write_snapshot(docs.filter(F.col("doc_id") % 2 == 0), tdir)
-    S.write_snapshot(docs.filter(F.col("doc_id") % 2 != 0), tdir)
-    return S.read_snapshot(spark, tdir, snapshot_id=1)
+    sid1 = I.write_iceberg(docs.filter(F.col("doc_id") % 2 == 0), tdir)
+    I.append_iceberg(docs.filter(F.col("doc_id") % 2 != 0), tdir)
+    return I.read_iceberg(spark, tdir, snapshot_id=sid1)
 
 
 @register(
@@ -3379,39 +3376,34 @@ def snapshot_time_travel(spark, sf_dir):
     """,
 )
 def snapshot_merge_upsert(spark, sf_dir):
-    """Iceberg-style MERGE INTO with file-level copy-on-write
-    (sources/snapshots.py merge_upsert): commit the corpus as two
-    appends (several data-file groups), then apply one change set —
-    updates (doc_id%10==0: n_chars+1000), deletes (%10==1), inserts
-    (%10==2 re-keyed +1e6) — and read the resulting snapshot. The
-    oracle recomputes the merged state relationally, so a hash match
-    proves matched-replace + delete + insert semantics end-to-end
-    through the manifest layer. Only data files CONTAINING a matched
-    key are rewritten; untouched files ride into the new manifest by
-    reference (asserted file-for-file in tests/test_snapshots.py)."""
+    """MERGE INTO on the Iceberg table layer (sources/iceberg.py
+    merge_upsert): commit the corpus as two appends (several data-file
+    groups), then apply one change set — updates (doc_id%10==0:
+    n_chars+1000), deletes (%10==1, passed as ``deletes=``), inserts
+    (%10==2 re-keyed +1e6) — as ONE merge-on-read snapshot, and read
+    the result. The oracle recomputes the merged state relationally,
+    so a hash match proves matched-replace + delete + insert semantics
+    end-to-end through the equality-delete sequence rule: the commit
+    rewrites no data file, and its own inserted rows survive its own
+    equality delete."""
     import tempfile
 
-    from mergeaddressesandbuildings_spark.sources import snapshots as S
+    from mergeaddressesandbuildings_spark.sources import iceberg as I
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source",
-        F.col("n_chars").cast("long").alias("n_chars"))
+    docs = _ice_docs(spark, sf_dir)
     tdir = tempfile.mkdtemp(prefix="snap_mrg_")
-    S.write_snapshot(docs.filter(F.col("doc_id") % 4 < 2), tdir)
-    S.write_snapshot(docs.filter(F.col("doc_id") % 4 >= 2), tdir)
+    I.write_iceberg(docs.filter(F.col("doc_id") % 4 < 2), tdir)
+    I.append_iceberg(docs.filter(F.col("doc_id") % 4 >= 2), tdir)
     m = F.col("doc_id") % 10
-    changes = (
+    updates = (
         docs.filter(m == 0)
         .withColumn("n_chars", F.col("n_chars") + 1000)
-        .withColumn("is_del", F.lit(False))
-        .unionByName(docs.filter(m == 1)
-                     .withColumn("is_del", F.lit(True)))
         .unionByName(docs.filter(m == 2)
-                     .withColumn("doc_id", F.col("doc_id") + 1000000)
-                     .withColumn("is_del", F.lit(False)))
+                     .withColumn("doc_id", F.col("doc_id") + 1000000))
     )
-    S.merge_upsert(changes, tdir, ["doc_id"], delete_col="is_del")
-    return S.read_snapshot(spark, tdir)
+    I.merge_upsert(spark, tdir, updates, ["doc_id"],
+                   deletes=docs.filter(m == 1).select("doc_id"))
+    return I.read_iceberg(spark, tdir)
 
 
 def _ice_docs(spark, sf_dir):

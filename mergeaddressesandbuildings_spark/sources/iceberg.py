@@ -3,14 +3,16 @@
 BASELINE.json's north_rule and input_hint put the production corpus in
 an *Iceberg table* of Common-Crawl-style pages. This sandbox has no
 `iceberg-spark-runtime` jars, no pyiceberg and no Avro library
-(SURVEY.md §9), so until round 5 the repo only *abstracted* the format
-(`sources/catalog.py`) and reimplemented its manifest/stats-pruning/
-optimistic-commit ideas in a parquet-native sibling
-(`sources/snapshots.py`). This module closes the remaining gap at the
-FORMAT level: it reads and writes real Iceberg v2 table metadata —
-`vN.metadata.json`, Avro manifest lists, Avro manifests, positional and
-equality delete files — using `sources/avroio.py` (spec-faithful pure
-Python) and plans scans from that metadata alone.
+(SURVEY.md §9), so this module is the repo's one table layer: it reads
+and writes real Iceberg v2 table metadata — `vN.metadata.json`, Avro
+manifest lists, Avro manifests, positional and equality delete files —
+using `sources/avroio.py` (spec-faithful pure Python) and plans scans
+from that metadata alone. Every versioned table in the repo goes
+through it: the pipeline's input tables (`sources/catalog.py`), the
+incremental merge state (`plans/incremental.py`: merge-on-read
+`merge_upsert` per delta, `compact_table` + `expire_snapshots` in
+maintenance), the curated corpus (`jobs/curate.py`: appends consumed
+exactly once through `read_changes`) and the registry's table queries.
 
 Everything follows the PUBLIC Iceberg Table Spec
 (https://iceberg.apache.org/spec/) — field ids, inheritance and delete
@@ -37,15 +39,33 @@ Scale notes (the 100 TB contract):
 - data files are never listed from the filesystem — only from
   manifests — so planning cost is O(metadata), not O(directory).
 
+Commit protocol: each commit writes its data, delete and manifest files
+under fresh names, then publishes `vN.metadata.json` by linking a fully
+written temp file into place (`os.link` — create-or-fail, so of two
+writers racing from one parent exactly one wins and the other gets a
+CommitConflict) and finally replaces `version-hint.text` through a temp
+file and `os.replace`. The hint is only a hint: readers take the
+highest `vN.metadata.json` reachable from it, so a crash between the
+two steps loses nothing and blocks no later writer. A filesystem with
+atomic link/replace (POSIX local FS, HDFS; not bare S3) is the
+correctness boundary — on an object store this maps onto a catalog's
+compare-and-swap.
+
 Supported surface (loud errors beyond it): format-version 2; identity
-partitioning (+ unpartitioned, primitive source columns only); parquet
-data files; avro codecs null/deflate; primitive column types long/int/
-double/float/string/boolean/binary/date/timestamptz plus nested
-struct/list/map compositions of them (each nested field gets its own
-spec field id; bounds are recorded for primitives only; evolution
-operates on top-level columns). Other transforms (bucket/truncate/
-days) are read as opaque partition values but cannot be pruned on and
-raise only if pruning on them is requested.
+partitioning (+ unpartitioned) on int/long/float/double/string/boolean
+source columns — the types whose hive directory values the writer
+parses back exactly (date, timestamptz, binary and nested sources are
+rejected at write); parquet data files; avro codecs null/deflate;
+primitive column types long/int/double/float/string/boolean/binary/
+date/timestamptz plus nested struct/list/map compositions of them (each
+nested field gets its own spec field id; bounds are recorded for
+primitives only; evolution operates on top-level columns). Other
+transforms (bucket/truncate/days) are read as opaque partition values
+but cannot be pruned on and raise only if pruning on them is requested.
+
+Data files are named in manifests by ABSOLUTE path (as Iceberg stores
+absolute URIs): a table directory copied with cp keeps reading the
+original's files, and expiring snapshots on the copy deletes them.
 """
 
 from __future__ import annotations
@@ -60,7 +80,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import avroio
-from .snapshots import _footer_rows, _footer_stats
 
 POS_DELETE_FIELD_PATH = 2147483546  # spec: reserved field id for file_path
 POS_DELETE_FIELD_POS = 2147483545   # spec: reserved field id for pos
@@ -324,20 +343,28 @@ def _meta_dir(table_dir: str) -> str:
 
 
 def _read_version_hint(table_dir: str) -> int:
-    hint = os.path.join(_meta_dir(table_dir), "version-hint.text")
-    if os.path.exists(hint):
-        with open(hint) as fh:
-            return int(fh.read().strip())
-    # spec fallback: highest vN.metadata.json present
-    best = 0
-    if os.path.isdir(_meta_dir(table_dir)):
-        for name in os.listdir(_meta_dir(table_dir)):
-            if name.endswith(".metadata.json") and name.startswith("v"):
-                try:
-                    best = max(best, int(name[1:].split(".")[0]))
-                except ValueError:
-                    pass
-    return best
+    """Current metadata version: the hint, advanced past every
+    ``vN.metadata.json`` that exists after it. A commit publishes vN
+    before it rewrites the hint, so a crash in between leaves the hint
+    one behind; an empty or unreadable hint (a foreign writer's
+    crash mid-rewrite) falls back to the highest version on disk."""
+    md = _meta_dir(table_dir)
+    try:
+        with open(os.path.join(md, "version-hint.text")) as fh:
+            v = int(fh.read().strip())
+    except (FileNotFoundError, ValueError):
+        v = 0
+        if os.path.isdir(md):
+            for name in os.listdir(md):
+                if name.startswith("v") and \
+                        name.endswith(".metadata.json"):
+                    try:
+                        v = max(v, int(name[1:].split(".")[0]))
+                    except ValueError:
+                        pass
+    while os.path.exists(os.path.join(md, f"v{v + 1}.metadata.json")):
+        v += 1
+    return v
 
 
 def load_metadata(table_dir: str) -> dict:
@@ -510,6 +537,17 @@ def plan_scan(meta: dict, snap: dict,
     bytes deserialize under each file's WRITE-time type, so it stays
     sound across int->long / float->double promotion too.
     """
+    _, manifests = avroio.read_container(_local(snap["manifest-list"]))
+    return _plan_manifests(meta, manifests, row_filter, read_schema)
+
+
+def _plan_manifests(meta: dict, manifests: list[dict],
+                    row_filter: list[tuple] | None,
+                    read_schema: dict | None,
+                    added_in: set[int] | None = None
+                    ) -> tuple[list[ScanTask], list[DeleteTask]]:
+    """plan_scan over a decoded manifest list. With ``added_in``, only
+    the entries ADDED by those snapshots are planned (read_changes)."""
     sch = read_schema if read_schema is not None \
         else _current_schema(meta)
     by_id = _field_by_id(sch)
@@ -521,17 +559,15 @@ def plan_scan(meta: dict, snap: dict,
                 raise IcebergError(f"filter column {col!r} not in schema")
             if op not in _OPS:
                 raise IcebergError(f"unsupported filter op {op!r}")
-    mlist_path = _local(snap["manifest-list"])
-    _, manifests = avroio.read_container(mlist_path)
     data: list[ScanTask] = []
     deletes: list[DeleteTask] = []
     for mf in manifests:
         spec = _spec_by_id(meta, mf.get("partition_spec_id", 0))
-        id_cols = {}  # partition struct field name -> (source col, type)
+        id_cols = {}  # partition struct field name -> source col
         for pf in spec.get("fields", []):
             src = by_id.get(pf["source-id"])
             if pf.get("transform") == "identity" and src is not None:
-                id_cols[pf["name"]] = (src["name"], src["type"])
+                id_cols[pf["name"]] = src["name"]
         mseq = mf.get("sequence_number", 0)
         wsid = snap_schemas.get(mf.get("added_snapshot_id"),
                                 sch["schema-id"])
@@ -543,23 +579,21 @@ def plan_scan(meta: dict, snap: dict,
         for e in entries:
             if e.get("status", 1) == 2:  # DELETED
                 continue
+            if added_in is not None and (
+                    e.get("status", 1) != 1  # not ADDED
+                    or (e.get("snapshot_id")
+                        or mf.get("added_snapshot_id")) not in added_in):
+                continue
             df_ = e["data_file"]
             # v2 inheritance: null sequence_number on an ADDED entry
             # inherits the manifest-list entry's sequence_number
             seq = e.get("sequence_number")
             if seq is None:
                 seq = mseq
-            part_raw = df_.get("partition") or {}
-            part = {}
-            for k, v in part_raw.items():
-                if k in id_cols:
-                    cname, ctype = id_cols[k]
-                    if ctype in ("timestamptz", "timestamp") \
-                            and v is not None:
-                        # avro long micros -> seconds handled at attach
-                        part[cname] = v
-                    else:
-                        part[cname] = v
+            # timestamptz values stay avro long micros until attach
+            part = {id_cols[k]: v
+                    for k, v in (df_.get("partition") or {}).items()
+                    if k in id_cols}
             content = df_.get("content", 0)
             path = _local(df_["file_path"])
             fmt = str(df_.get("file_format", "parquet")).lower()
@@ -652,7 +686,7 @@ def _common_hive_root(tasks: list[ScanTask], pnames: list[str],
                   if f["name"] in pnames}
     if len(part_types) != len(pnames):
         return None
-    if any(t in ("timestamptz", "timestamp", "binary")
+    if any(t in ("date", "timestamptz", "timestamp", "binary")
            for t in part_types.values()):
         return None  # dir encoding of these is not round-trip-safe
     root = None
@@ -881,6 +915,62 @@ def read_iceberg(spark: SparkSession, table_dir: str,
     return out.select(*cols).to(schema)
 
 
+def read_changes(spark: SparkSession, table_dir: str,
+                 from_id: int, to_id: int) -> DataFrame:
+    """Rows ADDED by the snapshots in (from_id, to_id] — exactly-once
+    incremental consumption of an append-only chain. ``from_id`` must
+    be ``to_id`` or one of its ancestors; the rows are the data files
+    whose manifest entries were added by a snapshot of that range,
+    projected under ``to_id``'s schema. Raises IcebergError if any
+    snapshot in the range is not an ``append`` (its changes are not
+    expressible as added files)."""
+    meta = load_metadata(table_dir)
+    to_snap = select_snapshot(meta, to_id)
+    by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    in_range: set[int] = set()
+    cur = to_id
+    while cur != from_id:
+        s = by_id.get(cur)
+        if s is None:
+            raise IcebergError(
+                f"snapshot {from_id} is not a retained ancestor of "
+                f"snapshot {to_id}")
+        op = s["summary"]["operation"]
+        if op != "append":
+            raise IcebergError(
+                f"snapshot {cur} is {op!r}: changes are only defined "
+                "over append-only ranges")
+        in_range.add(cur)
+        cur = s.get("parent-snapshot-id")
+    read_sch = _schema_for_id(
+        meta, to_snap.get("schema-id", meta["current-schema-id"]))
+    schema = spark_schema(meta, read_sch)
+    _, manifests = avroio.read_container(_local(to_snap["manifest-list"]))
+    data, _ = _plan_manifests(meta, manifests, None, read_sch,
+                              added_in=in_range)
+    if not data:
+        return spark.createDataFrame([], schema)
+    return (_project_tasks(spark, meta, read_sch, data, need_seq=False)
+            .select(*schema.fieldNames()).to(schema))
+
+
+def record_count(table_dir: str, snapshot_id: int | None = None) -> int:
+    """Rows in a snapshot (default: current) from the manifests'
+    ``record_count`` alone — no Spark job. Raises IcebergError when
+    the snapshot carries delete files, whose effect only a scan can
+    tell."""
+    meta = load_metadata(table_dir)
+    snap = select_snapshot(meta, snapshot_id)
+    if snap is None:
+        return 0
+    data, deletes = plan_scan(meta, snap)
+    if deletes or any(t.record_count < 0 for t in data):
+        raise IcebergError(
+            f"{table_dir}: snapshot {snap['snapshot-id']} has delete "
+            "files or uncounted data files — count it with a scan")
+    return sum(t.record_count for t in data)
+
+
 def _by_seq(tasks: list[DeleteTask]) -> dict[int, list[DeleteTask]]:
     out: dict[int, list[DeleteTask]] = {}
     for t in tasks:
@@ -977,15 +1067,73 @@ def _hive_partition(path: str, root: str,
             continue
         if v == "__HIVE_DEFAULT_PARTITION__":
             vals[k] = None
-        elif part_types[k] in ("int", "long", "date"):
+        elif part_types[k] in ("int", "long"):
             vals[k] = int(v)
-        elif part_types[k] == "double":
+        elif part_types[k] in ("double", "float"):
             vals[k] = float(v)
         elif part_types[k] == "boolean":
             vals[k] = v == "true"
         else:
             vals[k] = v
     return vals
+
+
+_STAT_STR_CAP = 64  # string bounds truncated Iceberg-style
+
+
+def _footer_rows(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def _trunc_lower(v, cap: int = _STAT_STR_CAP):
+    """Lower bound, possibly truncated: a prefix of the true min is
+    still <= every value in the file."""
+    return v[:cap] if isinstance(v, str) and len(v) > cap else v
+
+
+def _trunc_upper(v, cap: int = _STAT_STR_CAP):
+    """Upper bound, possibly truncated: ``prefix + U+10FFFF`` is >=
+    every string sharing that prefix (Iceberg's truncated upper
+    bound)."""
+    if isinstance(v, str) and len(v) > cap:
+        return v[:cap] + chr(0x10FFFF)
+    return v
+
+
+def _footer_stats(path: str) -> dict:
+    """Per-column [min, max] from the parquet footer (driver-side
+    metadata read, no Spark job — where Iceberg manifests get their
+    column bounds). Only JSON-stable primitive types (int/float/str/
+    bool) and only top-level columns; a column missing stats in ANY
+    row group records no bounds (pruning then treats the file as an
+    always-candidate — conservative)."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    bounds: dict[str, list] = {}
+    dropped: set[str] = set()
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            name = col.path_in_schema
+            if "." in name or name in dropped:
+                continue  # nested leaf — not a top-level column
+            st = col.statistics
+            if (st is None or not st.has_min_max
+                    or not isinstance(st.min, (int, float, str, bool))):
+                dropped.add(name)
+                bounds.pop(name, None)
+                continue
+            mn, mx = _trunc_lower(st.min), _trunc_upper(st.max)
+            if name in bounds:
+                b = bounds[name]
+                b[0], b[1] = min(b[0], mn), max(b[1], mx)
+            else:
+                bounds[name] = [mn, mx]
+    return bounds
 
 
 def _data_file_entry(path: str, partition: dict, schema: dict,
@@ -1023,7 +1171,10 @@ def _write_manifest(table_dir: str, sid: int, seq: int,
                     schema: dict, tag: str) -> dict:
     schema_avro = _manifest_schema(partition_fields)
     os.makedirs(_meta_dir(table_dir), exist_ok=True)
-    path = os.path.join(_meta_dir(table_dir), f"m-{sid}-{tag}.avro")
+    # attempt-unique like the data roots: a writer that loses the
+    # metadata race must not overwrite the winner's manifests
+    path = os.path.join(_meta_dir(table_dir),
+                        f"m-{sid}-{tag}-{_attempt_id()}.avro")
     for e in entries:  # delete files carry an all-null partition struct
         for p in partition_fields:
             e["partition"].setdefault(p["name"], None)
@@ -1084,8 +1235,7 @@ def _commit_snapshot(table_dir: str, manifest_entries: list[dict],
         sid, seq, snaps, slog, parent_id = 1, 1, [], [], None
         base_v = 0
 
-    mlist = os.path.join(
-        md, f"snap-{sid}-1-{_table_uuid(table_dir)[:8]}.avro")
+    mlist = os.path.join(md, f"snap-{sid}-{_attempt_id()}.avro")
     avroio.write_container(mlist, _manifest_list_schema(),
                            manifest_entries)
     now_ms = int(time.time() * 1000)
@@ -1159,10 +1309,19 @@ def _partition_fields(schema: dict, partition_by: list[str]) -> list:
     for i, col in enumerate(partition_by):
         if col not in by_name:
             raise IcebergError(f"partition column {col!r} not in schema")
-        if not isinstance(by_name[col]["type"], str):
+        ice_t = by_name[col]["type"]
+        if not isinstance(ice_t, str):
             raise IcebergError(
                 f"partition column {col!r} has a nested type — "
                 "identity partitioning needs a primitive source")
+        if ice_t in ("date", "timestamptz", "timestamp", "binary"):
+            # _hive_partition cannot parse these directory encodings
+            # back into the manifest's partition value
+            raise IcebergError(
+                f"partition column {col!r} has type {ice_t}, which this "
+                "writer cannot round-trip through a hive directory "
+                "value — partition on int/long/float/double/string/"
+                "boolean")
         out.append({"name": col, "source-id": by_name[col]["id"],
                     "field-id": 1000 + i,
                     "ice_type": by_name[col]["type"]})
@@ -1171,10 +1330,9 @@ def _partition_fields(schema: dict, partition_by: list[str]) -> list:
 
 def write_iceberg(df: DataFrame, table_dir: str,
                   partition_by: list[str] | None = None) -> int:
-    """Create an Iceberg v2 table from ``df`` (overwrites any existing
-    table dir state by starting at v1). Returns the snapshot id."""
-    if os.path.exists(os.path.join(_meta_dir(table_dir),
-                                   "version-hint.text")):
+    """Create an Iceberg v2 table from ``df``; refuses a directory
+    that already holds one. Returns the snapshot id."""
+    if _read_version_hint(table_dir) > 0:
         raise IcebergError(
             f"{table_dir} already an iceberg table — use append_iceberg")
     return _append(df, table_dir, partition_by=partition_by,
@@ -1564,7 +1722,9 @@ def _write_metadata_version(table_dir: str, meta: dict,
     ``expected_from + 1`` (the version the writer's state was loaded
     from), so a writer racing on the same parent — or on a STALE one —
     gets a loud CommitConflict (spec: atomic swap of the metadata
-    pointer), never a lost update."""
+    pointer), never a lost update. vN is written in full under a temp
+    name and linked into place, so no reader ever sees a partial vN;
+    the hint follows through ``_write_version_hint``."""
     if expected_from is None:
         expected_from = meta.get("_loaded-version",
                                  _read_version_hint(table_dir))
@@ -1573,15 +1733,26 @@ def _write_metadata_version(table_dir: str, meta: dict,
     v = expected_from + 1
     md = _meta_dir(table_dir)
     path = os.path.join(md, f"v{v}.metadata.json")
+    tmp = os.path.join(md, f".v{v}-{_attempt_id()}.tmp")
     try:
-        with open(path, "x") as fh:
+        with open(tmp, "w") as fh:
             json.dump(meta, fh, indent=1)
+        os.link(tmp, path)
     except FileExistsError:
         raise IcebergError(
             f"CommitConflict: v{v} was committed concurrently — "
             "reload table metadata and retry") from None
-    with open(os.path.join(md, "version-hint.text"), "w") as fh:
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    _write_version_hint(md, v)
+
+
+def _write_version_hint(md: str, v: int) -> None:
+    tmp = os.path.join(md, f".version-hint-{_attempt_id()}.tmp")
+    with open(tmp, "w") as fh:
         fh.write(str(v))
+    os.replace(tmp, os.path.join(md, "version-hint.text"))
 
 
 def expire_snapshots(table_dir: str, keep_last: int | None = None,
@@ -1704,24 +1875,39 @@ def remove_orphan_files(table_dir: str,
 
 
 def merge_upsert(spark: SparkSession, table_dir: str,
-                 updates: DataFrame, keys: list[str]) -> int:
+                 updates: DataFrame, keys: list[str],
+                 deletes: DataFrame | None = None) -> int:
     """Row-level MERGE (upsert) as ONE atomic snapshot: an equality
-    delete on ``keys`` for the incoming rows plus the appended rows,
-    committed together (operation `overwrite`). Existing rows whose
-    keys match an update are superseded; unmatched incoming rows are
-    inserts. Both manifests share the new sequence number, so per the
-    spec's `data_seq < delete_seq` rule the delete erases only PRIOR
-    file generations — the rows appended by this same commit survive.
-    Merge-on-read: no existing data file is rewritten; a later
-    compact_table materializes. This is the rolling-crawl upsert shape
-    (latest capture of each url wins) at 100 TB: commit cost is
-    O(delta), never O(table)."""
+    delete on ``keys`` plus the appended ``updates`` rows, committed
+    together (operation `overwrite`). The delete set is the distinct
+    keys of ``updates`` and of ``deletes`` (keys to remove with no
+    replacement), so every existing row whose key appears in either is
+    superseded — all rows of a key, however many there are — and the
+    updates land as that key's new rows (many per key allowed, none
+    for a pure delete). Both manifests share the new sequence number,
+    so per the spec's `data_seq < delete_seq` rule the delete erases
+    only PRIOR file generations — the rows appended by this same
+    commit survive. Merge-on-read: no existing data file is rewritten;
+    a later compact_table materializes. This is the rolling-crawl
+    upsert shape (latest capture of each url wins) at 100 TB: commit
+    cost is O(delta), never O(table).
+
+    ``updates`` must carry exactly the table's columns and ``deletes``
+    exactly ``keys``; a mismatch raises IcebergError."""
     meta = load_metadata(table_dir)
     schema = _current_schema(meta)
     by_name = _field_by_name(schema)
     for k in keys:
         if k not in by_name:
             raise IcebergError(f"merge key {k!r} not in schema")
+    if set(updates.columns) != set(by_name):
+        raise IcebergError(
+            f"updates columns {sorted(updates.columns)} != table "
+            f"columns {sorted(by_name)}")
+    if deletes is not None and set(deletes.columns) != set(keys):
+        raise IcebergError(
+            f"deletes columns {sorted(deletes.columns)} != merge keys "
+            f"{sorted(keys)}")
     spec = _spec_by_id(meta, meta["default-spec-id"])
     by_id = _field_by_id(schema)
     partition_by = [by_id[f["source-id"]]["name"]
@@ -1730,6 +1916,11 @@ def merge_upsert(spark: SparkSession, table_dir: str,
     updates = updates.select(*[
         F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
         .alias(f["name"]) for f in schema["fields"]])
+    purge = updates.select(*keys)
+    if deletes is not None:
+        purge = purge.unionByName(deletes.select(*[
+            F.col(k).cast(_ice_type_to_spark(by_name[k]["type"]))
+            .alias(k) for k in keys]))
 
     sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
     seq_next = meta["last-sequence-number"] + 1
@@ -1737,7 +1928,7 @@ def merge_upsert(spark: SparkSession, table_dir: str,
 
     dels_root = os.path.join(table_dir, "data",
                              f"upsert-del-{sid_next}-{att}")
-    (updates.select(*keys).distinct().coalesce(1)
+    (purge.distinct().coalesce(1)
      .write.mode("errorifexists").parquet(dels_root))
     eq_ids = [by_name[k]["id"] for k in keys]
     del_entries = [_data_file_entry(p, {}, schema, content=2,
@@ -1745,7 +1936,7 @@ def merge_upsert(spark: SparkSession, table_dir: str,
                    for p in _list_parquet(dels_root)]
     del_manifest = _write_manifest(table_dir, sid_next, seq_next,
                                    del_entries, pfields, schema,
-                                   f"upsert-del-{att}")
+                                   "upsert-del")
 
     data_root = os.path.join(table_dir, "data",
                              f"upsert-{sid_next}-{att}")
@@ -1760,7 +1951,7 @@ def merge_upsert(spark: SparkSession, table_dir: str,
         for p in _list_parquet(data_root)]
     data_manifest = _write_manifest(table_dir, sid_next, seq_next,
                                     data_entries, pfields, schema,
-                                    f"upsert-data-{att}")
+                                    "upsert-data")
     return _commit_snapshot(
         table_dir,
         _existing_manifests(meta) + [del_manifest, data_manifest],

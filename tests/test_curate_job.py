@@ -38,8 +38,10 @@ def test_curate_job_end_to_end(tmp_path, spark):
     assert m1["after_url_dedup"] < m1["pages_in"]
     # two commits -> chain of 2; changes-read sees exactly run 2's rows
     assert (m1["snapshot_id"], m2["snapshot_id"]) == (1, 2)
-    from mergeaddressesandbuildings_spark.sources import snapshots as S
+    from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
-    assert S.current_snapshot_id(out) == 2
-    assert S.read_changes(spark, out, 1, 2).count() == m2["rows_out"]
-    assert S.read_snapshot(spark, out, 1).count() == m1["rows_out"]
+    assert ice.snapshot_ids(out) == [1, 2]
+    assert m2["snapshot_rows_total"] == m1["rows_out"] + m2["rows_out"]
+    assert ice.read_changes(spark, out, 1, 2).count() == m2["rows_out"]
+    assert ice.read_iceberg(spark, out, snapshot_id=1).count() == \
+        m1["rows_out"]

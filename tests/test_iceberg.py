@@ -753,12 +753,15 @@ def test_stale_parent_commit_conflicts_not_lost_update(spark, tmp_path):
     ice.write_iceberg(df, t)
     stale = ice.load_metadata(t)           # writer B's view (v1)
     ice.append_iceberg(df, t)              # writer A commits v2
+    b_rows = spark.range(100, 110).selectExpr("id as k")
     with pytest.raises(ice.IcebergError, match="CommitConflict"):
-        ice._append(df, t, partition_by=None, parent=stale)
-    # A's snapshot survived; the loser changed nothing
+        ice._append(b_rows, t, partition_by=None, parent=stale)
+    # A's snapshot survived; the loser changed nothing — not even the
+    # manifest list or manifest A's snapshot names
     meta = ice.load_metadata(t)
     assert len(meta["snapshots"]) == 2
-    assert ice.read_iceberg(spark, t).count() == 20
+    assert sorted(r.k for r in ice.read_iceberg(spark, t).collect()) == \
+        sorted(list(range(10)) * 2)
 
 
 def test_metadata_version_is_created_exclusively(spark, tmp_path):
@@ -843,3 +846,141 @@ def test_merge_upsert_single_atomic_snapshot(spark, tmp_path):
 
     with pytest.raises(ice.IcebergError, match="not in schema"):
         ice.merge_upsert(spark, t, updates, keys=["nope"])
+
+
+# ---------------------------------------------------------------------
+# multi-row-key MERGE (merge_upsert deletes=), changes-reads
+# ---------------------------------------------------------------------
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k string, v long")
+
+
+def test_merge_upsert_deletes_multi_row_keys(spark, tmp_path):
+    """A key owns ALL of its rows: an update replaces however many rows
+    the key had with however many it has now, ``deletes`` drops keys to
+    zero rows, and update + insert + delete land as ONE snapshot whose
+    own appended rows survive its own equality delete."""
+    t = str(tmp_path / "t")
+    ice.write_iceberg(_kv(spark, [("a", 1), ("a", 2), ("a", 3),
+                                  ("b", 4), ("b", 5), ("c", 6)]), t)
+    n_snaps = len(ice.load_metadata(t)["snapshots"])
+    sid = ice.merge_upsert(
+        spark, t,
+        _kv(spark, [("a", 10), ("a", 11),    # 3 rows -> 2 (update)
+                    ("d", 12)]),             # new key (insert)
+        ["k"], deletes=_kv(spark, [("b", 0)]).select("k"))  # drop-to-zero
+    meta = ice.load_metadata(t)
+    assert len(meta["snapshots"]) == n_snaps + 1
+    assert meta["snapshots"][-1]["summary"]["operation"] == "overwrite"
+    assert _rows(ice.read_iceberg(spark, t)) == \
+        [("a", 10), ("a", 11), ("c", 6), ("d", 12)]
+    # the delete file is the distinct union of both key sets
+    data, deletes = ice.plan_scan(meta, ice.select_snapshot(meta))
+    assert [d.record_count for d in deletes] == [3]  # a, b, d
+    # a delete-only key absent from the table is a no-op; a second
+    # commit supersedes the first one's rows (chained deltas)
+    ice.merge_upsert(spark, t, _kv(spark, [("c", 7)]), ["k"],
+                     deletes=_kv(spark, [("a", 0), ("zz", 0)]).select("k"))
+    assert _rows(ice.read_iceberg(spark, t)) == [("c", 7), ("d", 12)]
+    assert _rows(ice.read_iceberg(spark, t, snapshot_id=sid)) == \
+        [("a", 10), ("a", 11), ("c", 6), ("d", 12)]
+
+
+def test_merge_upsert_column_guards(spark, tmp_path):
+    t = str(tmp_path / "t")
+    ice.write_iceberg(_kv(spark, [("a", 1)]), t)
+    extra = spark.createDataFrame([("a", 2, 9)], "k string, v long, x int")
+    with pytest.raises(ice.IcebergError, match="updates columns"):
+        ice.merge_upsert(spark, t, extra, ["k"])
+    with pytest.raises(ice.IcebergError, match="updates columns"):
+        ice.merge_upsert(spark, t, _kv(spark, [("a", 2)]).select("k"),
+                         ["k"])
+    with pytest.raises(ice.IcebergError, match="deletes columns"):
+        ice.merge_upsert(spark, t, _kv(spark, [("a", 2)]), ["k"],
+                         deletes=_kv(spark, [("a", 0)]))
+    # nothing was committed by the rejected calls
+    assert len(ice.load_metadata(t)["snapshots"]) == 1
+
+
+def test_read_changes_append_ranges(spark, tmp_path):
+    t = str(tmp_path / "t")
+    s1 = ice.write_iceberg(_kv(spark, [("a", 1)]), t)
+    s2 = ice.append_iceberg(_kv(spark, [("b", 2), ("c", 3)]), t)
+    s3 = ice.append_iceberg(_kv(spark, [("d", 4)]), t)
+    assert _rows(ice.read_changes(spark, t, s1, s3)) == \
+        [("b", 2), ("c", 3), ("d", 4)]
+    assert _rows(ice.read_changes(spark, t, s2, s3)) == [("d", 4)]
+    empty = ice.read_changes(spark, t, s2, s2)
+    assert empty.count() == 0 and empty.columns == ["k", "v"]
+    with pytest.raises(ice.IcebergError, match="ancestor"):
+        ice.read_changes(spark, t, s3, s1)
+
+
+def test_read_changes_rejects_non_append(spark, tmp_path):
+    t = str(tmp_path / "t")
+    s1 = ice.write_iceberg(_kv(spark, [("a", 1)]), t)
+    s2 = ice.merge_upsert(spark, t, _kv(spark, [("a", 2)]), ["k"])
+    s3 = ice.append_iceberg(_kv(spark, [("b", 3)]), t)
+    with pytest.raises(ice.IcebergError, match="'overwrite'"):
+        ice.read_changes(spark, t, s1, s3)
+    # a range past the overwrite is append-only again
+    assert _rows(ice.read_changes(spark, t, s2, s3)) == [("b", 3)]
+
+
+# ---------------------------------------------------------------------
+# crash windows of the metadata publish
+# ---------------------------------------------------------------------
+
+def test_crash_between_metadata_and_hint_recovers(spark, tmp_path,
+                                                  monkeypatch):
+    """A commit that dies after vN.metadata.json is linked into place
+    but before the hint moves is committed: the next reader sees it
+    and the next writer builds on it instead of conflicting forever."""
+    t = str(tmp_path / "t")
+    ice.write_iceberg(_kv(spark, [("a", 1)]), t)
+
+    def crash(md, v):
+        raise KeyboardInterrupt("crash before the hint")
+
+    monkeypatch.setattr(ice, "_write_version_hint", crash)
+    with pytest.raises(KeyboardInterrupt):
+        ice.append_iceberg(_kv(spark, [("b", 2)]), t)
+    monkeypatch.undo()
+    md = os.path.join(t, "metadata")
+    with open(os.path.join(md, "version-hint.text")) as fh:
+        assert fh.read().strip() == "1"  # the hint is one behind
+    assert not [n for n in os.listdir(md) if n.endswith(".tmp")]
+    assert _rows(ice.read_iceberg(spark, t)) == [("a", 1), ("b", 2)]
+    ice.append_iceberg(_kv(spark, [("c", 3)]), t)
+    assert _rows(ice.read_iceberg(spark, t)) == \
+        [("a", 1), ("b", 2), ("c", 3)]
+    with open(os.path.join(md, "version-hint.text")) as fh:
+        assert fh.read().strip() == "3"
+
+
+def test_empty_version_hint_recovers(spark, tmp_path):
+    """A hint truncated by a crash mid-rewrite (the in-place writers'
+    failure) falls back to the highest metadata version on disk."""
+    t = str(tmp_path / "t")
+    ice.write_iceberg(_kv(spark, [("a", 1)]), t)
+    ice.append_iceberg(_kv(spark, [("b", 2)]), t)
+    hint = os.path.join(t, "metadata", "version-hint.text")
+    open(hint, "w").close()
+    assert _rows(ice.read_iceberg(spark, t)) == [("a", 1), ("b", 2)]
+    ice.append_iceberg(_kv(spark, [("c", 3)]), t)
+    assert ice.snapshot_ids(t) == [1, 2, 3]
+    with open(hint) as fh:
+        assert fh.read().strip() == "3"
+
+
+@pytest.mark.parametrize("value", [
+    "date'2020-01-01'", "timestamp'2020-01-01 05:06:07'",
+], ids=["date", "timestamp"])
+def test_unroundtrippable_partition_source_is_loud(spark, tmp_path,
+                                                   value):
+    df = spark.sql(f"select 1L as k, {value} as d")
+    t = str(tmp_path / "t")
+    with pytest.raises(ice.IcebergError, match="cannot round-trip"):
+        ice.write_iceberg(df, t, partition_by=["d"])
+    assert not os.path.exists(os.path.join(t, "metadata"))

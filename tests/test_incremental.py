@@ -1,8 +1,9 @@
 """Incremental merge (plans/incremental.py): splicing a url-keyed page
-delta into snapshot state must be EXACTLY equivalent to a full rebuild
+delta into Iceberg state must be EXACTLY equivalent to a full rebuild
 over the post-delta corpus — same assignment fingerprint, same output
 sets, same tile membership — while recomputing only the affected-cell
-closure (asserted: the sub-run touches a strict subset of addresses).
+closure (asserted: the sub-run touches a strict subset of addresses),
+committing O(delta) per splice, and surviving maintenance.
 """
 
 import os
@@ -15,7 +16,7 @@ from mergeaddressesandbuildings_spark import config
 from mergeaddressesandbuildings_spark.functions import cells_sql
 from mergeaddressesandbuildings_spark.plans import incremental as inc
 from mergeaddressesandbuildings_spark.sources import pages as pg
-from mergeaddressesandbuildings_spark.sources import snapshots as snap
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 N_PAGES = 140
 # level 15 (~1.2 km × 600 m cells) instead of the default 12 (~10 km):
@@ -144,27 +145,21 @@ def test_incremental_matches_run_merge(spark, state):
 def test_deleted_url_rows_are_gone(spark, state):
     state_dir, _, _, _ = state
     for tbl in ("records", "addresses", "buildings"):
-        df = snap.read_snapshot(spark, os.path.join(state_dir, tbl))
+        df = ice.read_iceberg(spark, os.path.join(state_dir, tbl))
         gone = df.filter(F.col("url").isin([_url(i) for i in DELETED]))
         assert gone.count() == 0, tbl
 
 
 def test_second_delta_stays_exact(spark, state, tmp_path):
-    """Chained absorption: a SECOND delta applied to already-spliced
-    state (whose files now mix clustered originals with rewrite
-    commits) must still match a from-scratch rebuild exactly."""
-    state_dir, _, existing, root = state
-    import shutil
-
+    """Chained absorption: a SECOND delta applied on top of the first
+    one's merge-on-read deletes must still match a from-scratch
+    rebuild exactly, and so must the state after maintenance, which
+    compacts every delete file away."""
+    _, _, existing, _ = state
     chain_dir = os.path.join(str(tmp_path), "state_chain")
-    shutil.copytree(state_dir, chain_dir)
-    # a cp'd snapshot table still references the ORIGINAL's data files
-    # (snapshots.py RELOCATION WARNING) — repoint the copy at its own
-    # tree so this test models the supported relocation pattern
-    for tbl in inc._TABLES:
-        tdir = os.path.join(chain_dir, tbl)
-        if snap.current_snapshot_id(tdir) is not None:
-            assert snap.relocate(tdir, state_dir, chain_dir) > 0
+    inc.full_build(spark, pg.pages_df(spark, N_PAGES), existing,
+                   chain_dir, level=LEVEL)
+    inc.apply_delta(spark, spark.createDataFrame(_delta_pdf()), chain_dir)
 
     add2 = pg.gen_pages_pdf(range(N_PAGES + 50, N_PAGES + 60))
     add2["deleted"] = False
@@ -178,6 +173,7 @@ def test_second_delta_stays_exact(spark, state, tmp_path):
     inc.apply_delta(spark, spark.createDataFrame(delta2), chain_dir)
     a_inc, _, _, tm_inc = inc.current_outputs(spark, chain_dir)
     fp_inc, n_inc = _fingerprint(a_inc, tm_inc)
+    a_inc.unpersist()
 
     # v3 corpus = v2 minus the two newly deleted urls plus the ten new
     v2 = _pages_v2_pdf()
@@ -189,10 +185,22 @@ def test_second_delta_stays_exact(spark, state, tmp_path):
                    level=LEVEL)
     a_full, _, _, tm_full = inc.current_outputs(spark, full_dir)
     fp_full, n_full = _fingerprint(a_full, tm_full)
-
-    assert (fp_inc, n_inc) == (fp_full, n_full)
-    a_inc.unpersist()
     a_full.unpersist()
+    assert (fp_inc, n_inc) == (fp_full, n_full)
+
+    report = inc.maintain(spark, chain_dir)
+    assert set(report) == set(inc._TABLES)
+    assert report["records"]["compacted"]
+    assert not report["ex_nodes"]["compacted"]
+    for tbl in inc._TABLES:
+        meta = ice.load_metadata(os.path.join(chain_dir, tbl))
+        assert len(meta["snapshots"]) == 1, tbl
+        data, deletes = ice.plan_scan(meta, ice.select_snapshot(meta))
+        assert deletes == [], tbl
+        assert report[tbl]["live_files"] == len(data)
+    a_m, _, _, tm_m = inc.current_outputs(spark, chain_dir)
+    assert _fingerprint(a_m, tm_m) == (fp_full, n_full)
+    a_m.unpersist()
 
 
 def test_splice_plan_shape(spark, state):
@@ -208,8 +216,8 @@ def test_splice_plan_shape(spark, state):
     assert "Scan ExistingRDD" in plan or "LocalTableScan" in plan
     assert "Exchange" not in plan
 
-    addresses = snap.read_snapshot(spark,
-                                   os.path.join(state_dir, "addresses"))
+    addresses = ice.read_iceberg(spark,
+                                 os.path.join(state_dir, "addresses"))
     semi = addresses.join(local, "cell", "left_semi")
     semi.collect()  # run THIS query execution so AQE finalizes it
     splan = semi._jdf.queryExecution().executedPlan().toString()
@@ -233,12 +241,15 @@ def test_localize_cap_falls_back(spark):
 
 
 def test_records_table_commit_is_file_level(state):
-    """The records splice must be copy-on-write: the new snapshot
-    keeps at least one untouched v1 data file by reference."""
+    """The records splice is O(delta): one merge-on-read snapshot that
+    carries every full_build data file by reference and adds exactly
+    one equality-delete file (on url) next to the delta's rows."""
     state_dir, _, _, _ = state
-    log = snap.snapshot_log(os.path.join(state_dir, "records"))
-    assert [e["operation"] for e in log] == ["overwrite", "replace"]
-    cur = snap.current_snapshot_id(os.path.join(state_dir, "records"))
-    m = snap._load_manifest(os.path.join(state_dir, "records"), cur)
-    assert m["n_kept_files"] >= 1
-    assert m["n_rewritten_files"] >= 1
+    meta = ice.load_metadata(os.path.join(state_dir, "records"))
+    built, spliced = meta["snapshots"]
+    assert [s["summary"]["operation"] for s in (built, spliced)] == \
+        ["append", "overwrite"]
+    built_files = {t.path for t in ice.plan_scan(meta, built)[0]}
+    data, deletes = ice.plan_scan(meta, spliced)
+    assert built_files < {t.path for t in data}
+    assert [(d.kind, d.eq_cols) for d in deletes] == [("eq", ["url"])]
