@@ -127,11 +127,10 @@ def main() -> None:
         if args.delta_count > 0 and args.delta_from is None:
             ap.error("--delta-from required when --delta-count > 0")
 
-    from pyspark.sql import functions as F
-
     from mergeaddressesandbuildings_spark import config
-    from mergeaddressesandbuildings_spark.functions import cells_sql
+    from mergeaddressesandbuildings_spark.operators import tiling
     from mergeaddressesandbuildings_spark.plans import incremental as inc
+    from mergeaddressesandbuildings_spark.plans.merge import fingerprint
     from mergeaddressesandbuildings_spark.session import get_spark
     from mergeaddressesandbuildings_spark.sources import catalog
     from mergeaddressesandbuildings_spark.sources import pages as pg
@@ -184,24 +183,15 @@ def main() -> None:
     else:  # outputs
         assignments, sets, tiles, tm = inc.current_outputs(spark,
                                                            args.state)
-        tx, ty = cells_sql.xy_expr(F.col("lat"), F.col("lon"),
-                                   config.MAX_CELL_LEVEL)
-        flat = (assignments.withColumn("_x", tx).withColumn("_y", ty)
-                .join(tm, ["_x", "_y"]).drop("_x", "_y"))
+        flat = tiling.assign_tiles(assignments, tm=tm)
         if args.out:
             flat.write.mode("overwrite").parquet(
                 os.path.join(args.out, "assignments_flat"))
             flat = spark.read.parquet(
                 os.path.join(args.out, "assignments_flat"))
-        frow = flat.groupBy().agg(
-            F.expr("bit_xor(xxhash64(addr_id, coalesce(building_id, -1), "
-                   "method, decision, tile))").alias("fp"),
-            F.count("*").alias("n"),
-            F.countDistinct("tile").alias("nt"),
-        ).collect()[0]
-        out.update({"fingerprint": int(frow["fp"]),
-                    "n_assignments": int(frow["n"]),
-                    "n_tiles": int(frow["nt"])})
+        fp, n_assign, n_tiles = fingerprint(flat)
+        out.update({"fingerprint": fp, "n_assignments": n_assign,
+                    "n_tiles": n_tiles})
         assignments.unpersist()
 
     out["wall_s"] = round(time.monotonic() - t0, 2)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -52,7 +53,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from mergeaddressesandbuildings_spark import config
-    from mergeaddressesandbuildings_spark.plans.merge import run_merge
+    from mergeaddressesandbuildings_spark.operators import tiling
+    from mergeaddressesandbuildings_spark.plans.merge import fingerprint, run_merge
     from mergeaddressesandbuildings_spark.session import get_spark
     from mergeaddressesandbuildings_spark.sources import pages as pg, sink
 
@@ -100,10 +102,14 @@ def main() -> None:
     n_pages = pages.count()
     t_load = time.monotonic() - t0
 
+    # lineage barriers live under --out: on a multi-node cluster they
+    # must sit on a shared filesystem, as the output does
+    barrier_dir = os.path.join(args.out, "_barrier")
     res = run_merge(
         spark, pages, existing,
         level=args.level or config.CELL_LEVEL,
         budget=args.budget or config.TILE_MAX_ELEMS,
+        barrier_dir=barrier_dir,
     )
 
     # tile membership: join the assignments against the DISTINCT
@@ -111,14 +117,7 @@ def main() -> None:
     # magnitude smaller than the full points universe; AQE broadcasts
     # it), instead of joining full point rows back by element id. The
     # map was computed once inside run_merge — reuse it.
-    from mergeaddressesandbuildings_spark.functions import cells_sql
-
-    tm = res.tile_map
-    tx, ty = cells_sql.xy_expr(F.col("lat"), F.col("lon"), config.MAX_CELL_LEVEL)
-    with_tile = (
-        res.assignments.withColumn("_x", tx).withColumn("_y", ty)
-        .join(tm, ["_x", "_y"]).drop("_x", "_y")
-    )
+    with_tile = tiling.assign_tiles(res.assignments, tm=res.tile_map)
     # materialization barrier: write the flat assignments once and plan
     # every downstream action (fingerprint agg, sink batches) against
     # the clean parquet scan instead of re-analyzing the full
@@ -131,12 +130,7 @@ def main() -> None:
     # one action for fingerprint + row count + tile count (the
     # fingerprint is order-independent, so parallelism-invariance across
     # the N vs 4N scaling runs is checkable from this line alone)
-    frow = assignments.groupBy().agg(
-        F.expr("bit_xor(xxhash64(addr_id, coalesce(building_id, -1), method, decision, tile))").alias("fp"),
-        F.count("*").alias("n"),
-        F.countDistinct("tile").alias("nt"),
-    ).collect()[0]
-    fingerprint, n_assign, n_tiles = frow["fp"], int(frow["n"]), int(frow["nt"])
+    fp, n_assign, n_tiles = fingerprint(assignments)
     # A3 run metrics: output-set sizes (reference prints these at end)
     decisions = {
         r["decision"]: int(r["n"])
@@ -168,6 +162,8 @@ def main() -> None:
             n_batches=args.n_batches,
             fail_after_batches=args.fail_after_batches,
         )
+    # the sink has committed; nothing reads the barriers any more
+    shutil.rmtree(barrier_dir, ignore_errors=True)
 
     wall = time.monotonic() - t0
     t_write = wall - t_load - t_compute
@@ -182,7 +178,7 @@ def main() -> None:
         "n_assignments": n_assign,
         "n_tiles": n_tiles,
         "decisions": decisions,
-        "fingerprint": int(fingerprint),
+        "fingerprint": fp,
         "wall_s": round(wall, 2),
         "pages_per_sec": round(n_pages / wall, 1),
         "write": write_stats,

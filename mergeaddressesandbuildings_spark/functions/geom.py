@@ -34,6 +34,54 @@ def haversine_m(
     return 2.0 * config.EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
+def _edge_tests(px, py, x1, y1, x2, y2):
+    """Elementwise (point, edge x1,y1 → x2,y2) → (crossing, on_edge):
+    does the +lat ray from the point cross the edge (half-open on lon,
+    ``<=``/``>``, so a vertex counts once), and does the point lie on
+    the edge (collinear within ``_EDGE_EPS`` and inside its bbox)?"""
+    straddles = ((x1 <= px) & (x2 > px)) | ((x2 <= px) & (x1 > px))
+    dx = np.where(x2 - x1 == 0.0, 1.0, x2 - x1)  # guarded; unused when not straddling
+    t = (px - x1) / dx
+    y_int = y1 + t * (y2 - y1)
+    cross = (px - x1) * (y2 - y1) - (py - y1) * (x2 - x1)
+    in_box = (
+        (px >= np.minimum(x1, x2) - _EDGE_EPS)
+        & (px <= np.maximum(x1, x2) + _EDGE_EPS)
+        & (py >= np.minimum(y1, y2) - _EDGE_EPS)
+        & (py <= np.maximum(y1, y2) + _EDGE_EPS)
+    )
+    return straddles & (y_int > py), (np.abs(cross) <= _EDGE_EPS) & in_box
+
+
+def _edge_dist2(px, py, x1, y1, x2, y2):
+    """Elementwise squared distance (m²) from a point to an edge, on the
+    local equirectangular plane at the point: 1° lat = DEG_TO_M meters,
+    1° lon = DEG_TO_M * cos(point lat) meters."""
+    kx = config.DEG_TO_M * np.cos(np.radians(py))
+    ky = config.DEG_TO_M
+    ax = (x1 - px) * kx
+    ay = (y1 - py) * ky
+    bx = (x2 - px) * kx
+    by = (y2 - py) * ky
+    dx, dy = bx - ax, by - ay
+    seg_len2 = dx * dx + dy * dy
+    t = np.clip(
+        np.where(seg_len2 > 0.0, -(ax * dx + ay * dy) / np.where(seg_len2 == 0.0, 1.0, seg_len2), 0.0),
+        0.0,
+        1.0,
+    )
+    cx = ax + t * dx
+    cy = ay + t * dy
+    return cx * cx + cy * cy
+
+
+def _ring_edges(ring_lat, ring_lon):
+    """A closed ring's edges as (1, n_edges) rows: x1, y1, x2, y2."""
+    lon = np.asarray(ring_lon, dtype=np.float64)[None, :]
+    lat = np.asarray(ring_lat, dtype=np.float64)[None, :]
+    return lon[:, :-1], lat[:, :-1], lon[:, 1:], lat[:, 1:]
+
+
 def points_in_ring(
     plat: np.ndarray, plon: np.ndarray, ring_lat: np.ndarray, ring_lon: np.ndarray
 ) -> np.ndarray:
@@ -45,31 +93,12 @@ def points_in_ring(
     detected separately and forced inside. Fully vectorized: one
     (n_points × n_edges) broadcast.
     """
-    plat = np.asarray(plat, dtype=np.float64)[:, None]
-    plon = np.asarray(plon, dtype=np.float64)[:, None]
-    x1 = np.asarray(ring_lon, dtype=np.float64)[None, :-1]
-    y1 = np.asarray(ring_lat, dtype=np.float64)[None, :-1]
-    x2 = np.asarray(ring_lon, dtype=np.float64)[None, 1:]
-    y2 = np.asarray(ring_lat, dtype=np.float64)[None, 1:]
-
-    # crossing of the vertical (+lat) ray from (plon, plat)
-    straddles = ((x1 <= plon) & (x2 > plon)) | ((x2 <= plon) & (x1 > plon))
-    dx = np.where(x2 - x1 == 0.0, 1.0, x2 - x1)  # guarded; unused when not straddling
-    t = (plon - x1) / dx
-    y_int = y1 + t * (y2 - y1)
-    crossings = (straddles & (y_int > plat)).sum(axis=1)
-    inside = (crossings % 2) == 1
-
-    # on-edge test: collinear (cross product ~ 0) and within edge bbox
-    cross = (plon - x1) * (y2 - y1) - (plat - y1) * (x2 - x1)
-    in_box = (
-        (plon >= np.minimum(x1, x2) - _EDGE_EPS)
-        & (plon <= np.maximum(x1, x2) + _EDGE_EPS)
-        & (plat >= np.minimum(y1, y2) - _EDGE_EPS)
-        & (plat <= np.maximum(y1, y2) + _EDGE_EPS)
+    crossing, on_edge = _edge_tests(
+        np.asarray(plon, dtype=np.float64)[:, None],
+        np.asarray(plat, dtype=np.float64)[:, None],
+        *_ring_edges(ring_lat, ring_lon),
     )
-    on_edge = (np.abs(cross) <= _EDGE_EPS) & in_box
-    return inside | on_edge.any(axis=1)
+    return ((crossing.sum(axis=1) % 2) == 1) | on_edge.any(axis=1)
 
 
 def point_to_ring_dist_m(
@@ -77,36 +106,24 @@ def point_to_ring_dist_m(
 ) -> np.ndarray:
     """Min distance (meters) from each of n points to a ring's edges (F1).
 
-    Local equirectangular projection per point: 1° lat = DEG_TO_M meters,
-    1° lon = DEG_TO_M * cos(point lat) meters, then exact Euclidean
-    point→segment distance. Error is negligible at the ≤100 m cutoff
-    scale (§8.4).
+    Local equirectangular projection per point (:func:`_edge_dist2`),
+    then exact Euclidean point→segment distance. Error is negligible at
+    the ≤100 m cutoff scale (§8.4).
     """
-    plat = np.asarray(plat, dtype=np.float64)[:, None]
-    plon = np.asarray(plon, dtype=np.float64)[:, None]
-    kx = config.DEG_TO_M * np.cos(np.radians(plat))
-    ky = config.DEG_TO_M
-    ax = (np.asarray(ring_lon, dtype=np.float64)[None, :-1] - plon) * kx
-    ay = (np.asarray(ring_lat, dtype=np.float64)[None, :-1] - plat) * ky
-    bx = (np.asarray(ring_lon, dtype=np.float64)[None, 1:] - plon) * kx
-    by = (np.asarray(ring_lat, dtype=np.float64)[None, 1:] - plat) * ky
-    dx, dy = bx - ax, by - ay
-    seg_len2 = dx * dx + dy * dy
-    t = np.clip(
-        np.where(seg_len2 > 0.0, -(ax * dx + ay * dy) / np.where(seg_len2 == 0.0, 1.0, seg_len2), 0.0),
-        0.0,
-        1.0,
+    d2 = _edge_dist2(
+        np.asarray(plon, dtype=np.float64)[:, None],
+        np.asarray(plat, dtype=np.float64)[:, None],
+        *_ring_edges(ring_lat, ring_lon),
     )
-    cx = ax + t * dx
-    cy = ay + t * dy
-    return np.sqrt((cx * cx + cy * cy).min(axis=1))
+    return np.sqrt(d2.min(axis=1))
 
 
 def flatten_rings(ring_lats, ring_lons) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Ragged ring set → (flat_lat, flat_lon, offsets). Ring j's closed
-    vertex run is ``flat[offsets[j]:offsets[j+1]]``. This is the layout
-    the pair kernels below consume — it removes every per-ring Python
-    loop from the hot path (SURVEY.md §7 M0 "edge-list flattening")."""
+    vertex run is ``flat[offsets[j]:offsets[j+1]]``. This is the vertex
+    layout under :func:`flatten_polys`, which the pair kernels consume —
+    it removes every per-ring Python loop from the hot path (SURVEY.md
+    §7 M0 "edge-list flattening")."""
     m = len(ring_lats)
     lens = np.fromiter((len(r) for r in ring_lats), dtype=np.int64, count=m)
     offsets = np.zeros(m + 1, dtype=np.int64)
@@ -118,91 +135,15 @@ def flatten_rings(ring_lats, ring_lons) -> tuple[np.ndarray, np.ndarray, np.ndar
     return flat_lat, flat_lon, offsets
 
 
-def _pair_edge_expand(pair_ring: np.ndarray, offsets: np.ndarray):
-    """Expand (pair → ring) into per-(pair, edge) flat index arrays.
-
-    Returns (pair_idx, edge_i, seg_starts): ``edge_i[k]`` is the flat
-    vertex index of edge k's first endpoint, ``pair_idx[k]`` the pair it
-    belongs to; ``seg_starts`` are the reduceat segment boundaries (one
-    contiguous run per pair, in pair order)."""
-    n_edges = offsets[pair_ring + 1] - offsets[pair_ring] - 1
-    total = int(n_edges.sum())
-    pair_idx = np.repeat(np.arange(len(pair_ring), dtype=np.int64), n_edges)
-    seg_starts = np.zeros(len(pair_ring), dtype=np.int64)
-    np.cumsum(n_edges[:-1], out=seg_starts[1:])
-    local = np.arange(total, dtype=np.int64) - np.repeat(seg_starts, n_edges)
-    edge_i = np.repeat(offsets[pair_ring], n_edges) + local
-    return pair_idx, edge_i, seg_starts
-
-
-def pairs_points_in_rings(
-    plat: np.ndarray, plon: np.ndarray,
-    pair_pt: np.ndarray, pair_ring: np.ndarray,
-    flat_lat: np.ndarray, flat_lon: np.ndarray, offsets: np.ndarray,
-) -> np.ndarray:
-    """PIP for candidate pairs: is point ``pair_pt[p]`` inside ring
-    ``pair_ring[p]``? Bit-identical arithmetic to :func:`points_in_ring`
-    but vectorized over ALL pairs and ragged rings in one pass —
-    no Python loop over buildings."""
-    if len(pair_pt) == 0:
-        return np.zeros(0, dtype=bool)
-    pair_idx, ei, _ = _pair_edge_expand(pair_ring, offsets)
-    px = np.asarray(plon, dtype=np.float64)[pair_pt][pair_idx]
-    py = np.asarray(plat, dtype=np.float64)[pair_pt][pair_idx]
-    x1, y1 = flat_lon[ei], flat_lat[ei]
-    x2, y2 = flat_lon[ei + 1], flat_lat[ei + 1]
-
-    straddles = ((x1 <= px) & (x2 > px)) | ((x2 <= px) & (x1 > px))
-    dx = np.where(x2 - x1 == 0.0, 1.0, x2 - x1)
-    t = (px - x1) / dx
-    y_int = y1 + t * (y2 - y1)
-    crossing = straddles & (y_int > py)
-    ncross = np.bincount(pair_idx, weights=crossing, minlength=len(pair_pt))
-    inside = (ncross.astype(np.int64) % 2) == 1
-
-    cross = (px - x1) * (y2 - y1) - (py - y1) * (x2 - x1)
-    in_box = (
-        (px >= np.minimum(x1, x2) - _EDGE_EPS)
-        & (px <= np.maximum(x1, x2) + _EDGE_EPS)
-        & (py >= np.minimum(y1, y2) - _EDGE_EPS)
-        & (py <= np.maximum(y1, y2) + _EDGE_EPS)
-    )
-    on_edge = (np.abs(cross) <= _EDGE_EPS) & in_box
-    on_any = np.bincount(pair_idx, weights=on_edge, minlength=len(pair_pt)) > 0
-    return inside | on_any
-
-
-def pairs_point_to_ring_dist_m(
-    plat: np.ndarray, plon: np.ndarray,
-    pair_pt: np.ndarray, pair_ring: np.ndarray,
-    flat_lat: np.ndarray, flat_lon: np.ndarray, offsets: np.ndarray,
-) -> np.ndarray:
-    """Min point→ring-edge distance (meters) per candidate pair; same
-    equirectangular formulae as :func:`point_to_ring_dist_m`, vectorized
-    over all pairs at once (min via ``minimum.reduceat`` on the
-    contiguous per-pair edge runs)."""
-    if len(pair_pt) == 0:
-        return np.zeros(0, dtype=np.float64)
-    pair_idx, ei, seg_starts = _pair_edge_expand(pair_ring, offsets)
-    px = np.asarray(plon, dtype=np.float64)[pair_pt][pair_idx]
-    py = np.asarray(plat, dtype=np.float64)[pair_pt][pair_idx]
-    kx = config.DEG_TO_M * np.cos(np.radians(py))
-    ky = config.DEG_TO_M
-    ax = (flat_lon[ei] - px) * kx
-    ay = (flat_lat[ei] - py) * ky
-    bx = (flat_lon[ei + 1] - px) * kx
-    by = (flat_lat[ei + 1] - py) * ky
-    dx, dy = bx - ax, by - ay
-    seg_len2 = dx * dx + dy * dy
-    t = np.clip(
-        np.where(seg_len2 > 0.0, -(ax * dx + ay * dy) / np.where(seg_len2 == 0.0, 1.0, seg_len2), 0.0),
-        0.0,
-        1.0,
-    )
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = cx * cx + cy * cy
-    return np.sqrt(np.minimum.reduceat(d2, seg_starts))
+def _ragged(starts: np.ndarray, counts: np.ndarray):
+    """Per item i, the index run ``starts[i] .. starts[i]+counts[i]-1``
+    → flat arrays (item, index), each item's run contiguous and in item
+    order."""
+    item = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    first = np.zeros(len(counts), dtype=np.int64)
+    np.cumsum(counts[:-1], out=first[1:])
+    local = np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(first, counts)
+    return item, np.repeat(starts, counts) + local
 
 
 # ---------- polygons with holes (multipolygon buildings, §8.1 ext) ----
@@ -217,9 +158,12 @@ def pairs_point_to_ring_dist_m(
 #        ring of B, or A's outer first vertex is inside B (with holes),
 #        or vice versa — so a building fully inside another's courtyard
 #        does NOT overlap it.
-# For hole-free inputs every kernel below degenerates to exactly the
-# single-ring arithmetic above (bit-identical — asserted in
-# tests/test_pair_kernels_prop.py and the golden fingerprints).
+# The pair kernels below vectorize the scalar single-ring kernels over
+# ALL candidate pairs and ragged polygons in one numpy pass — no Python
+# loop per building. For hole-free inputs each one is bit-identical to
+# its scalar kernel (points_in_ring, point_to_ring_dist_m,
+# rings_overlap) — asserted in tests/test_pair_kernels_prop.py and by
+# the golden fingerprints.
 
 
 def flatten_polys(ring_lats, ring_lons, hole_lats, hole_lons):
@@ -247,18 +191,30 @@ def flatten_polys(ring_lats, ring_lons, hole_lats, hole_lons):
     return flat_lat, flat_lon, ring_off, poly_off
 
 
-def _poly_pair_expand(pair_poly: np.ndarray, poly_off: np.ndarray):
-    """Expand (pair → polygon) to (pair, ring) granularity: returns
-    (orig_pair_idx, ring_idx) with each pair's rings contiguous and in
-    poly order (outer, holes...)."""
-    n_rings = poly_off[pair_poly + 1] - poly_off[pair_poly]
-    total = int(n_rings.sum())
-    orig = np.repeat(np.arange(len(pair_poly), dtype=np.int64), n_rings)
-    starts = np.zeros(len(pair_poly), dtype=np.int64)
-    np.cumsum(n_rings[:-1], out=starts[1:])
-    local = np.arange(total, dtype=np.int64) - np.repeat(starts, n_rings)
-    rings = np.repeat(poly_off[pair_poly], n_rings) + local
-    return orig, rings
+def _cross_expand(na: np.ndarray, nb: np.ndarray):
+    """Per pair p, every (i, j) with i < na[p] and j < nb[p], as flat
+    arrays (pair, i, j) with each pair's combinations contiguous and in
+    pair order."""
+    pair, k = _ragged(np.zeros(len(na), dtype=np.int64), na * nb)
+    i = k // nb[pair]
+    return pair, i, k - i * nb[pair]
+
+
+def _pair_poly_edges(plat, plon, pair_pt, pair_poly, ring_offsets,
+                     poly_offsets):
+    """Expand (point, polygon) pairs to one row per (pair, edge of any
+    of its rings) → (pair index, point lon, point lat, flat index of the
+    edge's first vertex); each pair's edges are contiguous, in pair
+    order."""
+    orig, rings = _ragged(poly_offsets[pair_poly],
+                          poly_offsets[pair_poly + 1] - poly_offsets[pair_poly])
+    # edges per ring: vertices − 1 (rings are closed)
+    ring_edge, ei = _ragged(ring_offsets[rings],
+                            ring_offsets[rings + 1] - ring_offsets[rings] - 1)
+    opair = orig[ring_edge]
+    px = np.asarray(plon, dtype=np.float64)[pair_pt][opair]
+    py = np.asarray(plat, dtype=np.float64)[pair_pt][opair]
+    return opair, px, py, ei
 
 
 def pairs_points_in_polys(
@@ -267,36 +223,18 @@ def pairs_points_in_polys(
     flat_lat: np.ndarray, flat_lon: np.ndarray,
     ring_offsets: np.ndarray, poly_offsets: np.ndarray,
 ) -> np.ndarray:
-    """PIP with holes for candidate pairs: even-odd crossings summed
-    over ALL rings of the polygon; on-edge of any ring → inside. For
-    1-ring polygons this is bit-identical to pairs_points_in_rings."""
+    """PIP with holes for candidate pairs: is point ``pair_pt[p]``
+    inside polygon ``pair_poly[p]``? Even-odd crossings summed over ALL
+    rings of the polygon; on-edge of any ring → inside. For 1-ring
+    polygons this is bit-identical to :func:`points_in_ring`."""
     if len(pair_pt) == 0:
         return np.zeros(0, dtype=bool)
-    orig, rings = _poly_pair_expand(pair_poly, poly_offsets)
-    pair_idx, ei, _ = _pair_edge_expand(rings, ring_offsets)
-    # pair_idx indexes the EXPANDED (pair, ring) rows; map to orig pair
-    opair = orig[pair_idx]
-    px = np.asarray(plon, dtype=np.float64)[pair_pt][opair]
-    py = np.asarray(plat, dtype=np.float64)[pair_pt][opair]
-    x1, y1 = flat_lon[ei], flat_lat[ei]
-    x2, y2 = flat_lon[ei + 1], flat_lat[ei + 1]
-
-    straddles = ((x1 <= px) & (x2 > px)) | ((x2 <= px) & (x1 > px))
-    dx = np.where(x2 - x1 == 0.0, 1.0, x2 - x1)
-    t = (px - x1) / dx
-    y_int = y1 + t * (y2 - y1)
-    crossing = straddles & (y_int > py)
+    opair, px, py, ei = _pair_poly_edges(plat, plon, pair_pt, pair_poly,
+                                         ring_offsets, poly_offsets)
+    crossing, on_edge = _edge_tests(px, py, flat_lon[ei], flat_lat[ei],
+                                    flat_lon[ei + 1], flat_lat[ei + 1])
     ncross = np.bincount(opair, weights=crossing, minlength=len(pair_pt))
     inside = (ncross.astype(np.int64) % 2) == 1
-
-    cross = (px - x1) * (y2 - y1) - (py - y1) * (x2 - x1)
-    in_box = (
-        (px >= np.minimum(x1, x2) - _EDGE_EPS)
-        & (px <= np.maximum(x1, x2) + _EDGE_EPS)
-        & (py >= np.minimum(y1, y2) - _EDGE_EPS)
-        & (py <= np.maximum(y1, y2) + _EDGE_EPS)
-    )
-    on_edge = (np.abs(cross) <= _EDGE_EPS) & in_box
     on_any = np.bincount(opair, weights=on_edge, minlength=len(pair_pt)) > 0
     return inside | on_any
 
@@ -307,31 +245,16 @@ def pairs_point_to_polys_dist_m(
     flat_lat: np.ndarray, flat_lon: np.ndarray,
     ring_offsets: np.ndarray, poly_offsets: np.ndarray,
 ) -> np.ndarray:
-    """Min point→edge distance over ALL rings of the polygon per pair.
-    Bit-identical to pairs_point_to_ring_dist_m for 1-ring polygons."""
+    """Min point→edge distance (meters) over ALL rings of the polygon
+    per pair, with the equirectangular formulae of
+    :func:`point_to_ring_dist_m` (bit-identical to it for 1-ring
+    polygons)."""
     if len(pair_pt) == 0:
         return np.zeros(0, dtype=np.float64)
-    orig, rings = _poly_pair_expand(pair_poly, poly_offsets)
-    pair_idx, ei, _ = _pair_edge_expand(rings, ring_offsets)
-    opair = orig[pair_idx]
-    px = np.asarray(plon, dtype=np.float64)[pair_pt][opair]
-    py = np.asarray(plat, dtype=np.float64)[pair_pt][opair]
-    kx = config.DEG_TO_M * np.cos(np.radians(py))
-    ky = config.DEG_TO_M
-    ax = (flat_lon[ei] - px) * kx
-    ay = (flat_lat[ei] - py) * ky
-    bx = (flat_lon[ei + 1] - px) * kx
-    by = (flat_lat[ei + 1] - py) * ky
-    dx, dy = bx - ax, by - ay
-    seg_len2 = dx * dx + dy * dy
-    t = np.clip(
-        np.where(seg_len2 > 0.0, -(ax * dx + ay * dy) / np.where(seg_len2 == 0.0, 1.0, seg_len2), 0.0),
-        0.0,
-        1.0,
-    )
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = cx * cx + cy * cy
+    opair, px, py, ei = _pair_poly_edges(plat, plon, pair_pt, pair_poly,
+                                         ring_offsets, poly_offsets)
+    d2 = _edge_dist2(px, py, flat_lon[ei], flat_lat[ei],
+                     flat_lon[ei + 1], flat_lat[ei + 1])
     # edges of one ORIGINAL pair are contiguous (rings of a poly are
     # expanded adjacently): reduceat at the per-pair boundaries
     seg_starts = np.zeros(len(pair_pt), dtype=np.int64)
@@ -349,25 +272,17 @@ def pairs_polys_overlap(
 ) -> np.ndarray:
     """Polygon-with-holes overlap per candidate pair: any cross-ring
     edge intersection, or either outer's first vertex inside the other
-    polygon (with holes). Degenerates to pairs_rings_overlap for 1-ring
-    polygons."""
+    polygon (with holes). The J3 building-dedupe refine; bit-identical
+    to :func:`rings_overlap` for 1-ring polygons."""
     n_pairs = len(pair_a)
     if n_pairs == 0:
         return np.zeros(0, dtype=bool)
     # ring-granularity cross product: (ring of A poly) × (ring of B poly)
-    na = (a_poly_off[pair_a + 1] - a_poly_off[pair_a]).astype(np.int64)
-    nb = (b_poly_off[pair_b + 1] - b_poly_off[pair_b]).astype(np.int64)
-    m = na * nb
-    total = int(m.sum())
-    combo_pair = np.repeat(np.arange(n_pairs, dtype=np.int64), m)
-    starts = np.zeros(n_pairs, dtype=np.int64)
-    np.cumsum(m[:-1], out=starts[1:])
-    local = np.arange(total, dtype=np.int64) - np.repeat(starts, m)
-    nb_rep = np.repeat(nb, m)
-    ra_local = local // nb_rep
-    rb_local = local - ra_local * nb_rep
-    ring_a = np.repeat(a_poly_off[pair_a], m) + ra_local
-    ring_b = np.repeat(b_poly_off[pair_b], m) + rb_local
+    combo_pair, ra, rb = _cross_expand(
+        (a_poly_off[pair_a + 1] - a_poly_off[pair_a]).astype(np.int64),
+        (b_poly_off[pair_b + 1] - b_poly_off[pair_b]).astype(np.int64))
+    ring_a = a_poly_off[pair_a][combo_pair] + ra
+    ring_b = b_poly_off[pair_b][combo_pair] + rb
     ring_hit = _pairs_rings_edge_hit(
         ring_a, ring_b, a_flat_lat, a_flat_lon, a_ring_off,
         b_flat_lat, b_flat_lon, b_ring_off,
@@ -422,6 +337,35 @@ def _orient(ax, ay, bx, by, cx, cy):
     return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
 
 
+def _on(d, px, py, qx, qy, rx, ry):
+    """Collinear touch: orientation ``d`` is 0 and r lies in segment
+    p→q's bbox."""
+    return (d == 0) & (
+        (np.minimum(px, qx) <= rx) & (rx <= np.maximum(px, qx))
+        & (np.minimum(py, qy) <= ry) & (ry <= np.maximum(py, qy))
+    )
+
+
+def _segs_hit(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """Elementwise: does segment a intersect segment b, properly or by
+    collinear touch? Cross-product orientation test."""
+    d1 = _orient(bx1, by1, bx2, by2, ax1, ay1)
+    d2 = _orient(bx1, by1, bx2, by2, ax2, ay2)
+    d3 = _orient(ax1, ay1, ax2, ay2, bx1, by1)
+    d4 = _orient(ax1, ay1, ax2, ay2, bx2, by2)
+    proper = (
+        ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
+        & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
+    )
+    touch = (
+        _on(d1, bx1, by1, bx2, by2, ax1, ay1)
+        | _on(d2, bx1, by1, bx2, by2, ax2, ay2)
+        | _on(d3, ax1, ay1, ax2, ay2, bx1, by1)
+        | _on(d4, ax1, ay1, ax2, ay2, bx2, by2)
+    )
+    return proper | touch
+
+
 def segments_intersect(
     a1: tuple, a2: tuple, b1x: np.ndarray, b1y: np.ndarray, b2x: np.ndarray, b2y: np.ndarray
 ) -> np.ndarray:
@@ -431,29 +375,7 @@ def segments_intersect(
     Collinear-touching counts as intersecting (conservative for the J3
     building-overlap anti-join).
     """
-    ax1, ay1 = a1
-    ax2, ay2 = a2
-    d1 = _orient(b1x, b1y, b2x, b2y, ax1, ay1)
-    d2 = _orient(b1x, b1y, b2x, b2y, ax2, ay2)
-    d3 = _orient(ax1, ay1, ax2, ay2, b1x, b1y)
-    d4 = _orient(ax1, ay1, ax2, ay2, b2x, b2y)
-    proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)) & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-
-    def _on(dx, px, py, qx, qy, rx, ry):
-        return (dx == 0) & (
-            (np.minimum(px, qx) <= rx)
-            & (rx <= np.maximum(px, qx))
-            & (np.minimum(py, qy) <= ry)
-            & (ry <= np.maximum(py, qy))
-        )
-
-    touch = (
-        _on(d1, b1x, b1y, b2x, b2y, ax1, ay1)
-        | _on(d2, b1x, b1y, b2x, b2y, ax2, ay2)
-        | _on(d3, ax1, ay1, ax2, ay2, b1x, b1y)
-        | _on(d4, ax1, ay1, ax2, ay2, b2x, b2y)
-    )
-    return proper | touch
+    return _segs_hit(*a1, *a2, b1x, b1y, b2x, b2y)
 
 
 def _pairs_rings_edge_hit(
@@ -465,82 +387,23 @@ def _pairs_rings_edge_hit(
     edge of ring ``pair_b[p]`` (proper or collinear-touch)? The edge
     half of :func:`rings_overlap`, vectorized over all pairs: every
     (edge_a × edge_b) combination expands into flat index arrays,
-    tested with the same orientation formulas as
-    :func:`segments_intersect`; per-pair ``any`` is a bincount."""
+    tested by the same orientation test as :func:`segments_intersect`;
+    per-pair ``any`` is a bincount."""
     n_pairs = len(pair_a)
     if n_pairs == 0:
         return np.zeros(0, dtype=bool)
-    na = a_offsets[pair_a + 1] - a_offsets[pair_a] - 1  # edges per A ring
-    nb = b_offsets[pair_b + 1] - b_offsets[pair_b] - 1
-    m = na * nb
-    total = int(m.sum())
-    combo_pair = np.repeat(np.arange(n_pairs, dtype=np.int64), m)
-    starts = np.zeros(n_pairs, dtype=np.int64)
-    np.cumsum(m[:-1], out=starts[1:])
-    local = np.arange(total, dtype=np.int64) - np.repeat(starts, m)
-    nb_rep = np.repeat(nb, m)
-    ai = local // nb_rep
-    bi = local - ai * nb_rep
-    ea = np.repeat(a_offsets[pair_a], m) + ai
-    eb = np.repeat(b_offsets[pair_b], m) + bi
+    # edges per ring: vertices − 1 (rings are closed)
+    combo_pair, ai, bi = _cross_expand(
+        a_offsets[pair_a + 1] - a_offsets[pair_a] - 1,
+        b_offsets[pair_b + 1] - b_offsets[pair_b] - 1)
+    ea = a_offsets[pair_a][combo_pair] + ai
+    eb = b_offsets[pair_b][combo_pair] + bi
 
-    ax1, ay1 = a_flat_lon[ea], a_flat_lat[ea]
-    ax2, ay2 = a_flat_lon[ea + 1], a_flat_lat[ea + 1]
-    bx1, by1 = b_flat_lon[eb], b_flat_lat[eb]
-    bx2, by2 = b_flat_lon[eb + 1], b_flat_lat[eb + 1]
-
-    d1 = _orient(bx1, by1, bx2, by2, ax1, ay1)
-    d2 = _orient(bx1, by1, bx2, by2, ax2, ay2)
-    d3 = _orient(ax1, ay1, ax2, ay2, bx1, by1)
-    d4 = _orient(ax1, ay1, ax2, ay2, bx2, by2)
-    proper = (
-        ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-        & (d1 != 0) & (d2 != 0) & (d3 != 0) & (d4 != 0)
-    )
-
-    def _on(dx, px, py, qx, qy, rx, ry):
-        return (dx == 0) & (
-            (np.minimum(px, qx) <= rx) & (rx <= np.maximum(px, qx))
-            & (np.minimum(py, qy) <= ry) & (ry <= np.maximum(py, qy))
-        )
-
-    touch = (
-        _on(d1, bx1, by1, bx2, by2, ax1, ay1)
-        | _on(d2, bx1, by1, bx2, by2, ax2, ay2)
-        | _on(d3, ax1, ay1, ax2, ay2, bx1, by1)
-        | _on(d4, ax1, ay1, ax2, ay2, bx2, by2)
-    )
-    return np.bincount(combo_pair, weights=proper | touch, minlength=n_pairs) > 0
-
-
-def pairs_rings_overlap(
-    pair_a: np.ndarray, pair_b: np.ndarray,
-    a_flat_lat: np.ndarray, a_flat_lon: np.ndarray, a_offsets: np.ndarray,
-    b_flat_lat: np.ndarray, b_flat_lon: np.ndarray, b_offsets: np.ndarray,
-) -> np.ndarray:
-    """Ring-overlap test for candidate pairs in ONE numpy pass (the
-    batched twin of :func:`rings_overlap`, same semantics bit for bit:
-    any edge intersection — proper or collinear-touch — or either
-    ring's first vertex inside the other). Used by the J3
-    building-dedupe refine via :func:`pairs_polys_overlap` so no
-    Python loop runs per candidate pair."""
-    n_pairs = len(pair_a)
-    if n_pairs == 0:
-        return np.zeros(0, dtype=bool)
-    edge_hit = _pairs_rings_edge_hit(
-        pair_a, pair_b, a_flat_lat, a_flat_lon, a_offsets,
-        b_flat_lat, b_flat_lon, b_offsets,
-    )
-    pidx = np.arange(n_pairs, dtype=np.int64)
-    a0_in_b = pairs_points_in_rings(
-        a_flat_lat[a_offsets[pair_a]], a_flat_lon[a_offsets[pair_a]],
-        pidx, pair_b, b_flat_lat, b_flat_lon, b_offsets,
-    )
-    b0_in_a = pairs_points_in_rings(
-        b_flat_lat[b_offsets[pair_b]], b_flat_lon[b_offsets[pair_b]],
-        pidx, pair_a, a_flat_lat, a_flat_lon, a_offsets,
-    )
-    return edge_hit | a0_in_b | b0_in_a
+    hit = _segs_hit(a_flat_lon[ea], a_flat_lat[ea],
+                    a_flat_lon[ea + 1], a_flat_lat[ea + 1],
+                    b_flat_lon[eb], b_flat_lat[eb],
+                    b_flat_lon[eb + 1], b_flat_lat[eb + 1])
+    return np.bincount(combo_pair, weights=hit, minlength=n_pairs) > 0
 
 
 def rings_overlap(

@@ -70,7 +70,7 @@ def dedupe_addresses(addresses: DataFrame, existing_nodes: DataFrame,
 
 def _overlap_pairs_kernel(batches):
     """Exact ring-overlap refine over candidate pairs — ONE flattened
-    numpy pass per Arrow batch (geom.pairs_rings_overlap), no Python
+    numpy pass per Arrow batch (geom.pairs_polys_overlap), no Python
     loop per pair. Candidates arrive already bbox-filtered and
     fine-cell co-located (JVM side), so the heavy O(new × existing)
     candidate generation never reaches Python."""

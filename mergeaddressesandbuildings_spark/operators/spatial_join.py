@@ -68,15 +68,12 @@ class BldIndex:
         self.min_lon = buildings_pdf["min_lon"].to_numpy(dtype=np.float64)
         self.max_lat = buildings_pdf["max_lat"].to_numpy(dtype=np.float64)
         self.max_lon = buildings_pdf["max_lon"].to_numpy(dtype=np.float64)
-        holes_la = (buildings_pdf["hole_lats"].to_numpy()
-                    if "hole_lats" in buildings_pdf else None)
-        holes_lo = (buildings_pdf["hole_lons"].to_numpy()
-                    if "hole_lons" in buildings_pdf else None)
         self.flat_lat, self.flat_lon, self.ring_off, self.poly_off = (
             geom.flatten_polys(
                 buildings_pdf["ring_lats"].to_numpy(),
                 buildings_pdf["ring_lons"].to_numpy(),
-                holes_la, holes_lo,
+                buildings_pdf["hole_lats"].to_numpy(),
+                buildings_pdf["hole_lons"].to_numpy(),
             )
         )
         covers = cells.cover_bbox(
@@ -149,6 +146,37 @@ def _broadcast_refine(addresses: DataFrame, index: BldIndex,
     return addresses.select(*_ADDR_KERNEL_COLS).mapInPandas(run, schema=CAND_SCHEMA)
 
 
+def _cand_frame(addr_ids: np.ndarray, building_ids: np.ndarray,
+                areas: np.ndarray, dists: np.ndarray | None = None) -> pd.DataFrame:
+    """Refine-kernel output rows (CAND_SCHEMA); ``dists`` None → PIP
+    pairs at distance 0."""
+    return pd.DataFrame(
+        {
+            "addr_id": addr_ids,
+            "building_id": building_ids,
+            "dist_m": (np.zeros(len(addr_ids), dtype=np.float64)
+                       if dists is None else dists),
+            "area_m2": areas,
+        }
+    )
+
+
+def _probe_cells(plat: np.ndarray, plon: np.ndarray, level: int,
+                 cutoff_m: float) -> tuple[np.ndarray, np.ndarray]:
+    """kNN probe cells → (point index, fine cell): each point's 3×3
+    fine-cell neighborhood (valid while cutoff ≤ one fine-cell width —
+    asserted at plan build), pruned to the cells within ``cutoff_m``
+    (conservative rect lower bound under the refine's own metric):
+    typically 1–4 of the 9 survive, shrinking the candidate lookup
+    proportionally."""
+    fine = cells.encode(plat, plon, level)
+    nb = cells.neighbors(fine).reshape(-1)  # (n*9,)
+    qpt = np.repeat(np.arange(len(plat), dtype=np.int64), 9)
+    b0, b1, b2, b3 = cells.cell_bounds(nb)
+    near = cells.rect_dist_m(plat[qpt], plon[qpt], b0, b1, b2, b3) <= cutoff_m
+    return qpt[near], nb[near]
+
+
 def _pip_pairs(plat, plon, addr_ids, index: BldIndex) -> pd.DataFrame:
     """PIP over broadcast index: fine-cell lookup → bbox filter → one
     flattened-edge pair-PIP pass."""
@@ -166,32 +194,15 @@ def _pip_pairs(plat, plon, addr_ids, index: BldIndex) -> pd.DataFrame:
         index.flat_lat, index.flat_lon, index.ring_off, index.poly_off,
     )
     pi, bi = pair_pt[hit], pair_bld[hit]
-    return pd.DataFrame(
-        {
-            "addr_id": addr_ids[pi],
-            "building_id": index.ids[bi],
-            "dist_m": np.zeros(len(pi), dtype=np.float64),
-            "area_m2": index.areas[bi],
-        }
-    )
+    return _cand_frame(addr_ids[pi], index.ids[bi], index.areas[bi])
 
 
 def _knn_pairs(plat, plon, addr_ids, index: BldIndex, cutoff_m: float) -> pd.DataFrame:
-    """kNN over broadcast index: 3×3 fine-neighborhood lookup (valid
-    while cutoff ≤ one fine-cell width — asserted at plan build) →
-    padded-bbox filter → one flattened-edge pair-distance pass."""
-    n = len(plat)
-    fine = cells.encode(plat, plon, index.level)
-    nb = cells.neighbors(fine).reshape(-1)  # (n*9,)
-    qpt = np.repeat(np.arange(n, dtype=np.int64), 9)
-    # prune neighbor cells farther than the cutoff (conservative rect
-    # lower bound under the refine's own metric): typically 1–4 of the
-    # 9 survive, shrinking the candidate lookup proportionally
-    b0, b1, b2, b3 = cells.cell_bounds(nb)
-    near_cell = cells.rect_dist_m(plat[qpt], plon[qpt], b0, b1, b2, b3) <= cutoff_m
-    pair_pt, pair_bld = index.candidates(nb[near_cell], qpt[near_cell])
-    if len(pair_pt) == 0:
-        return pd.DataFrame(columns=["addr_id", "building_id", "dist_m", "area_m2"])
+    """kNN over broadcast index: pruned 3×3 fine-neighborhood lookup
+    (:func:`_probe_cells`) → padded-bbox filter → one flattened-edge
+    pair-distance pass."""
+    qpt, qcells = _probe_cells(plat, plon, index.level, cutoff_m)
+    pair_pt, pair_bld = index.candidates(qcells, qpt)
     # a building cover spanning several neighbor cells yields duplicate
     # pairs — dedupe with one sort so the distance pass runs once per pair
     key = pair_pt * np.int64(len(index.ids)) + pair_bld
@@ -213,28 +224,7 @@ def _knn_pairs(plat, plon, addr_ids, index: BldIndex, cutoff_m: float) -> pd.Dat
     )
     ok = d <= cutoff_m
     pi, bi = pair_pt[ok], pair_bld[ok]
-    return pd.DataFrame(
-        {
-            "addr_id": addr_ids[pi],
-            "building_id": index.ids[bi],
-            "dist_m": d[ok],
-            "area_m2": index.areas[bi],
-        }
-    )
-
-
-def _flat_pair_frame(pdf: pd.DataFrame, dists: np.ndarray | None = None,
-                     mask: np.ndarray | None = None) -> pd.DataFrame:
-    sel = np.flatnonzero(mask) if mask is not None else np.arange(len(pdf))
-    return pd.DataFrame(
-        {
-            "addr_id": pdf["addr_id"].to_numpy(dtype=np.int64)[sel],
-            "building_id": pdf["building_id"].to_numpy(dtype=np.int64)[sel],
-            "dist_m": (np.zeros(len(sel), dtype=np.float64) if dists is None
-                       else dists[sel]),
-            "area_m2": pdf["area_m2"].to_numpy(dtype=np.float64)[sel],
-        }
-    )
+    return _cand_frame(addr_ids[pi], index.ids[bi], index.areas[bi], d[ok])
 
 
 def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
@@ -253,34 +243,37 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
         a = a.withColumn(
             "fcell", cells_sql.cell_expr(F.col("lat"), F.col("lon"), level)
         )
+        bbox_pred = (
+            (F.col("lat") >= F.col("b_min_lat")) & (F.col("lat") <= F.col("b_max_lat"))
+            & (F.col("lon") >= F.col("b_min_lon")) & (F.col("lon") <= F.col("b_max_lon"))
+        )
     else:
-        # 3×3 fine-neighborhood expansion (valid while cutoff ≤ one fine
-        # cell width — asserted by the caller), pruned to the neighbor
-        # cells actually within the cutoff (conservative rect distance
-        # under the refine's metric — typically 1–4 of 9 survive, which
-        # shrinks the join's probe side proportionally). Arrow kernel,
-        # not an all-expression explode (janino method-size limit).
-        cutoff = knn_cutoff_m
-
+        # the pruned 3×3 fine-neighborhood (:func:`_probe_cells`) as
+        # the join's probe side. Arrow kernel, not an all-expression
+        # explode (janino method-size limit).
         def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for b in batches:
                 if b.empty:
                     continue
-                plat = b["lat"].to_numpy(np.float64)
-                plon = b["lon"].to_numpy(np.float64)
-                fine = cells.encode(plat, plon, level)
-                nb = cells.neighbors(fine).reshape(-1)  # (n*9,)
-                idx9 = np.repeat(np.arange(len(b)), 9)
-                b0, b1, b2, b3 = cells.cell_bounds(nb)
-                keep = cells.rect_dist_m(
-                    plat[idx9], plon[idx9], b0, b1, b2, b3
-                ) <= cutoff
-                rep = b.iloc[idx9[keep]].reset_index(drop=True)
-                rep["fcell"] = nb[keep]
+                qpt, qcells = _probe_cells(b["lat"].to_numpy(np.float64),
+                                           b["lon"].to_numpy(np.float64),
+                                           level, knn_cutoff_m)
+                rep = b.iloc[qpt].reset_index(drop=True)
+                rep["fcell"] = qcells
                 yield rep
 
         a = a.mapInPandas(
             expand, schema="addr_id long, lat double, lon double, fcell long"
+        )
+        pad_lat = F.lit(knn_cutoff_m / config.DEG_TO_M)
+        pad_lon = F.lit(knn_cutoff_m) / (
+            F.lit(config.DEG_TO_M) * F.cos(F.radians(F.col("lat")))
+        )
+        bbox_pred = (
+            (F.col("lat") >= F.col("b_min_lat") - pad_lat)
+            & (F.col("lat") <= F.col("b_max_lat") + pad_lat)
+            & (F.col("lon") >= F.col("b_min_lon") - pad_lon)
+            & (F.col("lon") <= F.col("b_max_lon") + pad_lon)
         )
 
     b = buildings.select(
@@ -298,23 +291,6 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
         ),
     )
 
-    if knn_cutoff_m is None:
-        bbox_pred = (
-            (F.col("lat") >= F.col("b_min_lat")) & (F.col("lat") <= F.col("b_max_lat"))
-            & (F.col("lon") >= F.col("b_min_lon")) & (F.col("lon") <= F.col("b_max_lon"))
-        )
-    else:
-        pad_lat = F.lit(knn_cutoff_m / config.DEG_TO_M)
-        pad_lon = F.lit(knn_cutoff_m) / (
-            F.lit(config.DEG_TO_M) * F.cos(F.radians(F.col("lat")))
-        )
-        bbox_pred = (
-            (F.col("lat") >= F.col("b_min_lat") - pad_lat)
-            & (F.col("lat") <= F.col("b_max_lat") + pad_lat)
-            & (F.col("lon") >= F.col("b_min_lon") - pad_lon)
-            & (F.col("lon") <= F.col("b_max_lon") + pad_lon)
-        )
-
     # a building cover spanning several (neighbor) cells can duplicate a
     # pair; identical rows are harmless for the top-1 window, so no
     # dedup shuffle here
@@ -323,7 +299,6 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
         "building_id", "ring_lats", "ring_lons", "hole_lats", "hole_lons",
         "area_m2",
     )
-    cutoff = knn_cutoff_m
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -336,18 +311,23 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
             idx = np.arange(len(pdf), dtype=np.int64)
             plat = pdf["lat"].to_numpy(dtype=np.float64)
             plon = pdf["lon"].to_numpy(dtype=np.float64)
-            if cutoff is None:
-                hit = geom.pairs_points_in_polys(
+            if knn_cutoff_m is None:
+                d = None
+                sel = np.flatnonzero(geom.pairs_points_in_polys(
                     plat, plon, idx, idx, flat_lat, flat_lon, ring_off, poly_off
-                )
-                out = _flat_pair_frame(pdf, mask=hit)
+                ))
             else:
                 d = geom.pairs_point_to_polys_dist_m(
                     plat, plon, idx, idx, flat_lat, flat_lon, ring_off, poly_off
                 )
-                out = _flat_pair_frame(pdf, dists=d, mask=d <= cutoff)
-            if not out.empty:
-                yield out
+                sel = np.flatnonzero(d <= knn_cutoff_m)
+                d = d[sel]
+            if len(sel):
+                yield _cand_frame(
+                    pdf["addr_id"].to_numpy(dtype=np.int64)[sel],
+                    pdf["building_id"].to_numpy(dtype=np.int64)[sel],
+                    pdf["area_m2"].to_numpy(dtype=np.float64)[sel], d,
+                )
 
     return cand.mapInPandas(refine, schema=CAND_SCHEMA)
 
@@ -389,26 +369,26 @@ def knn_candidates(addresses: DataFrame, buildings: DataFrame,
     )
 
 
-def pick_pip_winner(cands: DataFrame) -> DataFrame:
-    """§8.4(1): smallest area, tie → lowest building_id."""
-    w = Window.partitionBy("addr_id").orderBy(F.asc("area_m2"), F.asc("building_id"))
+def _pick_winner(cands: DataFrame, order_col: str, method: str) -> DataFrame:
+    """Top-1 candidate per address by ``order_col``, tie → lowest
+    building_id."""
+    w = Window.partitionBy("addr_id").orderBy(F.asc(order_col), F.asc("building_id"))
     return (
         cands.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .select("addr_id", "building_id", F.lit(config.METHOD_PIP).alias("method"),
+        .select("addr_id", "building_id", F.lit(method).alias("method"),
                 F.col("dist_m"))
     )
+
+
+def pick_pip_winner(cands: DataFrame) -> DataFrame:
+    """§8.4(1): smallest area, tie → lowest building_id."""
+    return _pick_winner(cands, "area_m2", config.METHOD_PIP)
 
 
 def pick_knn_winner(cands: DataFrame) -> DataFrame:
     """§8.4(2): nearest, tie → lowest building_id."""
-    w = Window.partitionBy("addr_id").orderBy(F.asc("dist_m"), F.asc("building_id"))
-    return (
-        cands.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("addr_id", "building_id", F.lit(config.METHOD_KNN).alias("method"),
-                F.col("dist_m"))
-    )
+    return _pick_winner(cands, "dist_m", config.METHOD_KNN)
 
 
 def pick_knn_topk(cands: DataFrame, k: int,

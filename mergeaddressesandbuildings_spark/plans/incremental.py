@@ -59,7 +59,12 @@ extraction and PIP/kNN kernels this plan avoids re-running.
 Exactness contract (tested: incremental == full rebuild, fingerprint
 equal): J4/J3 dedupe are row-local given the static existing state,
 winner picks are deterministic per candidate set, and the closure
-above is a superset of every row whose candidate set changed.
+above is a superset of every row whose candidate set changed. Every
+stage is plans/merge.py's own function — ``element_stage`` in
+``full_build`` and ``new_elements`` for a delta, ``winner_stage`` for
+the build and for the closure sub-run (this module only joins the
+address cell on as the splice key), ``output_stage`` in
+``current_outputs`` — so the two paths cannot drift apart.
 
 The change-set contract: ``page_changes`` carries, per changed url,
 the url's FULL new page state (its current latest capture; multiple
@@ -82,13 +87,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mergeaddressesandbuildings_spark import config
 from mergeaddressesandbuildings_spark.functions import cells
-from mergeaddressesandbuildings_spark.operators import (
-    decisions as dec,
-    dedupe,
-    extract,
-    spatial_join as sj,
-    tiling,
-)
+from mergeaddressesandbuildings_spark.operators import decisions as dec, extract
+from mergeaddressesandbuildings_spark.plans import merge
 from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 _TABLES = ("records", "addresses", "buildings",
@@ -163,29 +163,6 @@ def _record_cells(records: DataFrame) -> DataFrame:
     return addr.unionByName(bld).distinct()
 
 
-def _winners(spark: SparkSession, addresses: DataFrame,
-             buildings: DataFrame, knn_cutoff_m: float,
-             broadcast_max: int) -> tuple[DataFrame, DataFrame]:
-    """The J1→J2 winner pass of plans/merge.py over an arbitrary
-    (addresses, buildings) slice — identical strategy choices, so the
-    sub-run of an increment picks bit-identical winners. Winners come
-    back with the address ``cell`` attached (the state tables' splice
-    key)."""
-    broadcast_idx = sj.broadcast_index_for(buildings, broadcast_max)
-    acells = addresses.select("addr_id", "cell")
-    pip = sj.pip_candidates(addresses, buildings,
-                            broadcast_index=broadcast_idx)
-    pip_w = sj.pick_pip_winner(pip).join(acells, "addr_id")
-    pip_w = pip_w.persist()
-    pip_w.count()
-    unmatched = addresses.join(pip_w.select("addr_id"), "addr_id",
-                               "left_anti")
-    knn = sj.knn_candidates(unmatched, buildings, cutoff_m=knn_cutoff_m,
-                            broadcast_index=broadcast_idx)
-    knn_w = sj.pick_knn_winner(knn).join(acells, "addr_id")
-    return pip_w, knn_w
-
-
 def full_build(spark: SparkSession, pages: DataFrame,
                existing_osm: DataFrame | None, state_dir: str,
                level: int = config.CELL_LEVEL,
@@ -201,17 +178,13 @@ def full_build(spark: SparkSession, pages: DataFrame,
     if os.path.exists(_meta_path(state_dir)):
         os.remove(_meta_path(state_dir))
 
-    # extraction is CPU-bound per row; fan a compact input out to the
-    # session's parallelism first (plans/merge.py has the same prolog)
-    par = spark.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < par:
-        pages = pages.repartition(par * 2)
+    pages = merge.fan_out(spark, pages)
 
     # file layout: each table spread over 2× the session's parallelism
     # in files, grouped by its splice key (url hash, or cell range for
     # the winner tables), so every later scan runs at full parallelism
     # and each file's manifest bounds on the key stay tight
-    nfiles = par * 2
+    nfiles = spark.sparkContext.defaultParallelism * 2
 
     def write(df: DataFrame, name: str) -> DataFrame:
         ice.write_iceberg(df, _t(state_dir, name))
@@ -220,30 +193,25 @@ def full_build(spark: SparkSession, pages: DataFrame,
     records = write(extract.extract_records(pages, level=level)
                     .repartition(nfiles, "url"), "records")
 
-    addresses, new_buildings = extract.split_records(records)
-    if existing_osm is not None:
-        ex_nodes, ex_ways = extract.existing_to_tables(existing_osm,
-                                                       level=level)
-        addresses = dedupe.dedupe_addresses(addresses, ex_nodes)
-        new_buildings = dedupe.dedupe_buildings(new_buildings, ex_ways)
-        buildings = new_buildings.unionByName(ex_ways)
-    else:
+    addresses, buildings, ex_nodes = merge.element_stage(records, existing_osm,
+                                                        level)
+    if ex_nodes is None:
         ex_nodes = spark.createDataFrame(
             [], "addr_id long, lat double, lon double, "
                 "housenumber string, street string")
-        buildings = new_buildings
     ice.write_iceberg(ex_nodes, _t(state_dir, "ex_nodes"))
 
     addresses = write(addresses.repartition(nfiles, "url"), "addresses")
     buildings = write(buildings.repartition(nfiles, "url"), "buildings")
 
-    pip_w, knn_w = _winners(spark, addresses, buildings,
-                            knn_cutoff_m, broadcast_max)
-    ice.write_iceberg(pip_w.repartitionByRange(nfiles, "cell"),
-                      _t(state_dir, "pip_winners"))
-    ice.write_iceberg(knn_w.repartitionByRange(nfiles, "cell"),
-                      _t(state_dir, "knn_winners"))
-    pip_w.unpersist()
+    acells = addresses.select("addr_id", "cell")
+    winners = merge.winner_stage(addresses, buildings, knn_cutoff_m,
+                                 broadcast_max)
+    for name, w in zip(("pip_winners", "knn_winners"), winners):
+        ice.write_iceberg(w.join(acells, "addr_id")
+                          .repartitionByRange(nfiles, "cell"),
+                          _t(state_dir, name))
+        w.unpersist()
 
     meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
             "broadcast_max": broadcast_max}
@@ -288,10 +256,8 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     if has_del:
         upserts = upserts.filter(
             ~F.coalesce(F.col(deleted_col), F.lit(False)))
-    upserts = upserts.drop(deleted_col) if has_del else upserts
-    par = spark.sparkContext.defaultParallelism
-    if upserts.rdd.getNumPartitions() < par:
-        upserts = upserts.repartition(par)
+    upserts = merge.fan_out(spark, upserts.drop(deleted_col)
+                            if has_del else upserts)
 
     new_records = extract.extract_records(upserts, level=level)
     new_records = new_records.persist()
@@ -319,13 +285,13 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     # side; commits are single-writer PER TABLE, which threads here
     # respect). NOTE: ex_ways must come from the PRE-splice buildings
     # snapshot, so plan its scan before launching.
-    addr_delta, bld_delta = extract.split_records(new_records)
     ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
     ex_ways = (ice.read_iceberg(spark, _t(state_dir, "buildings"))
                .filter(F.col("existing")))
+    addr_delta, bld_delta = merge.new_elements(new_records, ex_nodes, ex_ways)
     # each splice reads its rows twice (delete keys, then data)
-    addr_delta = dedupe.dedupe_addresses(addr_delta, ex_nodes).persist()
-    bld_delta = dedupe.dedupe_buildings(bld_delta, ex_ways).persist()
+    addr_delta = addr_delta.persist()
+    bld_delta = bld_delta.persist()
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=3) as pool:
@@ -352,47 +318,45 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     # winner recompute (the fine-cell explode and the pair-join's map
     # side) would then run nearly serial. One bounded shuffle here buys full
     # parallelism for the expensive Arrow kernels downstream.
-    par = spark.sparkContext.defaultParallelism
-    sub_addr = addresses.join(ring1, "cell", "left_semi")
-    if sub_addr.rdd.getNumPartitions() < par:
-        sub_addr = sub_addr.repartition(par * 2)
+    sub_addr = merge.fan_out(spark, addresses.join(ring1, "cell", "left_semi"))
     sub_addr = sub_addr.persist()
     n_sub_addr = sub_addr.count()
     sub_bld_ids = (buildings
                    .select("building_id", F.explode("cells").alias("cell"))
                    .join(ring2, "cell", "left_semi")
                    .select("building_id").distinct())
-    sub_bld = buildings.join(sub_bld_ids, "building_id", "left_semi")
-    if sub_bld.rdd.getNumPartitions() < par:
-        sub_bld = sub_bld.repartition(par * 2)
+    sub_bld = merge.fan_out(
+        spark, buildings.join(sub_bld_ids, "building_id", "left_semi"))
     sub_bld = sub_bld.persist()
     n_sub_bld = sub_bld.count()
     _lap("closure_slices")
 
-    pip_w, knn_w = _winners(spark, sub_addr, sub_bld,
-                            meta["knn_cutoff_m"], meta["broadcast_max"])
+    # the full merge's own winner stage over the slice (persisted and
+    # materialized before the concurrent splices read it), plus the
+    # address cell — the winner tables' splice key
+    winners = merge.winner_stage(sub_addr, sub_bld, meta["knn_cutoff_m"],
+                                 meta["broadcast_max"])
+    acells = sub_addr.select("addr_id", "cell")
+    _lap("winners")
 
     # splice winners BY CELL (module docstring): every winner that can
     # change sits in a ring1 cell (sub addresses are the ring1
     # semi-join by construction), so the delete key set is ring1
     # itself — a few hundred rows
-    knn_w = knn_w.persist()
-    knn_w.count()  # materialize before the concurrent splices race it
-    _lap("winners")
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [pool.submit(ice.merge_upsert, spark, _t(state_dir, name),
-                            rows, ["cell"], deletes=ring1)
-                for name, rows in (("pip_winners", pip_w),
-                                   ("knn_winners", knn_w))]
+                            w.join(acells, "addr_id"), ["cell"],
+                            deletes=ring1)
+                for name, w in zip(("pip_winners", "knn_winners"), winners)]
         for f in futs:
             f.result()
     _lap("winner_splices")
-    pip_w.unpersist()
-    knn_w.unpersist()
+    for w in winners:
+        w.unpersist()
     sub_addr.unpersist()
     sub_bld.unpersist()
     old_changed.unpersist()
-    out = {
+    return {
         "n_changed_urls": changed_urls.count(),
         "n_new_records": n_new_records,
         "n_old_records": n_old_records,
@@ -403,16 +367,15 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
                               if n_addr_total else 0.0),
         "stage_s": timings,
     }
-    return out
 
 
 def current_outputs(spark: SparkSession, state_dir: str,
                     budget: int = config.TILE_MAX_ELEMS):
     """(assignments, sets, tiles, tile_map) from the current state —
-    the same global decision/tiling tail as plans/merge.run_merge,
-    over the spliced element tables (element-scale; no extraction, no
-    geometry kernels). ``tile_map`` is the distinct fine-cell → tile
-    map, the frame jobs/merge.py joins assignments against for the
+    run_merge's decisions and ``output_stage`` over the spliced
+    element tables (element-scale; no extraction, no geometry
+    kernels). ``tile_map`` is the distinct fine-cell → tile map, the
+    frame jobs/incremental.py joins assignments against for the
     fingerprint-bearing flat output."""
     with open(_meta_path(state_dir)) as f:
         meta = json.load(f)
@@ -428,11 +391,8 @@ def current_outputs(spark: SparkSession, state_dir: str,
     assignments = dec.assign(addresses, pip_w, knn_w, buildings)
     assignments = assignments.persist()
     assignments.count()
-    sets = dec.output_sets(assignments, buildings)
-    points = tiling.tile_points(assignments, buildings)
-    tm = tiling.tile_map(points, budget=budget, level=meta["level"])
-    tiles = tiling.assign_tiles(points, budget=budget,
-                                level=meta["level"], tm=tm)
+    sets, _, tm, tiles = merge.output_stage(assignments, buildings, budget,
+                                            meta["level"])
     return assignments, sets, tiles, tm
 
 

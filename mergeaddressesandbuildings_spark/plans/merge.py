@@ -15,11 +15,18 @@
                     tiling (T4/T5) ──► tile column, budgeted
 
 Every stage is a DataFrame; the only Python crossings are the Arrow
-kernels (extraction, PIP/kNN refine, tile encode).
+kernels (extraction, PIP/kNN refine, tile encode). Each stage is
+defined once here — :func:`fan_out`, :func:`element_stage` (its
+split/P3/dedupe part is :func:`new_elements`), :func:`winner_stage`,
+:func:`output_stage` and the pinned :data:`FINGERPRINT` — and
+:func:`run_merge` and plans/incremental.py compose the same functions,
+so the incremental path cannot drift from the full merge.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 from dataclasses import dataclass
 
@@ -34,6 +41,10 @@ from mergeaddressesandbuildings_spark.operators import (
     spatial_join as sj,
     tiling,
 )
+
+# order-independent, so parallelism-invariant and comparable across jobs
+FINGERPRINT = ("bit_xor(xxhash64(addr_id, coalesce(building_id, -1), "
+               "method, decision, tile))")
 
 
 @dataclass
@@ -66,45 +77,26 @@ def _lineage_barrier(spark: SparkSession, df: DataFrame, path: str) -> DataFrame
     return spark.read.parquet(path)
 
 
-def run_merge(
-    spark: SparkSession,
-    pages: DataFrame,
-    existing_osm: DataFrame | None = None,
-    level: int = config.CELL_LEVEL,
-    budget: int = config.TILE_MAX_ELEMS,
-    knn_cutoff_m: float = config.KNN_CUTOFF_M,
-    broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
-    county_ring: tuple | None = None,
-    barrier_dir: str = "auto",
-) -> MergeResult:
-    """See module docstring. ``barrier_dir``: scratch directory for
-    lineage barriers (parquet write + re-read of the small intermediate
-    tables); ``"auto"`` creates a temp dir."""
-    # parquet splitting is SIZE-based; page html is small but extraction
-    # is CPU-heavy per row, so a compact fixture scan yields far fewer
-    # partitions than cores and the Arrow kernels run almost serial.
-    # Fan the input out to the session's parallelism first (tiny shuffle
-    # of raw bytes, repaid immediately by the extraction stage).
+def fan_out(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` spread over 2× the session's parallelism when it has fewer
+    partitions than cores. Parquet splitting is SIZE-based: a compact
+    page scan, or a semi-join that inherits a small table's file count,
+    yields far fewer partitions than cores, and the CPU-heavy Arrow
+    kernels downstream would run almost serial. The small shuffle is
+    repaid by the first kernel stage."""
     par = spark.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < par:
-        pages = pages.repartition(par * 2)
-    if existing_osm is not None and existing_osm.rdd.getNumPartitions() < par:
-        existing_osm = existing_osm.repartition(par * 2)
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par * 2)
+    return df
 
-    if barrier_dir == "auto":
-        barrier_dir = tempfile.mkdtemp(prefix="merge_barrier_")
 
-    records = extract.extract_records(pages, level=level)
-    # materialize the extraction once: addresses & buildings both branch
-    # from it, and persisting here keeps `html` out of every later scan.
-    # NOT a parquet barrier: records still carries the page-sized
-    # payload columns, and writing them to scratch parquet costs more
-    # than the planning time the barrier saves (measured round 4 at
-    # 20k pages/local[32]: parquet-barriered records pushed the merge
-    # median from ~18 s to ~30 s). The plan-size cap happens at
-    # barrier #1 below, where addresses/buildings are payload-free.
-    records = records.persist(StorageLevel.MEMORY_AND_DISK)
-
+def new_elements(records: DataFrame, ex_nodes: DataFrame | None,
+                 ex_ways: DataFrame | None,
+                 county_ring: tuple | None = None
+                 ) -> tuple[DataFrame, DataFrame]:
+    """Extracted records → (addresses, new buildings) that survive the
+    P3 county filter and the J4/J3 dedupe against the existing tables
+    (no dedupe when ``ex_nodes`` is None)."""
     addresses, new_buildings = extract.split_records(records)
 
     if county_ring is not None:
@@ -118,23 +110,33 @@ def run_merge(
             lat_col="centroid_lat", lon_col="centroid_lon",
         )
 
+    if ex_nodes is not None:
+        addresses = dedupe.dedupe_addresses(addresses, ex_nodes)
+        new_buildings = dedupe.dedupe_buildings(new_buildings, ex_ways)
+    return addresses, new_buildings
+
+
+def element_stage(records: DataFrame, existing_osm: DataFrame | None,
+                  level: int, county_ring: tuple | None = None
+                  ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Extracted records (+ existing OSM state) → (addresses, buildings
+    universe = new-building survivors ∪ existing ways, existing address
+    nodes or None)."""
+    ex_nodes = ex_ways = None
     if existing_osm is not None:
         ex_nodes, ex_ways = extract.existing_to_tables(existing_osm, level=level)
         ex_ways = ex_ways.persist(StorageLevel.MEMORY_AND_DISK)
-        addresses = dedupe.dedupe_addresses(addresses, ex_nodes)
-        new_buildings = dedupe.dedupe_buildings(new_buildings, ex_ways)
-        buildings = new_buildings.unionByName(ex_ways)
-    else:
-        buildings = new_buildings
+    addresses, buildings = new_elements(records, ex_nodes, ex_ways, county_ring)
+    if ex_ways is not None:
+        buildings = buildings.unionByName(ex_ways)
+    return addresses, buildings, ex_nodes
 
-    # lineage barrier #1: addresses/buildings feed four downstream
-    # consumers each (PIP, kNN, decisions, tiling) — cap the plan they
-    # all inherit. This is also the cache-consistency barrier (parquet
-    # is immutable, so the parallel stage submission race that
-    # lazily-persisted frames suffer cannot occur).
-    addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
-    buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
 
+def winner_stage(addresses: DataFrame, buildings: DataFrame,
+                 knn_cutoff_m: float, broadcast_max: int
+                 ) -> tuple[DataFrame, DataFrame]:
+    """J1→J2 over (addresses, buildings) → (PIP winners, kNN winners),
+    both persisted and materialized."""
     # J6: small building side → broadcast index, no shuffle at all.
     # (On a cluster this is the per-region fast path.)
     broadcast_idx = sj.broadcast_index_for(buildings, broadcast_max)
@@ -154,16 +156,86 @@ def run_merge(
                             broadcast_index=broadcast_idx)
     knn_winners = sj.pick_knn_winner(knn).persist(StorageLevel.MEMORY_AND_DISK)
     knn_winners.count()
+    return pip_winners, knn_winners
+
+
+def output_stage(assignments: DataFrame, buildings: DataFrame,
+                 budget: int, level: int
+                 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Materialized assignments → (output sets, tile points, fine-cell →
+    tile map, tiles)."""
+    sets = dec.output_sets(assignments, buildings)
+    points = tiling.tile_points(assignments, buildings)
+    tm = tiling.tile_map(points, budget=budget, level=level)
+    tiles = tiling.assign_tiles(points, budget=budget, level=level, tm=tm)
+    return sets, points, tm, tiles
+
+
+def fingerprint(tiled: DataFrame) -> tuple[int, int, int]:
+    """(:data:`FINGERPRINT`, rows, distinct tiles) of tiled assignments,
+    in one action."""
+    row = tiled.groupBy().agg(
+        F.expr(FINGERPRINT).alias("fp"),
+        F.count("*").alias("n"),
+        F.countDistinct("tile").alias("nt"),
+    ).collect()[0]
+    return int(row["fp"]), int(row["n"]), int(row["nt"])
+
+
+def run_merge(
+    spark: SparkSession,
+    pages: DataFrame,
+    existing_osm: DataFrame | None = None,
+    level: int = config.CELL_LEVEL,
+    budget: int = config.TILE_MAX_ELEMS,
+    knn_cutoff_m: float = config.KNN_CUTOFF_M,
+    broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
+    county_ring: tuple | None = None,
+    barrier_dir: str = "auto",
+) -> MergeResult:
+    """See module docstring. ``barrier_dir``: scratch directory for
+    lineage barriers (parquet write + re-read of the small intermediate
+    tables). On a multi-node cluster it MUST be a shared filesystem
+    path; ``"auto"`` creates a local temp dir, valid in local
+    mode only and removed at interpreter exit."""
+    pages = fan_out(spark, pages)
+    if existing_osm is not None:
+        existing_osm = fan_out(spark, existing_osm)
+
+    if barrier_dir == "auto":
+        barrier_dir = tempfile.mkdtemp(prefix="merge_barrier_")
+        atexit.register(shutil.rmtree, barrier_dir, ignore_errors=True)
+
+    records = extract.extract_records(pages, level=level)
+    # materialize the extraction once: addresses & buildings both branch
+    # from it, and persisting here keeps `html` out of every later scan.
+    # NOT a parquet barrier: records still carries the page-sized
+    # payload columns, and writing them to scratch parquet costs more
+    # than the planning time the barrier saves (measured round 4 at
+    # 20k pages/local[32]: parquet-barriered records pushed the merge
+    # median from ~18 s to ~30 s). The plan-size cap happens at
+    # barrier #1 below, where addresses/buildings are payload-free.
+    records = records.persist(StorageLevel.MEMORY_AND_DISK)
+
+    addresses, buildings, _ = element_stage(records, existing_osm, level,
+                                            county_ring)
+
+    # lineage barrier #1: addresses/buildings feed four downstream
+    # consumers each (PIP, kNN, decisions, tiling) — cap the plan they
+    # all inherit. This is also the cache-consistency barrier (parquet
+    # is immutable, so the parallel stage submission race that
+    # lazily-persisted frames suffer cannot occur).
+    addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
+    buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
+
+    pip_winners, knn_winners = winner_stage(addresses, buildings,
+                                            knn_cutoff_m, broadcast_max)
 
     assignments = dec.assign(addresses, pip_winners, knn_winners, buildings)
     # lineage barrier #2: assignments fan into output sets, tiling, and
     # the caller's writes.
     assignments = _lineage_barrier(spark, assignments, f"{barrier_dir}/assignments")
-    sets = dec.output_sets(assignments, buildings)
-
-    points = tiling.tile_points(assignments, buildings)
-    tm = tiling.tile_map(points, budget=budget, level=level)
-    tiles = tiling.assign_tiles(points, budget=budget, level=level, tm=tm)
+    sets, points, tm, tiles = output_stage(assignments, buildings, budget, level)
 
     return MergeResult(
         addresses=addresses,

@@ -10,13 +10,16 @@ and exercises late/duplicate web captures:
 - ST3 ``windowed_metrics``   : tumbling/sliding window counts per lang
 - ST4 ``cell_budget_state``  : applyInPandasWithState keyed by cell — cumulative
                                element budget tracking across microbatches
-- ST5 ``incremental_merge``  : foreachBatch → the SAME batch merge plan +
-                               idempotent per-epoch tile writer under a
-                               streaming checkpoint (restart-safe)
+- ST5 ``incremental_merge``  : foreachBatch → ``run_merge`` over each
+                               microbatch + idempotent per-epoch tile
+                               writer under a streaming checkpoint
+                               (restart-safe)
 
 Everything downstream of ST1 reuses the batch kernels verbatim
 (``extract.extract_records`` is a mapInPandas pass — legal on streaming
-DataFrames), so streaming and batch cannot drift semantically.
+DataFrames). ST5 merges each microbatch on its own (see
+:func:`incremental_merge`); plans/incremental.py is the exact
+delta-proportional path.
 """
 
 from __future__ import annotations
@@ -142,9 +145,16 @@ def incremental_merge(
     available_now: bool = True,
     on_batch: Callable[[int, int], None] | None = None,
 ):
-    """ST5: incremental merge — each microbatch of pages runs the SAME
-    batch plan (extract → PIP/kNN join → decisions → tiling) via
-    ``foreachBatch``, writing assignments partitioned by tile.
+    """ST5: incremental merge — each microbatch of pages runs
+    ``run_merge`` (extract → PIP/kNN join → decisions → tiling) against
+    ``existing_osm`` via ``foreachBatch``, appending assignments
+    partitioned by tile.
+
+    A microbatch sees only its own pages plus the existing state:
+    buildings from earlier microbatches are never candidates, and
+    per-building decisions are taken per microbatch, so the output
+    equals a full merge only when one microbatch holds the whole
+    corpus. plans/incremental.py is the exact delta path.
 
     Restart safety has two layers:
     - Spark's streaming checkpoint (offsets in ``checkpoint_dir``) makes
@@ -160,6 +170,8 @@ def incremental_merge(
 
     epochs_dir = os.path.join(out_dir, "_epochs")
     data_dir = os.path.join(out_dir, "data")
+    # one barrier dir, overwritten by every epoch, shared on a cluster
+    barrier_dir = os.path.join(out_dir, "_barrier")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         marker = os.path.join(epochs_dir, f"epoch={epoch_id}")
@@ -168,7 +180,8 @@ def incremental_merge(
         if batch_df.rdd.isEmpty():
             os.makedirs(marker, exist_ok=True)
             return
-        res = run_merge(spark, batch_df, existing_osm)
+        res = run_merge(spark, batch_df, existing_osm,
+                        barrier_dir=barrier_dir)
         tiles = res.tiles.select("elem_id", "tile")
         out = (
             res.assignments

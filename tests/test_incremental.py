@@ -12,9 +12,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mergeaddressesandbuildings_spark import config
-from mergeaddressesandbuildings_spark.functions import cells_sql
+from mergeaddressesandbuildings_spark.operators import tiling
 from mergeaddressesandbuildings_spark.plans import incremental as inc
+from mergeaddressesandbuildings_spark.plans.merge import fingerprint
 from mergeaddressesandbuildings_spark.sources import pages as pg
 from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
@@ -68,16 +68,8 @@ def _pages_v2_pdf() -> pd.DataFrame:
 
 
 def _fingerprint(assignments, tile_map):
-    tx, ty = cells_sql.xy_expr(F.col("lat"), F.col("lon"),
-                               config.MAX_CELL_LEVEL)
-    flat = (assignments.withColumn("_x", tx).withColumn("_y", ty)
-            .join(tile_map, ["_x", "_y"]))
-    row = flat.groupBy().agg(
-        F.expr("bit_xor(xxhash64(addr_id, coalesce(building_id, -1), "
-               "method, decision, tile))").alias("fp"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    return int(row["fp"]), int(row["n"])
+    """(fingerprint, rows) of the assignments, tiled through the map."""
+    return fingerprint(tiling.assign_tiles(assignments, tm=tile_map))[:2]
 
 
 def _sets_rows(sets):

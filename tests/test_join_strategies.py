@@ -66,9 +66,11 @@ def test_knn_topk_matches_bruteforce(spark, corpus):
         v.sort()
 
     apdf = addresses.select("addr_id", "lat", "lon").toPandas()
-    bpdf = buildings.select("building_id", "ring_lats", "ring_lons").toPandas()
-    flat_lat, flat_lon, off = geom.flatten_rings(
-        bpdf["ring_lats"].to_numpy(), bpdf["ring_lons"].to_numpy())
+    bpdf = buildings.select("building_id", "ring_lats", "ring_lons",
+                            "hole_lats", "hole_lons").toPandas()
+    polys = geom.flatten_polys(
+        bpdf["ring_lats"].to_numpy(), bpdf["ring_lons"].to_numpy(),
+        bpdf["hole_lats"].to_numpy(), bpdf["hole_lons"].to_numpy())
     bids = bpdf["building_id"].to_numpy()
     want = {}
     n_b = len(bids)
@@ -77,10 +79,10 @@ def test_knn_topk_matches_bruteforce(spark, corpus):
     alons = apdf["lon"].to_numpy(dtype=np.float64)
     for j in range(len(aids)):
         pts = np.zeros(n_b, dtype=np.int64)
-        rings = np.arange(n_b, dtype=np.int64)
-        d = geom.pairs_point_to_ring_dist_m(
+        blds = np.arange(n_b, dtype=np.int64)
+        d = geom.pairs_point_to_polys_dist_m(
             np.array([alats[j]]), np.array([alons[j]]),
-            pts, rings, flat_lat, flat_lon, off)
+            pts, blds, *polys)
         ok = d <= config.KNN_CUTOFF_M
         ranked = sorted(zip(d[ok], bids[ok]))[:3]
         if ranked:

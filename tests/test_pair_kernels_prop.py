@@ -1,7 +1,8 @@
 """Property-based differential tests (hypothesis, seeded): the
-flattened-edge PAIR kernels must agree bit-for-bit with the
-single-ring kernels they replaced on the hot path — for arbitrary
-ragged ring sets, point clouds, and candidate pair subsets."""
+flattened-edge polygon PAIR kernels the spatial join and the J3 dedupe
+run must agree bit-for-bit with the scalar single-ring kernels on
+1-ring polygons — for arbitrary ragged ring sets, point clouds, and
+candidate pair subsets."""
 
 from __future__ import annotations
 
@@ -42,15 +43,19 @@ def ring_set(draw):
     return rings, plat, plon, pair_pt, pair_ring
 
 
+def _polys(rings):
+    """1-ring polygons: (flat_lat, flat_lon, ring_off, poly_off)."""
+    return geom.flatten_polys(
+        [r[0] for r in rings], [r[1] for r in rings], None, None
+    )
+
+
 @given(ring_set())
 @settings(max_examples=60, deadline=None)
 def test_pair_pip_matches_single_ring(case):
     rings, plat, plon, pair_pt, pair_ring = case
-    flat_lat, flat_lon, offsets = geom.flatten_rings(
-        [r[0] for r in rings], [r[1] for r in rings]
-    )
-    got = geom.pairs_points_in_rings(
-        plat, plon, pair_pt, pair_ring, flat_lat, flat_lon, offsets
+    got = geom.pairs_points_in_polys(
+        plat, plon, pair_pt, pair_ring, *_polys(rings)
     )
     for k in range(len(pair_pt)):
         rlat, rlon = rings[pair_ring[k]]
@@ -72,17 +77,11 @@ def test_pair_rings_overlap_matches_single(case):
         dl = rng.uniform(-0.03, 0.03)
         dn = rng.uniform(-0.03, 0.03)
         other.append((rlat + dl, rlon + dn))
-    a_lat, a_lon, a_off = geom.flatten_rings(
-        [r[0] for r in rings], [r[1] for r in rings]
-    )
-    b_lat, b_lon, b_off = geom.flatten_rings(
-        [r[0] for r in other], [r[1] for r in other]
-    )
     n = len(rings)
     pair_a = np.repeat(np.arange(n, dtype=np.int64), n)
     pair_b = np.tile(np.arange(n, dtype=np.int64), n)
-    got = geom.pairs_rings_overlap(
-        pair_a, pair_b, a_lat, a_lon, a_off, b_lat, b_lon, b_off
+    got = geom.pairs_polys_overlap(
+        pair_a, pair_b, *_polys(rings), *_polys(other)
     )
     for k in range(len(pair_a)):
         ra = rings[pair_a[k]]
@@ -95,11 +94,8 @@ def test_pair_rings_overlap_matches_single(case):
 @settings(max_examples=60, deadline=None)
 def test_pair_dist_matches_single_ring(case):
     rings, plat, plon, pair_pt, pair_ring = case
-    flat_lat, flat_lon, offsets = geom.flatten_rings(
-        [r[0] for r in rings], [r[1] for r in rings]
-    )
-    got = geom.pairs_point_to_ring_dist_m(
-        plat, plon, pair_pt, pair_ring, flat_lat, flat_lon, offsets
+    got = geom.pairs_point_to_polys_dist_m(
+        plat, plon, pair_pt, pair_ring, *_polys(rings)
     )
     for k in range(len(pair_pt)):
         rlat, rlon = rings[pair_ring[k]]
