@@ -25,8 +25,11 @@ change set can be SPLICED in:
 A splice is merge-on-read: one `merge_upsert` snapshot per table that
 adds an equality-delete file on the splice key plus the key's new
 rows, and rewrites no existing file — commit cost is O(delta), not
-O(state). Reads apply the accumulated deletes; `maintain` compacts
-them away and expires the superseded snapshots.
+O(state). A read applies all of a table's deletes in one anti-join
+(every delta's equality deletes share the splice key), which each data
+row probes once; the data file groups and the delete-key set still grow
+by one delta each until `maintain` compacts the deletes away and
+expires the superseded snapshots.
 
 Change propagation is bounded by the same invariant the spatial join
 already asserts (§8.5: kNN cutoff ≤ one cell width at ``level``), so
@@ -193,8 +196,8 @@ def full_build(spark: SparkSession, pages: DataFrame,
     records = write(extract.extract_records(pages, level=level)
                     .repartition(nfiles, "url"), "records")
 
-    addresses, buildings, ex_nodes = merge.element_stage(records, existing_osm,
-                                                        level)
+    addresses, buildings, ex_nodes, ex_ways = merge.element_stage(
+        records, existing_osm, level)
     if ex_nodes is None:
         ex_nodes = spark.createDataFrame(
             [], "addr_id long, lat double, lon double, "
@@ -203,6 +206,8 @@ def full_build(spark: SparkSession, pages: DataFrame,
 
     addresses = write(addresses.repartition(nfiles, "url"), "addresses")
     buildings = write(buildings.repartition(nfiles, "url"), "buildings")
+    if ex_ways is not None:
+        ex_ways.unpersist()
 
     acells = addresses.select("addr_id", "cell")
     winners = merge.winner_stage(addresses, buildings, knn_cutoff_m,

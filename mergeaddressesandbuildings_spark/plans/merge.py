@@ -118,10 +118,12 @@ def new_elements(records: DataFrame, ex_nodes: DataFrame | None,
 
 def element_stage(records: DataFrame, existing_osm: DataFrame | None,
                   level: int, county_ring: tuple | None = None
-                  ) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+                  ) -> tuple[DataFrame, DataFrame, DataFrame | None,
+                             DataFrame | None]:
     """Extracted records (+ existing OSM state) → (addresses, buildings
     universe = new-building survivors ∪ existing ways, existing address
-    nodes or None)."""
+    nodes or None, the persisted existing ways or None — the caller
+    unpersists them once the buildings are written)."""
     ex_nodes = ex_ways = None
     if existing_osm is not None:
         ex_nodes, ex_ways = extract.existing_to_tables(existing_osm, level=level)
@@ -129,7 +131,7 @@ def element_stage(records: DataFrame, existing_osm: DataFrame | None,
     addresses, buildings = new_elements(records, ex_nodes, ex_ways, county_ring)
     if ex_ways is not None:
         buildings = buildings.unionByName(ex_ways)
-    return addresses, buildings, ex_nodes
+    return addresses, buildings, ex_nodes, ex_ways
 
 
 def winner_stage(addresses: DataFrame, buildings: DataFrame,
@@ -217,8 +219,8 @@ def run_merge(
     # barrier #1 below, where addresses/buildings are payload-free.
     records = records.persist(StorageLevel.MEMORY_AND_DISK)
 
-    addresses, buildings, _ = element_stage(records, existing_osm, level,
-                                            county_ring)
+    addresses, buildings, _, ex_ways = element_stage(records, existing_osm,
+                                                     level, county_ring)
 
     # lineage barrier #1: addresses/buildings feed four downstream
     # consumers each (PIP, kNN, decisions, tiling) — cap the plan they
@@ -227,6 +229,11 @@ def run_merge(
     # lazily-persisted frames suffer cannot occur).
     addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
     buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
+    # everything downstream reads the barriers: release the caches
+    # behind them (a streaming caller runs one merge per microbatch)
+    records.unpersist()
+    if ex_ways is not None:
+        ex_ways.unpersist()
 
     pip_winners, knn_winners = winner_stage(addresses, buildings,
                                             knn_cutoff_m, broadcast_max)
@@ -235,6 +242,8 @@ def run_merge(
     # lineage barrier #2: assignments fan into output sets, tiling, and
     # the caller's writes.
     assignments = _lineage_barrier(spark, assignments, f"{barrier_dir}/assignments")
+    pip_winners.unpersist()
+    knn_winners.unpersist()
     sets, points, tm, tiles = output_stage(assignments, buildings, budget, level)
 
     return MergeResult(

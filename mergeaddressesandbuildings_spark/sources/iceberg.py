@@ -30,26 +30,35 @@ Scale notes (the 100 TB contract):
   partition values + column bounds; file pruning (`plan_scan` with a
   row_filter) happens before any Spark job, exactly like the JVM
   reader;
-- merge-on-read delete application is expressed as Spark anti-joins
-  keyed on (file_path, row position) / equality columns, so the heavy
-  side streams; delete sides are broadcast while their manifest
-  record_count total stays under BROADCAST_DELETE_ROWS and pinned
-  SHUFFLE_HASH beyond it (or when a foreign writer omitted counts), so
-  no join build grows with total delete volume;
+- merge-on-read delete application is one Spark anti-join per delete
+  kind — keyed on (file_path, row position), or on the equality
+  columns, one join per equality-column set — whatever the number of
+  delete commits: each delete row carries its file's sequence number
+  and the spec's sequence rule is part of the join condition (the
+  optimizer may push each join into every data group's scan). The
+  heavy side streams; a delete side is broadcast while its manifest
+  record_count total, across all its commits, stays under
+  BROADCAST_DELETE_ROWS and pinned SHUFFLE_HASH beyond it (or when a
+  foreign writer omitted counts), so no join build grows with total
+  delete volume;
 - data files are never listed from the filesystem — only from
   manifests — so planning cost is O(metadata), not O(directory).
 
-Commit protocol: each commit writes its data, delete and manifest files
-under fresh names, then publishes `vN.metadata.json` by linking a fully
-written temp file into place (`os.link` — create-or-fail, so of two
-writers racing from one parent exactly one wins and the other gets a
-CommitConflict) and finally replaces `version-hint.text` through a temp
-file and `os.replace`. The hint is only a hint: readers take the
-highest `vN.metadata.json` reachable from it, so a crash between the
-two steps loses nothing and blocks no later writer. A filesystem with
-atomic link/replace (POSIX local FS, HDFS; not bare S3) is the
-correctness boundary — on an object store this maps onto a catalog's
-compare-and-swap.
+Commit protocol: every writer (append, delete_where,
+add_equality_deletes, merge_upsert, compact_table) takes one path.
+`_stage` writes each file group and its manifest under fresh,
+attempt-unique names; `_commit_snapshot` writes the manifest list,
+publishes `vN.metadata.json` by linking a fully written temp file into
+place (`os.link` — create-or-fail, so of two writers racing from one
+parent exactly one wins and the other gets a CommitConflict) and
+finally replaces `version-hint.text` through a temp file and
+`os.replace`. A crash before the link leaves only unreferenced files,
+which `remove_orphan_files` reclaims. The hint is only a hint: readers
+take the highest `vN.metadata.json` reachable from it, so a crash
+between the last two steps loses nothing and blocks no later writer.
+A filesystem with atomic link/replace (POSIX local FS, HDFS; not bare
+S3) is the correctness boundary — on an object store this maps onto a
+catalog's compare-and-swap.
 
 Supported surface (loud errors beyond it): format-version 2; identity
 partitioning (+ unpartitioned) on int/long/float/double/string/boolean
@@ -873,42 +882,46 @@ def read_iceberg(spark: SparkSession, table_dir: str,
     if not data:
         return spark.createDataFrame([], schema)
 
-    need_seq = bool(deletes)
-    pos_dels = [d for d in deletes if d.kind == "pos"]
-    eq_dels = [d for d in deletes if d.kind == "eq"]
+    out = _project_tasks(spark, meta, read_sch, data, bool(deletes))
 
-    out = _project_tasks(spark, meta, read_sch, data, need_seq)
-
-    for dseq, group in sorted(_by_seq(pos_dels).items()):
-        dels = (spark.read.parquet(*[t.path for t in group])
-                .select(F.regexp_replace("file_path", "^file:/+", "/")
-                        .alias("_del_path"),
-                        F.col("pos").alias("_del_pos")))
-        dels = _delete_side(dels, group)
-        out = out.join(
-            dels,
-            (out["_ice_path"] == dels["_del_path"])
-            & (out["_ice_pos"] == dels["_del_pos"])
-            & (out["_ice_seq"] <= F.lit(dseq)),
-            "left_anti")
-    for (dseq, eq_cols), group in sorted(_eq_groups(eq_dels).items()):
-        # an equality-delete parquet carries WRITE-time column names;
-        # resolve each file's columns to the read schema by field id
+    # one anti-join per delete kind (per equality-column set): each
+    # delete row carries its file's sequence number as _del_seq, so the
+    # spec's sequence rule is part of the join condition
+    groups: dict[tuple, list[DeleteTask]] = {}
+    for d in deletes:
+        groups.setdefault((d.kind, tuple(d.eq_cols)), []).append(d)
+    for (kind, eq_cols), group in sorted(groups.items()):
         sides = []
         for t in group:
-            wsch = _field_by_id(_schema_for_id(meta, t.schema_id))
-            sides.append(
-                spark.read.parquet(t.path).select(
-                    *[F.col(wsch[fid]["name"]).alias(f"_del_{c}")
-                      for fid, c in zip(t.eq_ids, t.eq_cols)]))
+            if kind == "pos":
+                del_cols = [F.regexp_replace("file_path", "^file:/+", "/")
+                            .alias("_del_path"),
+                            F.col("pos").alias("_del_pos")]
+            else:
+                # an equality-delete parquet carries WRITE-time column
+                # names; resolve them to the read schema by field id
+                wsch = _field_by_id(_schema_for_id(meta, t.schema_id))
+                del_cols = [F.col(wsch[fid]["name"]).alias(f"_del_{c}")
+                            for fid, c in zip(t.eq_ids, t.eq_cols)]
+            sides.append(spark.read.parquet(t.path).select(
+                *del_cols, F.lit(t.seq).alias("_del_seq")))
         dels = sides[0]
         for s in sides[1:]:
             dels = dels.unionByName(s)
-        dels = dels.distinct()
-        dels = _delete_side(dels, group)
-        cond = out["_ice_seq"] < F.lit(dseq)
-        for c in eq_cols:
-            cond = cond & out[c].eqNullSafe(dels[f"_del_{c}"])
+        if kind == "pos":
+            dels = _delete_side(dels, group)
+            cond = ((out["_ice_path"] == dels["_del_path"])
+                    & (out["_ice_pos"] == dels["_del_pos"])
+                    & (out["_ice_seq"] <= dels["_del_seq"]))
+        else:
+            # a key deleted by several commits needs only the latest:
+            # data_seq < max(_del_seq) covers every earlier delete
+            dels = _delete_side(
+                dels.groupBy(*[f"_del_{c}" for c in eq_cols])
+                .agg(F.max("_del_seq").alias("_del_seq")), group)
+            cond = out["_ice_seq"] < dels["_del_seq"]
+            for c in eq_cols:
+                cond = cond & out[c].eqNullSafe(dels[f"_del_{c}"])
         out = out.join(dels, cond, "left_anti")
     # normalize to the metadata schema (nullability included) so the
     # read contract is stable however the parquet scan reports leaves
@@ -971,23 +984,10 @@ def record_count(table_dir: str, snapshot_id: int | None = None) -> int:
     return sum(t.record_count for t in data)
 
 
-def _by_seq(tasks: list[DeleteTask]) -> dict[int, list[DeleteTask]]:
-    out: dict[int, list[DeleteTask]] = {}
-    for t in tasks:
-        out.setdefault(t.seq, []).append(t)
-    return out
-
-
-def _eq_groups(tasks: list[DeleteTask]) -> dict[tuple, list[DeleteTask]]:
-    out: dict[tuple, list[DeleteTask]] = {}
-    for t in tasks:
-        out.setdefault((t.seq, tuple(t.eq_cols)), []).append(t)
-    return out
-
-
 # Delete-apply join strategy: delete files are usually metadata-scale
 # (a positional tuple is ~two words), so the anti-join build side is
-# broadcast up to this many rows. Beyond it — or when a foreign writer
+# broadcast up to this many rows, counted across every commit's files
+# of one delete kind. Beyond it — or when a foreign writer
 # omitted record_count — the build side could rival an executor heap
 # at 10^12-row table scale, so the join is pinned SHUFFLE_HASH instead:
 # still a hash anti-join (the delete side is always the smaller
@@ -1213,27 +1213,76 @@ def _write_manifest(table_dir: str, sid: int, seq: int,
     }
 
 
+def _next_ids(parent: dict | None) -> tuple[int, int]:
+    """(snapshot id, sequence number) of the commit built on ``parent``
+    (None: the table's first commit) — the one place both are derived."""
+    p = parent or {}
+    return (max((s["snapshot-id"] for s in p.get("snapshots", [])),
+                default=0) + 1,
+            p.get("last-sequence-number", 0) + 1)
+
+
+def _table_spec(meta: dict) -> tuple[dict, list[str], list[dict]]:
+    """(current schema, partition columns, partition fields)."""
+    schema = _current_schema(meta)
+    by_id = _field_by_id(schema)
+    partition_by = [by_id[f["source-id"]]["name"] for f in
+                    _spec_by_id(meta, meta["default-spec-id"])["fields"]]
+    return schema, partition_by, _partition_fields(schema, partition_by)
+
+
+def _cast_to(df: DataFrame, fields: list[dict]) -> DataFrame:
+    """``df``'s columns named by ``fields``, cast to their types."""
+    return df.select(*[F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
+                       .alias(f["name"]) for f in fields])
+
+
+def _stage(table_dir: str, parent: dict | None, df: DataFrame,
+           schema: dict, partition_fields: list[dict], tag: str,
+           content: int = 0, equality_ids: list[int] | None = None
+           ) -> dict:
+    """Write ``df`` as one file group of ``content`` (0 data, 1
+    positional deletes, 2 equality deletes) under an attempt-unique
+    root, then its manifest; returns the manifest-list entry for the
+    commit built on ``parent``. Data files are laid out hive-style by
+    the partition columns, which the manifest records per file."""
+    sid, seq = _next_ids(parent)
+    root = os.path.join(table_dir, "data", f"{tag}-{sid}-{_attempt_id()}")
+    w = df.write.mode("errorifexists")
+    if content == 0 and partition_fields:
+        w = w.partitionBy(*[p["name"] for p in partition_fields])
+    w.parquet(root)
+    part_types = {p["name"]: p["ice_type"] for p in partition_fields}
+    entries = [_data_file_entry(p, _hive_partition(p, root, part_types),
+                                schema, content, equality_ids)
+               for p in _list_parquet(root)]
+    return _write_manifest(table_dir, sid, seq, entries, partition_fields,
+                           schema, tag)
+
+
 def _commit_snapshot(table_dir: str, manifest_entries: list[dict],
                      operation: str,
                      parent_meta: dict | None,
                      schema: dict,
                      partition_fields: list[dict]) -> int:
-    """Write manifest list + new vN.metadata.json + version-hint."""
+    """Write manifest list + new vN.metadata.json + version-hint. The
+    snapshot lists the parent's manifests plus ``manifest_entries``,
+    except a `replace`, which lists only its own."""
     md = _meta_dir(table_dir)
     os.makedirs(md, exist_ok=True)
+    sid, seq = _next_ids(parent_meta)
     if parent_meta is not None:
-        sid = max((s["snapshot-id"]
-                   for s in parent_meta.get("snapshots", [])),
-                  default=0) + 1
-        seq = parent_meta.get("last-sequence-number", 0) + 1
         snaps = list(parent_meta.get("snapshots", []))
         slog = list(parent_meta.get("snapshot-log", []))
         parent_id = parent_meta.get("current-snapshot-id")
         base_v = parent_meta.get("_loaded-version",
                                  _read_version_hint(table_dir))
+        cur = select_snapshot(parent_meta)
+        if operation != "replace" and cur is not None:
+            manifest_entries = avroio.read_container(
+                _local(cur["manifest-list"]))[1] + manifest_entries
     else:
-        sid, seq, snaps, slog, parent_id = 1, 1, [], [], None
-        base_v = 0
+        snaps, slog, parent_id, base_v = [], [], None, 0
 
     mlist = os.path.join(md, f"snap-{sid}-{_attempt_id()}.avro")
     avroio.write_container(mlist, _manifest_list_schema(),
@@ -1295,14 +1344,6 @@ def _commit_snapshot(table_dir: str, manifest_entries: list[dict],
     return sid
 
 
-def _existing_manifests(meta: dict) -> list[dict]:
-    snap = select_snapshot(meta)
-    if snap is None:
-        return []
-    _, manifests = avroio.read_container(_local(snap["manifest-list"]))
-    return manifests
-
-
 def _partition_fields(schema: dict, partition_by: list[str]) -> list:
     by_name = _field_by_name(schema)
     out = []
@@ -1342,45 +1383,24 @@ def write_iceberg(df: DataFrame, table_dir: str,
 def append_iceberg(df: DataFrame, table_dir: str) -> int:
     """Append a snapshot to an existing table (schema must match by
     name; partitioning is the table's)."""
-    meta = load_metadata(table_dir)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(_current_schema(meta))
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    return _append(df, table_dir, partition_by=partition_by or None,
-                   parent=meta)
+    return _append(df, table_dir, partition_by=None,
+                   parent=load_metadata(table_dir))
 
 
 def _append(df: DataFrame, table_dir: str,
             partition_by: list[str] | None, parent: dict | None) -> int:
+    """Commit ``df`` as an append on ``parent``, or as a new table
+    partitioned by ``partition_by`` when ``parent`` is None (an append
+    keeps the table's own partitioning)."""
     if parent is None:
         schema = _ice_schema_json(df)
+        pfields = _partition_fields(schema, partition_by or [])
     else:
-        schema = _current_schema(parent)
-        df = df.select(*[
-            F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
-            .alias(f["name"]) for f in schema["fields"]])
-    pfields = _partition_fields(schema, partition_by or [])
-    sid_next = max((s["snapshot-id"]
-                    for s in (parent or {}).get("snapshots", [])),
-                   default=0) + 1
-    seq_next = (parent or {}).get("last-sequence-number", 0) + 1
-    data_root = os.path.join(table_dir, "data",
-                         f"snap-{sid_next}-{_attempt_id()}")
-    w = df.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    entries = []
-    for path in _list_parquet(data_root):
-        part = _hive_partition(path, data_root, part_types)
-        entries.append(_data_file_entry(path, part, schema))
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "data")
-    manifests = _existing_manifests(parent) if parent else []
-    return _commit_snapshot(table_dir, manifests + [manifest],
-                            "append", parent, schema, pfields)
+        schema, _, pfields = _table_spec(parent)
+        df = _cast_to(df, schema["fields"])
+    manifest = _stage(table_dir, parent, df, schema, pfields, "data")
+    return _commit_snapshot(table_dir, [manifest], "append", parent,
+                            schema, pfields)
 
 
 # promotions the spec allows for primitives (we support the two that
@@ -1492,33 +1512,19 @@ def delete_where(spark: SparkSession, table_dir: str,
     if snap is None:
         raise IcebergError("cannot delete from an empty table")
     data, _ = plan_scan(meta, snap)
-    dels_root = os.path.join(
-        table_dir, "data",
-        f"deletes-{snap['snapshot-id'] + 1}-{_attempt_id()}")
+    schema, _, pfields = _table_spec(meta)
     # evaluate the condition on the field-id-projected view so it
     # names CURRENT columns even over files written pre-rename
-    (_project_tasks(spark, meta, _current_schema(meta), data,
-                    need_seq=True)
-     .filter(F.expr(condition))
-     .select(F.concat(F.lit("file://"), F.col("_ice_path"))
-             .alias("file_path"),
-             F.col("_ice_pos").alias("pos"))
-     .coalesce(1)
-     .write.mode("errorifexists").parquet(dels_root))
-    schema = _current_schema(meta)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    pfields = _partition_fields(
-        schema, [by_id[f["source-id"]]["name"] for f in spec["fields"]])
-    seq_next = meta["last-sequence-number"] + 1
-    sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    entries = [_data_file_entry(p, {}, schema, content=1)
-               for p in _list_parquet(dels_root)]
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "posdel")
-    return _commit_snapshot(table_dir,
-                            _existing_manifests(meta) + [manifest],
-                            "delete", meta, schema, pfields)
+    rows = (_project_tasks(spark, meta, schema, data, need_seq=True)
+            .filter(F.expr(condition))
+            .select(F.concat(F.lit("file://"), F.col("_ice_path"))
+                    .alias("file_path"),
+                    F.col("_ice_pos").alias("pos"))
+            .coalesce(1))
+    manifest = _stage(table_dir, meta, rows, schema, pfields, "posdel",
+                      content=1)
+    return _commit_snapshot(table_dir, [manifest], "delete", meta,
+                            schema, pfields)
 
 
 def add_equality_deletes(spark: SparkSession, table_dir: str,
@@ -1529,31 +1535,17 @@ def add_equality_deletes(spark: SparkSession, table_dir: str,
     ``values`` is deleted. Rows appended AFTER this snapshot are NOT
     affected — the sequence-number rule the tests pin."""
     meta = load_metadata(table_dir)
-    schema = _current_schema(meta)
+    schema, _, pfields = _table_spec(meta)
     by_name = _field_by_name(schema)
     for c in eq_cols:
         if c not in by_name:
             raise IcebergError(f"equality column {c!r} not in schema")
-    sid_next = max((s["snapshot-id"] for s in meta["snapshots"]),
-                   default=0) + 1
-    seq_next = meta["last-sequence-number"] + 1
-    dels_root = os.path.join(table_dir, "data",
-                         f"eqdel-{sid_next}-{_attempt_id()}")
-    (values.select(*eq_cols).distinct().coalesce(1)
-     .write.mode("errorifexists").parquet(dels_root))
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    pfields = _partition_fields(
-        schema, [by_id[f["source-id"]]["name"] for f in spec["fields"]])
-    eq_ids = [by_name[c]["id"] for c in eq_cols]
-    entries = [_data_file_entry(p, {}, schema, content=2,
-                                equality_ids=eq_ids)
-               for p in _list_parquet(dels_root)]
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "eqdel")
-    return _commit_snapshot(table_dir,
-                            _existing_manifests(meta) + [manifest],
-                            "delete", meta, schema, pfields)
+    manifest = _stage(table_dir, meta,
+                      values.select(*eq_cols).distinct().coalesce(1),
+                      schema, pfields, "eqdel", content=2,
+                      equality_ids=[by_name[c]["id"] for c in eq_cols])
+    return _commit_snapshot(table_dir, [manifest], "delete", meta,
+                            schema, pfields)
 
 
 def snapshot_ids(table_dir: str) -> list[int]:
@@ -1650,31 +1642,11 @@ def compact_table(spark: SparkSession, table_dir: str) -> int:
     still sees pre-compaction states until `expire_snapshots`.
     Returns the new snapshot id."""
     meta = load_metadata(table_dir)
-    snap = select_snapshot(meta)
-    if snap is None:
+    if select_snapshot(meta) is None:
         raise IcebergError("cannot compact an empty table")
-    schema = _current_schema(meta)
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    pfields = _partition_fields(schema, partition_by)
-    df = read_iceberg(spark, table_dir)
-    sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq_next = meta["last-sequence-number"] + 1
-    data_root = os.path.join(table_dir, "data",
-                         f"snap-{sid_next}-{_attempt_id()}")
-    w = df.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    entries = []
-    for path in _list_parquet(data_root):
-        part = _hive_partition(path, data_root, part_types)
-        entries.append(_data_file_entry(path, part, schema))
-    manifest = _write_manifest(table_dir, sid_next, seq_next, entries,
-                               pfields, schema, "compact")
+    schema, _, pfields = _table_spec(meta)
+    manifest = _stage(table_dir, meta, read_iceberg(spark, table_dir),
+                      schema, pfields, "compact")
     return _commit_snapshot(table_dir, [manifest], "replace", meta,
                             schema, pfields)
 
@@ -1755,6 +1727,26 @@ def _write_version_hint(md: str, v: int) -> None:
     os.replace(tmp, os.path.join(md, "version-hint.text"))
 
 
+def _reachable(meta: dict, snapshot_ids: set[int]) -> set[str]:
+    """Local paths of every manifest list, manifest and data/delete file
+    the snapshots ``snapshot_ids`` reference (manifests are immutable,
+    so one shared by several snapshots is read once)."""
+    out: set[str] = set()
+    for s in meta.get("snapshots", []):
+        if s["snapshot-id"] not in snapshot_ids:
+            continue
+        mlist = _local(s["manifest-list"])
+        out.add(mlist)
+        for m in avroio.read_container(mlist)[1]:
+            mpath = _local(m["manifest_path"])
+            if mpath in out:
+                continue
+            out.add(mpath)
+            out.update(_local(e["data_file"]["file_path"])
+                       for e in avroio.read_container(mpath)[1])
+    return out
+
+
 def expire_snapshots(table_dir: str, keep_last: int | None = None,
                      older_than_ms: int | None = None) -> dict:
     """Drop expired snapshots from table metadata and delete every
@@ -1784,25 +1776,9 @@ def expire_snapshots(table_dir: str, keep_last: int | None = None,
     if not expired:
         return {"expired_snapshots": 0, "deleted_files": 0}
 
-    def _referenced(snapshot_ids) -> set:
-        refs = set()
-        for s in snaps:
-            if s["snapshot-id"] not in snapshot_ids:
-                continue
-            mlist = _local(s["manifest-list"])
-            refs.add(mlist)
-            _, mfs = avroio.read_container(mlist)
-            for m in mfs:
-                mpath = _local(m["manifest_path"])
-                refs.add(mpath)
-                _, entries = avroio.read_container(mpath)
-                for e in entries:
-                    refs.add(_local(e["data_file"]["file_path"]))
-        return refs
-
-    keep_refs = _referenced(keep)
-    drop_refs = _referenced({s["snapshot-id"] for s in expired})
-    to_delete = sorted(drop_refs - keep_refs)
+    to_delete = sorted(
+        _reachable(meta, {s["snapshot-id"] for s in expired})
+        - _reachable(meta, keep))
     meta["snapshots"] = [s for s in snaps if s["snapshot-id"] in keep]
     meta["snapshot-log"] = [e for e in meta.get("snapshot-log", [])
                             if e["snapshot-id"] in keep]
@@ -1834,18 +1810,8 @@ def remove_orphan_files(table_dir: str,
     chain walk, same cost as planning); the directory walk is O(files
     on disk) — this is a MAINTENANCE job, never on the read path."""
     meta = load_metadata(table_dir)
-    refs: set[str] = set()
-    for s in meta.get("snapshots", []):
-        mlist = _local(s["manifest-list"])
-        refs.add(os.path.realpath(mlist))
-        _, mfs = avroio.read_container(mlist)
-        for m in mfs:
-            mpath = _local(m["manifest_path"])
-            refs.add(os.path.realpath(mpath))
-            _, entries = avroio.read_container(mpath)
-            for e in entries:
-                refs.add(os.path.realpath(
-                    _local(e["data_file"]["file_path"])))
+    refs = {os.path.realpath(p) for p in _reachable(
+        meta, {s["snapshot-id"] for s in meta.get("snapshots", [])})}
     cutoff = time.time() - 86_400 if older_than_ms is None \
         else older_than_ms / 1000.0
     md = os.path.realpath(_meta_dir(table_dir))
@@ -1895,7 +1861,7 @@ def merge_upsert(spark: SparkSession, table_dir: str,
     ``updates`` must carry exactly the table's columns and ``deletes``
     exactly ``keys``; a mismatch raises IcebergError."""
     meta = load_metadata(table_dir)
-    schema = _current_schema(meta)
+    schema, partition_by, pfields = _table_spec(meta)
     by_name = _field_by_name(schema)
     for k in keys:
         if k not in by_name:
@@ -1908,51 +1874,18 @@ def merge_upsert(spark: SparkSession, table_dir: str,
         raise IcebergError(
             f"deletes columns {sorted(deletes.columns)} != merge keys "
             f"{sorted(keys)}")
-    spec = _spec_by_id(meta, meta["default-spec-id"])
-    by_id = _field_by_id(schema)
-    partition_by = [by_id[f["source-id"]]["name"]
-                    for f in spec["fields"]]
-    pfields = _partition_fields(schema, partition_by)
-    updates = updates.select(*[
-        F.col(f["name"]).cast(_ice_type_to_spark(f["type"]))
-        .alias(f["name"]) for f in schema["fields"]])
+    updates = _cast_to(updates, schema["fields"])
     purge = updates.select(*keys)
     if deletes is not None:
-        purge = purge.unionByName(deletes.select(*[
-            F.col(k).cast(_ice_type_to_spark(by_name[k]["type"]))
-            .alias(k) for k in keys]))
-
-    sid_next = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-    seq_next = meta["last-sequence-number"] + 1
-    att = _attempt_id()
-
-    dels_root = os.path.join(table_dir, "data",
-                             f"upsert-del-{sid_next}-{att}")
-    (purge.distinct().coalesce(1)
-     .write.mode("errorifexists").parquet(dels_root))
-    eq_ids = [by_name[k]["id"] for k in keys]
-    del_entries = [_data_file_entry(p, {}, schema, content=2,
-                                    equality_ids=eq_ids)
-                   for p in _list_parquet(dels_root)]
-    del_manifest = _write_manifest(table_dir, sid_next, seq_next,
-                                   del_entries, pfields, schema,
-                                   "upsert-del")
-
-    data_root = os.path.join(table_dir, "data",
-                             f"upsert-{sid_next}-{att}")
-    w = updates.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(data_root)
-    part_types = {p["name"]: p["ice_type"] for p in pfields}
-    data_entries = [
-        _data_file_entry(p, _hive_partition(p, data_root, part_types),
-                         schema)
-        for p in _list_parquet(data_root)]
-    data_manifest = _write_manifest(table_dir, sid_next, seq_next,
-                                    data_entries, pfields, schema,
-                                    "upsert-data")
-    return _commit_snapshot(
-        table_dir,
-        _existing_manifests(meta) + [del_manifest, data_manifest],
-        "overwrite", meta, schema, pfields)
+        purge = purge.unionByName(
+            _cast_to(deletes, [by_name[k] for k in keys]))
+    del_manifest = _stage(table_dir, meta, purge.distinct().coalesce(1),
+                          schema, pfields, "upsert-del", content=2,
+                          equality_ids=[by_name[k]["id"] for k in keys])
+    # a delta is usually far smaller than its input's partition count:
+    # rebalance lets AQE coalesce it into as few files as its size needs
+    data_manifest = _stage(table_dir, meta,
+                           updates.hint("rebalance", *partition_by),
+                           schema, pfields, "upsert-data")
+    return _commit_snapshot(table_dir, [del_manifest, data_manifest],
+                            "overwrite", meta, schema, pfields)

@@ -359,6 +359,34 @@ def test_large_delete_side_pins_shuffle_hash(spark, tmp_path, monkeypatch):
     assert _rows(got_df) == want
 
 
+def test_one_anti_join_per_delete_kind(spark, tmp_path):
+    """Deletes from many commits apply in ONE anti-join per kind (per
+    equality-column set), each row keeping its own commit's sequence
+    rule: three equality-delete commits and two positional-delete
+    commits plan two joins, and rows appended after an equality delete
+    survive it while a later one on the same column still applies."""
+    t = str(tmp_path / "t")
+    ice.write_iceberg(
+        spark.range(60).selectExpr("id as k", "id % 6 as g"), t)
+    for g in (0, 1, 2):
+        ice.add_equality_deletes(
+            spark, t, spark.createDataFrame([(g,)], "g long"), ["g"])
+    ice.delete_where(spark, t, "k < 10")
+    ice.delete_where(spark, t, "k >= 55")
+    got = ice.read_iceberg(spark, t)
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftAnti") == 2
+    want = [k for k in range(60) if k % 6 > 2 and 10 <= k < 55]
+    assert sorted(r.k for r in got.collect()) == want
+
+    ice.append_iceberg(spark.createDataFrame([(100, 0), (101, 3)],
+                                             "k long, g long"), t)
+    ice.add_equality_deletes(
+        spark, t, spark.createDataFrame([(3,)], "g long"), ["g"])
+    assert sorted(r.k for r in ice.read_iceberg(spark, t).collect()) == \
+        [k for k in want if k % 6 != 3] + [100]
+
+
 def test_foreign_manifest_without_counts_avoids_broadcast(spark, tmp_path):
     """A DeleteTask with record_count=-1 (foreign writer omitted the
     optional stat) must be treated as too big to broadcast."""
@@ -984,3 +1012,110 @@ def test_unroundtrippable_partition_source_is_loud(spark, tmp_path,
     with pytest.raises(ice.IcebergError, match="cannot round-trip"):
         ice.write_iceberg(df, t, partition_by=["d"])
     assert not os.path.exists(os.path.join(t, "metadata"))
+
+
+# ---------------------------------------------------------------------
+# a crash at each step of each writer's commit
+# ---------------------------------------------------------------------
+
+class _Crash(BaseException):
+    """A process death mid-commit (no handler in the layer catches a
+    BaseException, so nothing runs after the crash point)."""
+
+
+def _crash(*_a, **_k):
+    raise _Crash
+
+
+# writer -> (its call on the (k, v) table, its effect on the rows)
+_WRITERS = {
+    "append": (
+        lambda spark, t: ice.append_iceberg(_kv(spark, [("z", 9)]), t),
+        lambda rows: rows + [("z", 9)]),
+    "delete_where": (
+        lambda spark, t: ice.delete_where(spark, t, "v = 1"),
+        lambda rows: [r for r in rows if r[1] != 1]),
+    "add_equality_deletes": (
+        lambda spark, t: ice.add_equality_deletes(
+            spark, t, _kv(spark, [("a", 0)]).select("k"), ["k"]),
+        lambda rows: [r for r in rows if r[0] != "a"]),
+    "merge_upsert": (
+        lambda spark, t: ice.merge_upsert(
+            spark, t, _kv(spark, [("a", 7)]), ["k"]),
+        lambda rows: [r for r in rows if r[0] != "a"] + [("a", 7)]),
+    "compact_table": (
+        lambda spark, t: ice.compact_table(spark, t),
+        lambda rows: rows),
+}
+
+
+def _table_files(t: str) -> set[str]:
+    """Every file under the table except the metadata versions and the
+    hint (which only expiry manages)."""
+    return {os.path.realpath(os.path.join(d, n))
+            for d, _, names in os.walk(t) for n in names
+            if not (n.endswith(".metadata.json")
+                    or n == "version-hint.text")}
+
+
+@pytest.mark.parametrize("step", ["files", "manifests", "hint"])
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_crash_at_each_commit_step_recovers(spark, tmp_path, monkeypatch,
+                                            writer, step):
+    """A writer that dies after its file groups are written, after its
+    manifests are written, or after vN is published but before the
+    hint moves: the next reader sees exactly the state before the
+    commit (after it, in the hint case), the next writer commits on
+    top, and remove_orphan_files reclaims the failed attempt's files
+    with every read intact."""
+    call, effect = _WRITERS[writer]
+    t = str(tmp_path / "t")
+    ice.write_iceberg(_kv(spark, [("a", 1), ("b", 2), ("c", 3)]), t)
+    ice.delete_where(spark, t, "k = 'c'")  # a delete to compact away
+    rows = [("a", 1), ("b", 2)]
+    n_snaps = len(ice.snapshot_ids(t))
+
+    if step == "files":
+        monkeypatch.setattr(ice, "_write_manifest", _crash)
+    elif step == "manifests":
+        write = avroio.write_container
+
+        def write_or_crash(path, *a, **k):
+            if os.path.basename(path).startswith("snap-"):  # the list
+                raise _Crash
+            return write(path, *a, **k)
+
+        monkeypatch.setattr(avroio, "write_container", write_or_crash)
+    else:
+        monkeypatch.setattr(ice, "_write_version_hint", _crash)
+    with pytest.raises(_Crash):
+        call(spark, t)
+    monkeypatch.undo()
+
+    committed = step == "hint"
+    if committed:
+        rows = effect(rows)
+    assert _rows(ice.read_iceberg(spark, t)) == sorted(rows)
+    assert len(ice.snapshot_ids(t)) == n_snaps + committed
+    meta = ice.load_metadata(t)
+    live = {os.path.realpath(p) for p in
+            ice._reachable(meta, set(ice.snapshot_ids(t)))}
+    orphans = _table_files(t) - live
+    if not committed:
+        assert any(p.endswith(".parquet") for p in orphans)
+    if step == "manifests":
+        assert any(os.path.basename(p).startswith("m-") for p in orphans)
+
+    call(spark, t)
+    rows = effect(rows)
+    assert _rows(ice.read_iceberg(spark, t)) == sorted(rows)
+
+    future = int((time.time() + 60) * 1000)
+    ice.remove_orphan_files(t, older_than_ms=future)
+    meta = ice.load_metadata(t)
+    assert _table_files(t) == {os.path.realpath(p) for p in ice._reachable(
+        meta, set(ice.snapshot_ids(t)))}
+    assert not orphans & _table_files(t)
+    assert _rows(ice.read_iceberg(spark, t)) == sorted(rows)
+    assert _rows(ice.read_iceberg(spark, t, snapshot_id=1)) == \
+        [("a", 1), ("b", 2), ("c", 3)]

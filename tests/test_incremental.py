@@ -245,3 +245,18 @@ def test_records_table_commit_is_file_level(state):
     data, deletes = ice.plan_scan(meta, spliced)
     assert built_files < {t.path for t in data}
     assert [(d.kind, d.eq_cols) for d in deletes] == [("eq", ["url"])]
+
+
+def test_delta_adds_one_file_of_each_kind_per_table(state):
+    """A small delta lands as ONE data file next to its one
+    equality-delete file in every spliced table, however many
+    partitions the frame handed to merge_upsert had."""
+    state_dir, _, _, _ = state
+    for tbl in ("records", "addresses", "buildings",
+                "pip_winners", "knn_winners"):
+        meta = ice.load_metadata(os.path.join(state_dir, tbl))
+        built, spliced = meta["snapshots"]
+        built_files = {t.path for t in ice.plan_scan(meta, built)[0]}
+        data, deletes = ice.plan_scan(meta, spliced)
+        assert len({t.path for t in data} - built_files) == 1, tbl
+        assert [d.kind for d in deletes] == ["eq"], tbl

@@ -3,7 +3,8 @@ spark-submit surfaces of the merge agree with each other and with an
 in-process ``run_merge`` on one fixture — same fingerprint (the one
 definition in plans/merge.py), same assignment count — and the merge
 job leaves no lineage-barrier dir behind, neither under ``--out`` nor
-in the temp dir."""
+in the temp dir; ``run_merge`` itself leaves no cache behind but the
+one its returned tile map reads."""
 
 from __future__ import annotations
 
@@ -67,3 +68,26 @@ def test_merge_jobs_agree_and_leave_no_barriers(spark, tmp_path):
     assert merged["write"]["rows_written"] == n
     assert not os.path.exists(os.path.join(merge_out, "_barrier"))
     assert _temp_barriers() == before
+
+
+def test_run_merge_releases_its_caches(spark, tmp_path):
+    """run_merge unpersists each frame it caches once a lineage barrier
+    holds its rows, so repeated merges (one per streaming microbatch)
+    keep at most one cache each: the tile-count frame that the
+    returned lazy tile_map still reads. The output is unchanged."""
+    from mergeaddressesandbuildings_spark.operators import tiling
+    from mergeaddressesandbuildings_spark.plans.merge import (
+        fingerprint, run_merge)
+    from mergeaddressesandbuildings_spark.sources import pages as pg
+
+    jsc = spark.sparkContext._jsc
+    pages, existing = pg.pages_df(spark, 200), pg.existing_osm_df(spark, 200)
+    sizes = [jsc.getPersistentRDDs().size()]  # the session is shared
+    for i in range(2):
+        res = run_merge(spark, pages, existing,
+                        barrier_dir=str(tmp_path / f"barrier{i}"))
+        sizes.append(jsc.getPersistentRDDs().size())
+    assert max(b - a for a, b in zip(sizes, sizes[1:])) <= 1, sizes
+    assert fingerprint(tiling.assign_tiles(res.assignments,
+                                           tm=res.tile_map)) == \
+        (-5992241864211959338, 193, 29)
