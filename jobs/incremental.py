@@ -153,8 +153,7 @@ def main() -> None:
                         else pg.existing_osm_df(spark, args.pages_count))
         m = inc.full_build(spark, pages, existing, args.state,
                            level=args.level or config.CELL_LEVEL)
-        out.update({"n_records": m["records"],
-                    "n_addresses": m["addresses"],
+        out.update({"n_addresses": m["addresses"],
                     "n_buildings": m["buildings"]})
 
     elif args.cmd == "delta":

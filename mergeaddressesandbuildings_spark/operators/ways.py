@@ -5,18 +5,17 @@ flows into the same merge pipeline as extracted web-page records.
 Spark shape: ``posexplode(node_refs)`` keeps each ref's position, an
 equi-join on node id attaches coordinates, and an ordered
 ``array_agg`` (sorted by position inside the group) rebuilds the ring —
-all shuffles are on the node-id / way-id keys, no per-row Python. The
-ring-derived columns (bbox, centroid, area, cell cover) are then
-computed by one Arrow pass sharing the extraction kernels, yielding
-rows in the engine's buildings schema.
+all shuffles are on the node-id / way-id keys, no per-row Python.
+``sources/osm_xml.to_existing_table`` shapes the rings as existing-OSM
+rows, and ``extract.existing_to_tables`` derives the buildings schema
+from them (bbox, centroid, area, cell cover), as for every other
+existing-state source.
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
-
-from mergeaddressesandbuildings_spark import config
 
 
 def resolve_rings(nodes: DataFrame, ways: DataFrame) -> DataFrame:
@@ -55,50 +54,6 @@ def resolve_rings(nodes: DataFrame, ways: DataFrame) -> DataFrame:
             F.transform("_ordered", lambda s: s["lat"]).alias("ring_lats"),
             F.transform("_ordered", lambda s: s["lon"]).alias("ring_lons"),
         )
-    )
-
-
-def rings_to_buildings(rings: DataFrame,
-                       level: int = config.CELL_LEVEL) -> DataFrame:
-    """Ring table (id, tags, ring_lats, ring_lons[, hole_lats,
-    hole_lons]) → the engine's buildings schema (bbox, centroid,
-    shoelace area with holes subtracted, Morton cell cover) — PURE
-    column expressions sharing the extraction's derivation
-    (functions/geom_sql.py, functions/cells_sql.py), so derived values
-    are identical regardless of which source produced the ring."""
-    from mergeaddressesandbuildings_spark.functions import cells_sql, geom_sql
-
-    if "hole_lats" in rings.columns:
-        hole_lats = F.col("hole_lats")
-        hole_lons = F.col("hole_lons")
-    else:
-        hole_lats = F.lit(None).cast("array<array<double>>")
-        hole_lons = F.lit(None).cast("array<array<double>>")
-    ring_lats = F.col("ring_lats")
-    ring_lons = F.col("ring_lons")
-    min_lat = F.array_min(ring_lats)
-    min_lon = F.array_min(ring_lons)
-    max_lat = F.array_max(ring_lats)
-    max_lon = F.array_max(ring_lons)
-    clat = geom_sql.centroid_expr(ring_lats)
-    clon = geom_sql.centroid_expr(ring_lons)
-    return rings.filter(F.size("ring_lats") >= 4).select(
-        F.col("id").alias("building_id"),
-        "tags",
-        ring_lats.alias("ring_lats"),
-        ring_lons.alias("ring_lons"),
-        hole_lats.alias("hole_lats"),
-        hole_lons.alias("hole_lons"),
-        min_lat.alias("min_lat"), min_lon.alias("min_lon"),
-        max_lat.alias("max_lat"), max_lon.alias("max_lon"),
-        clat.alias("centroid_lat"), clon.alias("centroid_lon"),
-        geom_sql.poly_area_m2_expr(
-            ring_lats, ring_lons, hole_lats, hole_lons
-        ).alias("area_m2"),
-        cells_sql.cell_expr(clat, clon, level).alias("cell"),
-        cells_sql.bbox_cover_cells_expr(
-            min_lat, min_lon, max_lat, max_lon, level
-        ).alias("cells"),
     )
 
 

@@ -10,17 +10,20 @@ results in Iceberg tables (sources/iceberg.py) keyed so a url-level
 change set can be SPLICED in:
 
     state tables (all under one state dir)
-      records      extract_records output, keyed by url   [O(pages)]
       addresses    post-J4 address rows, keyed by url     [O(elems)]
       buildings    post-J3 survivors ∪ existing ways,
                    keyed by url ('osm://existing' rows
                    are the static OSM state)              [O(elems)]
-      pip_winners  §8.4(1) winners + the address CELL,
-                   keyed by cell                          [O(elems)]
-      knn_winners  §8.4(2) winners, same layout           [O(elems)]
+      winners      §8.4(1) PIP ∪ §8.4(2) kNN winners (told
+                   apart by ``method``) + the address
+                   CELL, keyed by cell                    [O(elems)]
       ex_nodes     existing OSM address nodes (static)
       meta.json    the merge parameters the state was built with
                    (level, cutoff, …) — an increment MUST reuse them
+
+so a delta commits three splices (addresses, buildings, winners).
+Extracted records are not kept: a changed url's old cells are on its
+``addresses`` and ``buildings`` rows.
 
 A splice is merge-on-read: one `merge_upsert` snapshot per table that
 adds an equality-delete file on the splice key plus the key's new
@@ -35,7 +38,8 @@ Change propagation is bounded by the same invariant the spatial join
 already asserts (§8.5: kNN cutoff ≤ one cell width at ``level``), so
 Morton-ring expansion gives an EXACT affected closure:
 
-    base   = cells touched by the changed urls' old ∪ new records
+    base   = cells touched by the changed urls' old address and
+             building rows ∪ the delta's post-dedupe survivors
              (address cells + full building bbox covers)
     ring1  = base ∪ its 8-neighbors   → every address whose effective
              candidate set (PIP containment or kNN ≤ cutoff) can have
@@ -44,7 +48,7 @@ Morton-ring expansion gives an EXACT affected closure:
              candidate for a ring1 address has a cover cell ∈ ring2
 
 so the spatial join re-runs ONLY over (addresses in ring1) ×
-(buildings covering ring2), and the winner tables are spliced BY
+(buildings covering ring2), and the winner table is spliced BY
 CELL: every winner that can change sits in a ring1 cell (sub
 addresses by construction; removed urls' addresses because their
 cells are in base ⊆ ring1), so "delete ring1 cells, insert the
@@ -54,20 +58,24 @@ CANNOT be spliced — §8.4's per-building vote
 (conflict/keep-node/merged) aggregates over ALL addresses assigned to
 a building, so one spliced winner can flip the decision of an
 untouched address — therefore decisions/output-sets/tiling recompute
-globally from the spliced winner tables. Those stages are
+globally from the spliced winner table. Those stages are
 element-scale hash aggs + window passes (no html, no geometry
 kernels): at the 10^12-page target they are noise next to the
 extraction and PIP/kNN kernels this plan avoids re-running.
 
 Exactness contract (tested: incremental == full rebuild, fingerprint
 equal): J4/J3 dedupe are row-local given the static existing state,
-winner picks are deterministic per candidate set, and the closure
-above is a superset of every row whose candidate set changed. Every
-stage is plans/merge.py's own function — ``element_stage`` in
-``full_build`` and ``new_elements`` for a delta, ``winner_stage`` for
-the build and for the closure sub-run (this module only joins the
-address cell on as the splice key), ``output_stage`` in
-``current_outputs`` — so the two paths cannot drift apart.
+so a record dedupe dropped was never in the join universe, and a delta
+changes that universe only by the changed urls' old element rows
+(removed) and the delta's survivors (added) — exactly the rows ``base``
+is taken from. Winner picks are deterministic per candidate set, and
+the closure above is a superset of every row whose candidate set
+changed. Every stage is plans/merge.py's own function —
+``element_stage`` in ``full_build`` and ``new_elements`` for a delta,
+``winner_stage`` for the build and for the closure sub-run (this
+module only joins the address cell on as the splice key),
+``output_stage`` in ``current_outputs`` — so the two paths cannot
+drift apart.
 
 The change-set contract: ``page_changes`` carries, per changed url,
 the url's FULL new page state (its current latest capture; multiple
@@ -86,6 +94,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mergeaddressesandbuildings_spark import config
@@ -94,8 +103,7 @@ from mergeaddressesandbuildings_spark.operators import decisions as dec, extract
 from mergeaddressesandbuildings_spark.plans import merge
 from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
-_TABLES = ("records", "addresses", "buildings",
-           "pip_winners", "knn_winners", "ex_nodes")
+_TABLES = ("addresses", "buildings", "winners", "ex_nodes")
 
 
 def _t(state_dir: str, name: str) -> str:
@@ -156,14 +164,21 @@ def _closure_rings(cell_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ring1, ring2
 
 
-def _record_cells(records: DataFrame) -> DataFrame:
-    """One (cell) row per cell a record table touches: address cells
-    plus every building bbox-cover cell (covers are frozen into the
-    rows at the level the state was built with)."""
-    addr = records.filter(F.col("kind") == "address").select("cell")
-    bld = (records.filter(F.col("kind") == "building")
-           .select(F.explode("cells").alias("cell")))
-    return addr.unionByName(bld).distinct()
+def _element_cells(addresses: DataFrame, buildings: DataFrame) -> DataFrame:
+    """One (cell) row per cell an (addresses, buildings) pair touches:
+    address cells plus every building bbox-cover cell (covers are
+    frozen into the rows at the level the state was built with)."""
+    return addresses.select("cell").unionByName(
+        buildings.select(F.explode("cells").alias("cell")))
+
+
+def _with_cell(winners: tuple[DataFrame, DataFrame],
+               addresses: DataFrame) -> DataFrame:
+    """(PIP, kNN) winners → one frame carrying each winner's address
+    cell, the winner table's splice key."""
+    pip_w, knn_w = winners
+    return pip_w.unionByName(knn_w).join(
+        addresses.select("addr_id", "cell"), "addr_id")
 
 
 def full_build(spark: SparkSession, pages: DataFrame,
@@ -185,7 +200,7 @@ def full_build(spark: SparkSession, pages: DataFrame,
 
     # file layout: each table spread over 2× the session's parallelism
     # in files, grouped by its splice key (url hash, or cell range for
-    # the winner tables), so every later scan runs at full parallelism
+    # the winner table), so every later scan runs at full parallelism
     # and each file's manifest bounds on the key stay tight
     nfiles = spark.sparkContext.defaultParallelism * 2
 
@@ -193,8 +208,9 @@ def full_build(spark: SparkSession, pages: DataFrame,
         ice.write_iceberg(df, _t(state_dir, name))
         return ice.read_iceberg(spark, _t(state_dir, name))
 
-    records = write(extract.extract_records(pages, level=level)
-                    .repartition(nfiles, "url"), "records")
+    # persisted: addresses and buildings both branch from it
+    records = (extract.extract_records(pages, level=level)
+               .persist(StorageLevel.MEMORY_AND_DISK))
 
     addresses, buildings, ex_nodes, ex_ways = merge.element_stage(
         records, existing_osm, level)
@@ -206,16 +222,16 @@ def full_build(spark: SparkSession, pages: DataFrame,
 
     addresses = write(addresses.repartition(nfiles, "url"), "addresses")
     buildings = write(buildings.repartition(nfiles, "url"), "buildings")
+    records.unpersist()
     if ex_ways is not None:
         ex_ways.unpersist()
 
-    acells = addresses.select("addr_id", "cell")
     winners = merge.winner_stage(addresses, buildings, knn_cutoff_m,
                                  broadcast_max)
-    for name, w in zip(("pip_winners", "knn_winners"), winners):
-        ice.write_iceberg(w.join(acells, "addr_id")
-                          .repartitionByRange(nfiles, "cell"),
-                          _t(state_dir, name))
+    ice.write_iceberg(_with_cell(winners, addresses)
+                      .repartitionByRange(nfiles, "cell"),
+                      _t(state_dir, "winners"))
+    for w in winners:
         w.unpersist()
 
     meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
@@ -269,41 +285,45 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     n_new_records = new_records.count()
     _lap("extract_delta")
 
-    records_tbl = _t(state_dir, "records")
-    old_changed = (ice.read_iceberg(spark, records_tbl)
-                   .join(changed_urls, "url", "left_semi")
-                   .persist())
-    n_old_records = old_changed.count()
+    # the changed urls' old element rows, read before any splice
+    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
+    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
+    old_addr = addresses.join(changed_urls, "url", "left_semi").persist()
+    old_bld = buildings.join(changed_urls, "url", "left_semi").persist()
+    n_old_elements = old_addr.count() + old_bld.count()
     _lap("old_records")
+
+    # the delta's J4/J3 survivors against the static existing state
+    # (existing ways from the PRE-splice buildings snapshot); persisted:
+    # the closure reads them, then each splice twice (delete keys, then
+    # data)
+    ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
+    addr_delta, bld_delta = merge.new_elements(
+        new_records, ex_nodes, buildings.filter(F.col("existing")))
+    addr_delta = addr_delta.persist()
+    bld_delta = bld_delta.persist()
 
     # affected closure (module docstring): base → ring1 → ring2,
     # localized (see changed_urls note; ring sizes are O(25 × base))
-    base = _record_cells(old_changed).unionByName(
-        _record_cells(new_records)).distinct()
+    base = _element_cells(old_addr, old_bld).unionByName(
+        _element_cells(addr_delta, bld_delta))
     ring1, ring2 = _closure_rings(base)
+    old_addr.unpersist()
+    old_bld.unpersist()
     _lap("closure_rings")
 
     # splice the element tables by url: each merge_upsert drops every
     # row of a changed url (deleted urls included) and adds the url's
-    # new rows, as one snapshot. The three tables are independent —
+    # new rows, as one snapshot. The two tables are independent —
     # their commits run concurrently (Spark schedules the jobs side by
     # side; commits are single-writer PER TABLE, which threads here
-    # respect). NOTE: ex_ways must come from the PRE-splice buildings
-    # snapshot, so plan its scan before launching.
-    ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
-    ex_ways = (ice.read_iceberg(spark, _t(state_dir, "buildings"))
-               .filter(F.col("existing")))
-    addr_delta, bld_delta = merge.new_elements(new_records, ex_nodes, ex_ways)
-    # each splice reads its rows twice (delete keys, then data)
-    addr_delta = addr_delta.persist()
-    bld_delta = bld_delta.persist()
+    # respect).
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [pool.submit(ice.merge_upsert, spark, _t(state_dir, name),
                             rows, ["url"], deletes=changed_urls)
-                for name, rows in (("records", new_records),
-                                   ("addresses", addr_delta),
+                for name, rows in (("addresses", addr_delta),
                                    ("buildings", bld_delta))]
         for f in futs:
             f.result()
@@ -337,34 +357,26 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     _lap("closure_slices")
 
     # the full merge's own winner stage over the slice (persisted and
-    # materialized before the concurrent splices read it), plus the
-    # address cell — the winner tables' splice key
+    # materialized before the splice reads it)
     winners = merge.winner_stage(sub_addr, sub_bld, meta["knn_cutoff_m"],
                                  meta["broadcast_max"])
-    acells = sub_addr.select("addr_id", "cell")
     _lap("winners")
 
     # splice winners BY CELL (module docstring): every winner that can
     # change sits in a ring1 cell (sub addresses are the ring1
     # semi-join by construction), so the delete key set is ring1
     # itself — a few hundred rows
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(ice.merge_upsert, spark, _t(state_dir, name),
-                            w.join(acells, "addr_id"), ["cell"],
-                            deletes=ring1)
-                for name, w in zip(("pip_winners", "knn_winners"), winners)]
-        for f in futs:
-            f.result()
+    ice.merge_upsert(spark, _t(state_dir, "winners"),
+                     _with_cell(winners, sub_addr), ["cell"], deletes=ring1)
     _lap("winner_splices")
     for w in winners:
         w.unpersist()
     sub_addr.unpersist()
     sub_bld.unpersist()
-    old_changed.unpersist()
     return {
         "n_changed_urls": changed_urls.count(),
         "n_new_records": n_new_records,
-        "n_old_records": n_old_records,
+        "n_old_elements": n_old_elements,
         "n_affected_addresses": n_sub_addr,
         "n_sub_buildings": n_sub_bld,
         "n_addresses_total": n_addr_total,
@@ -388,12 +400,11 @@ def current_outputs(spark: SparkSession, state_dir: str,
     buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
     # the stored winners carry their splice key (cell) — drop it
     # before assign, whose address join brings its own cell column
-    pip_w = ice.read_iceberg(spark, _t(state_dir, "pip_winners")) \
-        .drop("cell")
-    knn_w = ice.read_iceberg(spark, _t(state_dir, "knn_winners")) \
-        .drop("cell")
+    winners = ice.read_iceberg(spark, _t(state_dir, "winners")).drop("cell")
+    is_pip = F.col("method") == config.METHOD_PIP
 
-    assignments = dec.assign(addresses, pip_w, knn_w, buildings)
+    assignments = dec.assign(addresses, winners.filter(is_pip),
+                             winners.filter(~is_pip), buildings)
     assignments = assignments.persist()
     assignments.count()
     sets, _, tm, tiles = merge.output_stage(assignments, buildings, budget,

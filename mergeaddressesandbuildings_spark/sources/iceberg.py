@@ -1248,7 +1248,9 @@ def _stage(table_dir: str, parent: dict | None, df: DataFrame,
     the partition columns, which the manifest records per file."""
     sid, seq = _next_ids(parent)
     root = os.path.join(table_dir, "data", f"{tag}-{sid}-{_attempt_id()}")
-    w = df.write.mode("errorifexists")
+    # no _SUCCESS marker: no manifest would reference it
+    w = (df.write.mode("errorifexists")
+         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"))
     if content == 0 and partition_fields:
         w = w.partitionBy(*[p["name"] for p in partition_fields])
     w.parquet(root)

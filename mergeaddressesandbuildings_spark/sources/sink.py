@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -34,11 +35,15 @@ def _data_path(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _manifest_path(out_dir)
+    """The tile manifest, or None when none was written yet. An
+    unreadable manifest raises: treating it as absent would rewrite
+    every tile and restart the batch ids."""
     try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+        return spark.read.parquet(_manifest_path(out_dir))
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def write_tiles(

@@ -190,10 +190,12 @@ def test_multipolygon_resolver(spark):
     assert row["id"] == 7
     assert len(row["ring_lats"]) == 5
     assert len(row["hole_lats"]) == 1 and len(row["hole_lats"][0]) == 5
-    # and it feeds rings_to_buildings with hole-subtracted area
-    blds = W.rings_to_buildings(
-        W.resolve_multipolygons(ndf, wdf, rdf)
-    ).collect()
+    # and it reaches the buildings schema with hole-subtracted area
+    from mergeaddressesandbuildings_spark.operators import extract
+    from mergeaddressesandbuildings_spark.sources import osm_xml
+
+    existing = osm_xml.to_existing_table(ndf, wdf, rdf)
+    blds = extract.existing_to_tables(existing)[1].collect()
     assert len(blds) == 1
     outer_area = orc.ring_area_m2([(p[0], p[1]) for p in outer])
     hole_area = orc.ring_area_m2([(p[0], p[1]) for p in hole])

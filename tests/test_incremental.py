@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mergeaddressesandbuildings_spark.operators import tiling
+from mergeaddressesandbuildings_spark.operators import extract, tiling
 from mergeaddressesandbuildings_spark.plans import incremental as inc
 from mergeaddressesandbuildings_spark.plans.merge import fingerprint
 from mergeaddressesandbuildings_spark.sources import pages as pg
@@ -88,11 +88,24 @@ def state(spark, tmp_path_factory):
     return state_dir, metrics, existing, str(root)
 
 
-def test_delta_scope_is_bounded(state):
-    _, m, _, _ = state
+def test_delta_scope_is_bounded(spark, state):
+    state_dir, m, _, _ = state
     assert m["n_changed_urls"] == len(MODIFIED) + len(DELETED) + len(ADDED)
     assert m["n_new_records"] > 0
-    assert m["n_old_records"] > 0
+    assert m["n_old_elements"] > 0
+    # the closure's base holds the changed urls' old address ROWS, and
+    # J4 dropped some of their address records: the survivor-only
+    # closure is exercised (its exactness is the tests below)
+    old_urls = [_url(i) for i in MODIFIED + DELETED]
+    built = ice.load_metadata(
+        os.path.join(state_dir, "addresses"))["snapshots"][0]
+    old_rows = (ice.read_iceberg(spark, os.path.join(state_dir, "addresses"),
+                                 snapshot_id=built["snapshot-id"])
+                .filter(F.col("url").isin(old_urls)).count())
+    old_records = (extract.extract_records(
+        spark.createDataFrame(pg.gen_pages_pdf(MODIFIED + DELETED)),
+        level=LEVEL).filter(F.col("kind") == "address").count())
+    assert 0 < old_rows < old_records
     # the whole point: the spatial join re-ran over a small closure,
     # not the corpus
     assert 0 < m["n_affected_addresses"] < m["n_addresses_total"]
@@ -136,7 +149,7 @@ def test_incremental_matches_run_merge(spark, state):
 
 def test_deleted_url_rows_are_gone(spark, state):
     state_dir, _, _, _ = state
-    for tbl in ("records", "addresses", "buildings"):
+    for tbl in ("addresses", "buildings"):
         df = ice.read_iceberg(spark, os.path.join(state_dir, tbl))
         gone = df.filter(F.col("url").isin([_url(i) for i in DELETED]))
         assert gone.count() == 0, tbl
@@ -181,8 +194,9 @@ def test_second_delta_stays_exact(spark, state, tmp_path):
     assert (fp_inc, n_inc) == (fp_full, n_full)
 
     report = inc.maintain(spark, chain_dir)
-    assert set(report) == set(inc._TABLES)
-    assert report["records"]["compacted"]
+    assert tuple(report) == inc._TABLES
+    assert report["addresses"]["compacted"]
+    assert report["winners"]["compacted"]
     assert not report["ex_nodes"]["compacted"]
     for tbl in inc._TABLES:
         meta = ice.load_metadata(os.path.join(chain_dir, tbl))
@@ -232,12 +246,12 @@ def test_localize_cap_falls_back(spark):
     assert small.count() == 50
 
 
-def test_records_table_commit_is_file_level(state):
-    """The records splice is O(delta): one merge-on-read snapshot that
+def test_addresses_table_commit_is_file_level(state):
+    """The addresses splice is O(delta): one merge-on-read snapshot that
     carries every full_build data file by reference and adds exactly
     one equality-delete file (on url) next to the delta's rows."""
     state_dir, _, _, _ = state
-    meta = ice.load_metadata(os.path.join(state_dir, "records"))
+    meta = ice.load_metadata(os.path.join(state_dir, "addresses"))
     built, spliced = meta["snapshots"]
     assert [s["summary"]["operation"] for s in (built, spliced)] == \
         ["append", "overwrite"]
@@ -248,15 +262,28 @@ def test_records_table_commit_is_file_level(state):
 
 
 def test_delta_adds_one_file_of_each_kind_per_table(state):
-    """A small delta lands as ONE data file next to its one
-    equality-delete file in every spliced table, however many
-    partitions the frame handed to merge_upsert had."""
+    """A delta is three splices: it adds exactly one snapshot to each
+    of addresses, buildings and winners, landing as ONE data file next
+    to its one equality-delete file however many partitions the frame
+    handed to merge_upsert had, and leaves the static ex_nodes alone."""
     state_dir, _, _, _ = state
-    for tbl in ("records", "addresses", "buildings",
-                "pip_winners", "knn_winners"):
+    for tbl in ("addresses", "buildings", "winners"):
         meta = ice.load_metadata(os.path.join(state_dir, tbl))
         built, spliced = meta["snapshots"]
         built_files = {t.path for t in ice.plan_scan(meta, built)[0]}
         data, deletes = ice.plan_scan(meta, spliced)
         assert len({t.path for t in data} - built_files) == 1, tbl
         assert [d.kind for d in deletes] == ["eq"], tbl
+    meta = ice.load_metadata(os.path.join(state_dir, "ex_nodes"))
+    assert len(meta["snapshots"]) == 1
+
+
+def test_state_holds_its_tables_and_no_success_markers(state):
+    """The state dir is exactly the four tables plus meta.json, and no
+    write left a _SUCCESS marker that no manifest references."""
+    state_dir, _, _, _ = state
+    assert sorted(os.listdir(state_dir)) == sorted([*inc._TABLES,
+                                                    "meta.json"])
+    markers = [os.path.join(d, f) for d, _, fs in os.walk(state_dir)
+               for f in fs if "_SUCCESS" in f]
+    assert markers == []

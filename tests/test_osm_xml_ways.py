@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from mergeaddressesandbuildings_spark.functions import cells, geom
+from mergeaddressesandbuildings_spark.functions import geom
 from mergeaddressesandbuildings_spark.operators import ways as W
 from mergeaddressesandbuildings_spark.sources import osm_xml
 
@@ -64,18 +64,21 @@ def test_resolve_rings_orders_and_drops_partial(spark, tmp_path):
     assert r["ring_lons"] == [-82.399, -82.399, -82.400, -82.400, -82.399]
 
 
-def test_rings_to_buildings_matches_kernels(spark, tmp_path):
+def test_existing_ways_match_kernels(spark, tmp_path):
+    """A .osm way's derived building columns (through to_existing_table
+    and existing_to_tables) equal the extraction kernels' values."""
+    from mergeaddressesandbuildings_spark.operators import extract
+
     path = _write(tmp_path)
-    nodes = osm_xml.read_nodes(spark, path)
-    ways = osm_xml.read_ways(spark, path)
-    b = W.rings_to_buildings(W.resolve_rings(nodes, ways)).collect()[0]
+    existing = osm_xml.to_existing_table(
+        osm_xml.read_nodes(spark, path), osm_xml.read_ways(spark, path))
+    b = extract.existing_to_tables(existing)[1].collect()[0]
     rlat = np.asarray(b["ring_lats"])
     rlon = np.asarray(b["ring_lons"])
     assert (b["min_lat"], b["min_lon"], b["max_lat"], b["max_lon"]) == geom.ring_bbox(rlat, rlon)
     clat, clon = geom.ring_centroid(rlat, rlon)
     assert (b["centroid_lat"], b["centroid_lon"]) == (clat, clon)
     assert b["area_m2"] == geom.ring_area_m2(rlat, rlon)
-    assert b["cell"] == int(cells.encode(np.array([clat]), np.array([clon]))[0])
     assert len(b["cells"]) >= 1
 
 

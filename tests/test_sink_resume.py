@@ -78,3 +78,17 @@ def test_lineage_metrics(spark, tiles_df):
     lm = sink.lineage_metrics(tiles_df.repartition(8), ["elem_id"]).collect()
     assert sum(r["n_rows"] for r in lm) == 5000
     assert len(lm) == 8
+
+
+def test_corrupt_manifest_is_loud(spark, tiles_df, tmp_path):
+    """An unreadable manifest is not an absent one: write_tiles raises
+    before writing any data instead of rewriting every tile."""
+    import os
+
+    out = tmp_path / "corrupt"
+    (out / "_manifest").mkdir(parents=True)
+    (out / "_manifest" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        sink.write_tiles(tiles_df, str(out), key_cols=["elem_id"],
+                         n_batches=2)
+    assert not os.path.exists(out / "data")
