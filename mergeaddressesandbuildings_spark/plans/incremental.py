@@ -19,11 +19,20 @@ change set can be SPLICED in:
                    CELL, keyed by cell                    [O(elems)]
       ex_nodes     existing OSM address nodes (static)
       meta.json    the merge parameters the state was built with
-                   (level, cutoff, …) — an increment MUST reuse them
+                   (level, cutoff, …) — an increment MUST reuse them —
+                   and each table's committed snapshot id
 
 so a delta commits three splices (addresses, buildings, winners).
 Extracted records are not kept: a changed url's old cells are on its
 ``addresses`` and ``buildings`` rows.
+
+``meta.json`` is the state's commit point: ``full_build``,
+``apply_delta`` and ``maintain`` replace it (temp file + ``os.replace``)
+as their last step, and every read of the state is pinned to the
+snapshot ids it records. A run that dies between its splices leaves
+readers on the previous state, and re-running the same change set is
+exact: its old-row reads still see the pre-delta rows, and every
+splice is keyed (by url, by cell), so repeating one is a no-op.
 
 A splice is merge-on-read: one `merge_upsert` snapshot per table that
 adds an equality-delete file on the splice key plus the key's new
@@ -112,6 +121,33 @@ def _t(state_dir: str, name: str) -> str:
 
 def _meta_path(state_dir: str) -> str:
     return os.path.join(state_dir, "meta.json")
+
+
+def _load_meta(state_dir: str) -> dict:
+    with open(_meta_path(state_dir)) as f:
+        return json.load(f)
+
+
+def _current_snapshots(state_dir: str) -> dict[str, int]:
+    return {name: ice.load_metadata(_t(state_dir, name))["current-snapshot-id"]
+            for name in _TABLES}
+
+
+def _commit_meta(state_dir: str, meta: dict) -> None:
+    """Pin every table at its current snapshot in meta.json, atomically
+    (the commit point, module docstring)."""
+    meta = {**meta, "snapshots": _current_snapshots(state_dir)}
+    tmp = _meta_path(state_dir) + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, _meta_path(state_dir))
+
+
+def _read(spark: SparkSession, state_dir: str, meta: dict,
+          name: str) -> DataFrame:
+    """A state table at the snapshot meta.json pins."""
+    return ice.read_iceberg(spark, _t(state_dir, name),
+                            snapshot_id=meta["snapshots"][name])
 
 
 _LOCALIZE_CAP = 500_000
@@ -234,12 +270,11 @@ def full_build(spark: SparkSession, pages: DataFrame,
     for w in winners:
         w.unpersist()
 
-    meta = {"level": level, "knn_cutoff_m": knn_cutoff_m,
-            "broadcast_max": broadcast_max}
-    with open(_meta_path(state_dir), "w") as f:
-        json.dump(meta, f)
+    params = {"level": level, "knn_cutoff_m": knn_cutoff_m,
+              "broadcast_max": broadcast_max}
+    _commit_meta(state_dir, params)
     return {**{name: ice.record_count(_t(state_dir, name))
-               for name in _TABLES}, **meta}
+               for name in _TABLES}, **params}
 
 
 def apply_delta(spark: SparkSession, page_changes: DataFrame,
@@ -251,8 +286,7 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     recompute scope, vs ``n_addresses_total``."""
     import time as _time
 
-    with open(_meta_path(state_dir)) as f:
-        meta = json.load(f)
+    meta = _load_meta(state_dir)
     level = meta["level"]
     timings: dict[str, float] = {}
     _t0 = _time.monotonic()
@@ -285,9 +319,11 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     n_new_records = new_records.count()
     _lap("extract_delta")
 
-    # the changed urls' old element rows, read before any splice
-    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
-    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
+    # the changed urls' old element rows, read at the committed
+    # snapshots: a retry after a crash between splices must not take
+    # the crashed attempt's new rows for old ones
+    addresses = _read(spark, state_dir, meta, "addresses")
+    buildings = _read(spark, state_dir, meta, "buildings")
     old_addr = addresses.join(changed_urls, "url", "left_semi").persist()
     old_bld = buildings.join(changed_urls, "url", "left_semi").persist()
     n_old_elements = old_addr.count() + old_bld.count()
@@ -297,7 +333,7 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     # (existing ways from the PRE-splice buildings snapshot); persisted:
     # the closure reads them, then each splice twice (delete keys, then
     # data)
-    ex_nodes = ice.read_iceberg(spark, _t(state_dir, "ex_nodes"))
+    ex_nodes = _read(spark, state_dir, meta, "ex_nodes")
     addr_delta, bld_delta = merge.new_elements(
         new_records, ex_nodes, buildings.filter(F.col("existing")))
     addr_delta = addr_delta.persist()
@@ -373,6 +409,7 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
         w.unpersist()
     sub_addr.unpersist()
     sub_bld.unpersist()
+    _commit_meta(state_dir, meta)
     return {
         "n_changed_urls": changed_urls.count(),
         "n_new_records": n_new_records,
@@ -394,13 +431,12 @@ def current_outputs(spark: SparkSession, state_dir: str,
     kernels). ``tile_map`` is the distinct fine-cell → tile map, the
     frame jobs/incremental.py joins assignments against for the
     fingerprint-bearing flat output."""
-    with open(_meta_path(state_dir)) as f:
-        meta = json.load(f)
-    addresses = ice.read_iceberg(spark, _t(state_dir, "addresses"))
-    buildings = ice.read_iceberg(spark, _t(state_dir, "buildings"))
+    meta = _load_meta(state_dir)
+    addresses = _read(spark, state_dir, meta, "addresses")
+    buildings = _read(spark, state_dir, meta, "buildings")
     # the stored winners carry their splice key (cell) — drop it
     # before assign, whose address join brings its own cell column
-    winners = ice.read_iceberg(spark, _t(state_dir, "winners")).drop("cell")
+    winners = _read(spark, state_dir, meta, "winners").drop("cell")
     is_pip = F.col("method") == config.METHOD_PIP
 
     assignments = dec.assign(addresses, winners.filter(is_pip),
@@ -417,20 +453,28 @@ def maintain(spark: SparkSession, state_dir: str) -> dict:
     equality-delete file that each later read applies, and pins the
     superseded rows' files through older snapshots. Tables carrying
     delete files are compacted (deletes materialized into fresh data
-    files), then every table expires all but its current snapshot,
-    which reclaims the disk. Returns per-table counts plus the live
-    data files and bytes — the early-warning signal for small-file
-    drift."""
+    files) and committed to meta.json, then every table expires all
+    but its current snapshot, which reclaims the disk. Refuses a state
+    whose last delta did not commit (re-run that delta first). Returns
+    per-table counts plus the live data files and bytes — the
+    early-warning signal for small-file drift."""
+    meta = _load_meta(state_dir)
+    if meta["snapshots"] != _current_snapshots(state_dir):
+        raise RuntimeError(f"{state_dir}: the last delta is not committed "
+                           "to meta.json — re-run it before maintain")
     out = {}
     for name in _TABLES:
         tdir = _t(state_dir, name)
-        meta = ice.load_metadata(tdir)
-        _, deletes = ice.plan_scan(meta, ice.select_snapshot(meta))
+        tmeta = ice.load_metadata(tdir)
+        _, deletes = ice.plan_scan(tmeta, ice.select_snapshot(tmeta))
         if deletes:
             ice.compact_table(spark, tdir)
+            # pin the compacted snapshot before expiry drops the one
+            # meta.json pins
+            _commit_meta(state_dir, meta)
         expired = ice.expire_snapshots(tdir, keep_last=1)
-        meta = ice.load_metadata(tdir)
-        data, _ = ice.plan_scan(meta, ice.select_snapshot(meta))
+        tmeta = ice.load_metadata(tdir)
+        data, _ = ice.plan_scan(tmeta, ice.select_snapshot(tmeta))
         out[name] = {"compacted": bool(deletes), **expired,
                      "live_files": len(data),
                      "live_bytes": sum(os.path.getsize(t.path)

@@ -230,7 +230,7 @@ def run_merge(
     addresses = _lineage_barrier(spark, addresses, f"{barrier_dir}/addresses")
     buildings = _lineage_barrier(spark, buildings, f"{barrier_dir}/buildings")
     # everything downstream reads the barriers: release the caches
-    # behind them (a streaming caller runs one merge per microbatch)
+    # behind them (one session may run many merges)
     records.unpersist()
     if ex_ways is not None:
         ex_ways.unpersist()

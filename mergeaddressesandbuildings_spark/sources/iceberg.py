@@ -1371,11 +1371,17 @@ def _partition_fields(schema: dict, partition_by: list[str]) -> list:
     return out
 
 
+def table_exists(table_dir: str) -> bool:
+    """Whether ``table_dir`` holds a committed table (a first write that
+    died before its commit leaves files but no metadata version)."""
+    return _read_version_hint(table_dir) > 0
+
+
 def write_iceberg(df: DataFrame, table_dir: str,
                   partition_by: list[str] | None = None) -> int:
     """Create an Iceberg v2 table from ``df``; refuses a directory
     that already holds one. Returns the snapshot id."""
-    if _read_version_hint(table_dir) > 0:
+    if table_exists(table_dir):
         raise IcebergError(
             f"{table_dir} already an iceberg table — use append_iceberg")
     return _append(df, table_dir, partition_by=partition_by,

@@ -8,11 +8,14 @@ Design:
   rows the tile set itself is too large to collect; everything here is
   a distributed plan).
 - Each batch writes with **dynamic partition overwrite** (only the
-  touched ``tile=`` directories are replaced), then appends one
+  touched ``tile=`` directories are replaced; a writer option, so the
+  session's own overwrite mode is left alone), then appends one
   manifest row per tile: (tile, n_rows, fingerprint, batch_id). A
   batch that dies mid-write is simply re-run — overwrite makes the
   retry idempotent; tiles from completed batches are skipped via a
-  left_anti join against the manifest.
+  left_anti join against the manifest, once the manifest's stats have
+  been checked against the frame's (a directory holding another run's
+  tiles is refused, not silently kept).
 - The fingerprint is ``bit_xor(xxhash64(...))`` — order-independent and
   overflow-free, so parallelism-invariance is checkable from the
   manifest alone (§5.2-5/6).
@@ -57,20 +60,12 @@ def write_tiles(
     resumably. ``key_cols`` feed the lineage fingerprint.
 
     ``fail_after_batches`` is a test hook simulating a mid-job crash.
+    Raises ValueError, before writing anything, when ``out_dir``'s
+    manifest lists a tile whose (n_rows, fingerprint) the frame does
+    not reproduce: those tiles were written from other rows.
     Returns {"batches_run": int, "rows_written": int, "tiles_skipped": int}.
     """
     spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    manifest = read_manifest(spark, out_dir)
-    skipped = 0
-    batch_offset = 0
-    if manifest is not None:
-        done_tiles = manifest.select("tile").distinct()
-        skipped = done_tiles.count()
-        df = df.join(done_tiles, "tile", "left_anti")
-        batch_offset = int(manifest.agg(F.max("batch_id")).collect()[0][0] or 0) + 1
-
     fingerprint = F.expr(
         "bit_xor(xxhash64({}))".format(", ".join(key_cols))
     ).alias("fingerprint")
@@ -87,9 +82,29 @@ def write_tiles(
         .withColumn("_b", F.pmod(F.xxhash64(F.col("tile")), F.lit(n_batches)))
         .persist()
     )
+    todo = stats_all
+    manifest = read_manifest(spark, out_dir)
+    skipped = 0
+    batch_offset = 0
+    if manifest is not None:
+        done = manifest.select("tile", "n_rows", "fingerprint")
+        # a resume reproduces every written tile's stats exactly
+        stale = (done.join(stats_all, ["tile", "n_rows", "fingerprint"], "left_anti")
+                 .select("tile").limit(5).collect())
+        if stale:
+            stats_all.unpersist()
+            raise ValueError(
+                f"{out_dir} holds tiles written from other rows (e.g. tiles "
+                f"{[r['tile'] for r in stale]}): write into a fresh directory")
+        done_tiles = done.select("tile").distinct()
+        skipped = done_tiles.count()
+        df = df.join(done_tiles, "tile", "left_anti")
+        todo = stats_all.join(done_tiles, "tile", "left_anti")
+        batch_offset = int(manifest.agg(F.max("batch_id")).collect()[0][0] or 0) + 1
+
     per_bucket = {
         int(r["_b"]): int(r["rows"])
-        for r in stats_all.groupBy("_b").agg(F.sum("n_rows").alias("rows")).collect()
+        for r in todo.groupBy("_b").agg(F.sum("n_rows").alias("rows")).collect()
     }
 
     batches_run = 0
@@ -102,10 +117,12 @@ def write_tiles(
         batch = df.filter(bucket == k)
         # stable file bytes: sort within partitions (SURVEY.md §4)
         batch = batch.repartition(F.col("tile")).sortWithinPartitions("tile", *key_cols)
-        batch.write.partitionBy("tile").mode("overwrite").parquet(_data_path(out_dir))
+        (batch.write.partitionBy("tile").mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .parquet(_data_path(out_dir)))
         # manifest rows appended ONLY after the batch's data write
         # committed — resume correctness depends on this ordering
-        stats_all.filter(F.col("_b") == k).drop("_b") \
+        todo.filter(F.col("_b") == k).drop("_b") \
             .withColumn("batch_id", F.lit(bid)) \
             .coalesce(1) \
             .write.mode("append").parquet(_manifest_path(out_dir))

@@ -10,16 +10,12 @@ and exercises late/duplicate web captures:
 - ST3 ``windowed_metrics``   : tumbling/sliding window counts per lang
 - ST4 ``cell_budget_state``  : applyInPandasWithState keyed by cell — cumulative
                                element budget tracking across microbatches
-- ST5 ``incremental_merge``  : foreachBatch → ``run_merge`` over each
-                               microbatch + idempotent per-epoch tile
-                               writer under a streaming checkpoint
-                               (restart-safe)
+- ST5 ``incremental_merge``  : foreachBatch → plans/incremental.py's exact
+                               state, under a streaming checkpoint (restart-safe)
 
 Everything downstream of ST1 reuses the batch kernels verbatim
 (``extract.extract_records`` is a mapInPandas pass — legal on streaming
-DataFrames). ST5 merges each microbatch on its own (see
-:func:`incremental_merge`); plans/incremental.py is the exact
-delta-proportional path.
+DataFrames); ST5 reuses the exact incremental plan.
 """
 
 from __future__ import annotations
@@ -32,7 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mergeaddressesandbuildings_spark import config, schemas
-from mergeaddressesandbuildings_spark.operators import extract
+from mergeaddressesandbuildings_spark.operators import extract, tiling
+from mergeaddressesandbuildings_spark.plans import incremental as inc
+from mergeaddressesandbuildings_spark.sources import iceberg as ice
 
 
 def pages_stream(spark: SparkSession, input_dir: str,
@@ -145,57 +143,57 @@ def incremental_merge(
     available_now: bool = True,
     on_batch: Callable[[int, int], None] | None = None,
 ):
-    """ST5: incremental merge — each microbatch of pages runs
-    ``run_merge`` (extract → PIP/kNN join → decisions → tiling) against
-    ``existing_osm`` via ``foreachBatch``, appending assignments
-    partitioned by tile.
+    """ST5: incremental merge — ``foreachBatch`` splices each microbatch
+    into plans/incremental.py's exact state (``full_build`` against
+    ``existing_osm`` first, ``apply_delta`` after) and rewrites the
+    assignments, partitioned by tile, under ``out_dir/data``: after
+    every epoch they equal ``run_merge`` over all pages streamed so far.
 
-    A microbatch sees only its own pages plus the existing state:
-    buildings from earlier microbatches are never candidates, and
-    per-building decisions are taken per microbatch, so the output
-    equals a full merge only when one microbatch holds the whole
-    corpus. plans/incremental.py is the exact delta path.
-
-    Restart safety has two layers:
-    - Spark's streaming checkpoint (offsets in ``checkpoint_dir``) makes
-      each source file processed exactly once across restarts;
-    - the writer is *idempotent per epoch*: an ``_epochs`` marker dir is
-      checked before writing, so a batch replayed after a crash between
-      data-write and offset-commit does not duplicate rows
-      (BASELINE.json:6 per-tile checkpoint semantics).
-
-    Returns the StreamingQuery (already awaited when available_now).
+    ``out_dir/captures`` is an Iceberg table of each url's applied
+    capture (url, warc_ts, xxhash64(text)). A microbatch is reduced to
+    its latest capture per url; a capture older than the stored one,
+    or equal to it (a replay or duplicate), is dropped, and one with
+    the stored warc_ts but other text raises ValueError (the full merge
+    keeps the larger text, which the state does not hold). The
+    streaming checkpoint processes each source file once; a replayed
+    epoch re-applies the same url-keyed delta (exact on retry) or,
+    once its captures are recorded, finds nothing new. Returns the
+    StreamingQuery (already awaited when available_now).
     """
-    from mergeaddressesandbuildings_spark.plans.merge import run_merge
-
-    epochs_dir = os.path.join(out_dir, "_epochs")
-    data_dir = os.path.join(out_dir, "data")
-    # one barrier dir, overwritten by every epoch, shared on a cluster
-    barrier_dir = os.path.join(out_dir, "_barrier")
+    state_dir, data_dir, captures_dir = (
+        os.path.join(out_dir, d) for d in ("state", "data", "captures"))
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(epochs_dir, f"epoch={epoch_id}")
-        if os.path.exists(marker):  # replay after crash → already written
-            return
-        if batch_df.rdd.isEmpty():
-            os.makedirs(marker, exist_ok=True)
-            return
-        res = run_merge(spark, batch_df, existing_osm,
-                        barrier_dir=barrier_dir)
-        tiles = res.tiles.select("elem_id", "tile")
-        out = (
-            res.assignments
-            .join(tiles, res.assignments["addr_id"] == tiles["elem_id"])
-            .drop("elem_id")
-            .withColumn("epoch_id", F.lit(epoch_id))
-        )
-        (
-            out.repartition(F.col("tile"))
-            .sortWithinPartitions("tile", "addr_id")
-            .write.partitionBy("tile").mode("append").parquet(data_dir)
-        )
-        n = out.count()
-        os.makedirs(marker, exist_ok=True)
+        pages = extract.latest_capture(batch_df).withColumn(
+            "text_hash", F.xxhash64("text"))
+        seen = ice.table_exists(captures_dir)
+        if seen:
+            stored = ice.read_iceberg(spark, captures_dir).toDF("url", "_ts", "_hash")
+            pages = pages.join(stored, "url", "left")
+            clash = (F.col("warc_ts") == F.col("_ts")) & (F.col("text_hash") != F.col("_hash"))
+            for r in pages.filter(clash).select("url").limit(1).collect():
+                raise ValueError(f"{r['url']}: a capture with the stored warc_ts but other text")
+            pages = pages.filter(F.col("_ts").isNull() | (F.col("warc_ts") > F.col("_ts")))
+        pages = pages.drop("_ts", "_hash").persist()
+        try:
+            if pages.isEmpty():
+                return
+            if seen:
+                inc.apply_delta(spark, pages.drop("text_hash"), state_dir)
+            else:  # rebuilt until the first epoch's captures commit
+                inc.full_build(spark, pages.drop("text_hash"), existing_osm, state_dir)
+            assignments, _, _, tm = inc.current_outputs(spark, state_dir)
+            n = assignments.count()
+            (tiling.assign_tiles(assignments, tm=tm)
+             .write.partitionBy("tile").mode("overwrite").parquet(data_dir))
+            assignments.unpersist()
+            keys = pages.select("url", "warc_ts", "text_hash")
+            if seen:
+                ice.merge_upsert(spark, captures_dir, keys, ["url"])
+            else:
+                ice.write_iceberg(keys, captures_dir)
+        finally:
+            pages.unpersist()
         if on_batch is not None:
             on_batch(epoch_id, n)
 

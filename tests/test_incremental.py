@@ -130,21 +130,63 @@ def test_incremental_equals_full_rebuild(spark, state):
     a_full.unpersist()
 
 
-def test_incremental_matches_run_merge(spark, state):
-    """Tie the incremental path to the flagship plan: run_merge over
-    the post-delta corpus yields the same fingerprint."""
+@pytest.fixture(scope="module")
+def v2_reference(spark, state):
+    """(fingerprint, rows) of run_merge over the post-delta corpus."""
     from mergeaddressesandbuildings_spark.plans.merge import run_merge
 
-    state_dir, _, existing, _ = state
-    a_inc, _, _, tm_inc = inc.current_outputs(spark, state_dir)
-    fp_inc, n_inc = _fingerprint(a_inc, tm_inc)
-
+    _, _, existing, _ = state
     pages_v2 = spark.createDataFrame(_pages_v2_pdf())
     res = run_merge(spark, pages_v2, existing, level=LEVEL)
-    fp_rm, n_rm = _fingerprint(res.assignments, res.tile_map)
+    return _fingerprint(res.assignments, res.tile_map)
 
-    assert (fp_inc, n_inc) == (fp_rm, n_rm)
+
+def test_incremental_matches_run_merge(spark, state, v2_reference):
+    """Tie the incremental path to the flagship plan: run_merge over
+    the post-delta corpus yields the same fingerprint."""
+    state_dir, _, _, _ = state
+    a_inc, _, _, tm_inc = inc.current_outputs(spark, state_dir)
+    assert _fingerprint(a_inc, tm_inc) == v2_reference
     a_inc.unpersist()
+
+
+def test_delta_retry_after_crash_is_exact(spark, state, v2_reference,
+                                          tmp_path, monkeypatch):
+    """A delta that dies after its element splices, before the winner
+    splice, is committed nowhere: readers still see the built state,
+    and re-running the same change set reads the changed urls' old
+    rows at the snapshots meta.json pins (not the crashed attempt's
+    new rows), so the result still equals run_merge."""
+    _, _, existing, _ = state
+    retry_dir = os.path.join(str(tmp_path), "state_retry")
+    inc.full_build(spark, pg.pages_df(spark, N_PAGES), existing,
+                   retry_dir, level=LEVEL)
+    a0, _, _, tm0 = inc.current_outputs(spark, retry_dir)
+    built = _fingerprint(a0, tm0)
+    a0.unpersist()
+
+    upsert = ice.merge_upsert
+
+    def crash_on_winners(spark_, table_dir, *args, **kwargs):
+        if os.path.basename(table_dir) == "winners":
+            raise RuntimeError("injected crash before the winner splice")
+        return upsert(spark_, table_dir, *args, **kwargs)
+
+    delta = spark.createDataFrame(_delta_pdf())
+    with monkeypatch.context() as m:
+        m.setattr(ice, "merge_upsert", crash_on_winners)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            inc.apply_delta(spark, delta, retry_dir)
+    with pytest.raises(RuntimeError, match="not committed"):
+        inc.maintain(spark, retry_dir)
+    a1, _, _, tm1 = inc.current_outputs(spark, retry_dir)
+    assert _fingerprint(a1, tm1) == built
+    a1.unpersist()
+
+    inc.apply_delta(spark, delta, retry_dir)
+    a2, _, _, tm2 = inc.current_outputs(spark, retry_dir)
+    assert _fingerprint(a2, tm2) == v2_reference
+    a2.unpersist()
 
 
 def test_deleted_url_rows_are_gone(spark, state):

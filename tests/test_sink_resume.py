@@ -92,3 +92,36 @@ def test_corrupt_manifest_is_loud(spark, tiles_df, tmp_path):
         sink.write_tiles(tiles_df, str(out), key_cols=["elem_id"],
                          n_batches=2)
     assert not os.path.exists(out / "data")
+
+
+def test_session_overwrite_mode_is_left_alone(spark, tiles_df, tmp_path):
+    """Dynamic partition overwrite is the sink's writer option, not a
+    session setting: a later partitioned overwrite in the same session
+    still replaces the whole directory."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    sink.write_tiles(tiles_df, str(tmp_path / "tiles"), key_cols=["elem_id"],
+                     n_batches=2)
+    assert spark.conf.get(key) == before
+
+    other = str(tmp_path / "other")
+    spark.range(4).withColumn("p", F.col("id") % 2) \
+        .write.partitionBy("p").mode("overwrite").parquet(other)
+    spark.range(4).withColumn("p", F.lit(0)) \
+        .write.partitionBy("p").mode("overwrite").parquet(other)
+    assert spark.read.parquet(other).count() == 4
+
+
+def test_another_runs_tiles_are_refused(spark, tiles_df, tmp_path):
+    """A manifest whose tiles this frame does not reproduce belongs to
+    another run: write_tiles raises before writing instead of skipping
+    those tiles and leaving the other run's rows on disk."""
+    out = str(tmp_path / "reused")
+    sink.write_tiles(tiles_df, out, key_cols=["elem_id", "payload"], n_batches=2)
+    before = _read_sorted(spark, out)
+    for changed in (tiles_df.withColumn("payload", F.col("payload") + 1),
+                    tiles_df.filter(F.col("tile") != 3)):
+        with pytest.raises(ValueError, match="other rows"):
+            sink.write_tiles(changed, out, key_cols=["elem_id", "payload"],
+                             n_batches=2)
+    assert _read_sorted(spark, out) == before

@@ -9,22 +9,29 @@ share kernels, so equality is the invariant.
 from __future__ import annotations
 
 import os
+import re
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from mergeaddressesandbuildings_spark import schemas
-from mergeaddressesandbuildings_spark.operators import extract
+from mergeaddressesandbuildings_spark.operators import extract, tiling
+from mergeaddressesandbuildings_spark.plans.merge import fingerprint
 from mergeaddressesandbuildings_spark.sources import pages as pg
 from mergeaddressesandbuildings_spark.streaming import ingest
 
 
+def _drop(spark, src_dir: str, pdf: pd.DataFrame) -> None:
+    """Write ``pdf`` as one parquet 'file drop' (its own subdir would
+    confuse the file source — write into src_dir directly)."""
+    spark.createDataFrame(pdf, schema=schemas.PAGES).coalesce(1) \
+        .write.mode("append").parquet(src_dir)
+
+
 def _drop_pages(spark, src_dir: str, lo: int, hi: int, name: str) -> None:
-    """Write pages [lo, hi) as one parquet 'file drop' (its own subdir
-    would confuse the file source — write into src_dir directly)."""
-    pdf = pg.gen_pages_pdf(range(lo, hi))
-    df = spark.createDataFrame(pdf, schema=schemas.PAGES).coalesce(1)
-    df.write.mode("append").parquet(src_dir)
+    """Drop pages [lo, hi)."""
+    _drop(spark, src_dir, pg.gen_pages_pdf(range(lo, hi)))
 
 
 def _run_to_memory(stream, name: str, output_mode: str):
@@ -123,29 +130,116 @@ def test_st4_stateful_cell_budget_accumulates(spark, tmp_path):
               .agg(F.sum("n")).collect()[0][0] == batch_n
 
 
-def test_st5_incremental_merge_resume(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _drop_pages(spark, src, 0, 80, "a")
-    seen: list[tuple[int, int]] = []
-    ingest.incremental_merge(spark, src, out, ckpt,
-                             on_batch=lambda e, n: seen.append((e, n)))
-    data = spark.read.parquet(os.path.join(out, "data"))
-    n1 = data.count()
-    assert n1 > 0 and len(seen) >= 1
-    assert "tile" in data.columns and "decision" in data.columns
+# ST5: three file drops, streamed one file per microbatch. Drop B
+# re-captures url 5 later with another page's content; drop C carries an
+# OLDER capture of url 41 (out of order: it must not replace drop A's)
+# and a replay of url 30's rows. The stream restarts before drop C.
+ST5_PAGES = 130
+ST5_DONOR = 10_000  # donor pages lend far-away content
+RECAPTURED, OUT_OF_ORDER, REPLAYED, CONFLICTED = 5, 41, 30, 40
 
-    # batch parity: same pages through the batch plan → same addr set
+
+def _capture(i: int, shift: pd.Timedelta) -> pd.DataFrame:
+    """A capture of page ``i``'s url carrying a donor page's content,
+    ``shift`` after the url's latest capture (or, for a negative shift,
+    before its earliest)."""
+    own = pg.gen_pages_pdf([i])
+    row = pg.gen_pages_pdf([i + ST5_DONOR]).head(1).copy()
+    row["url"] = own["url"].iloc[0]
+    row["warc_ts"] = (own["warc_ts"].max() if shift > pd.Timedelta(0)
+                      else own["warc_ts"].min()) + shift
+    return row
+
+
+def _st5_drops() -> list[pd.DataFrame]:
+    day = pd.Timedelta(days=1)
+    return [
+        pg.gen_pages_pdf(range(0, 60)),
+        pd.concat([pg.gen_pages_pdf(range(60, 100)), _capture(RECAPTURED, day)]),
+        pd.concat([pg.gen_pages_pdf(range(100, ST5_PAGES)),
+                   _capture(OUT_OF_ORDER, -day), pg.gen_pages_pdf([REPLAYED])]),
+    ]
+
+
+def _st5_data(spark, out: str):
+    """ST5's tiled output; the partition column reads back as long,
+    the type the fingerprint hashes."""
+    return spark.read.parquet(os.path.join(out, "data")) \
+        .withColumn("tile", F.col("tile").cast("long"))
+
+
+def _run_merge_over(spark, pdfs: list[pd.DataFrame], existing):
     from mergeaddressesandbuildings_spark.plans.merge import run_merge
-    batch = run_merge(spark, spark.read.schema(schemas.PAGES).parquet(src))
-    assert sorted(r["addr_id"] for r in data.select("addr_id").collect()) == \
-           sorted(r["addr_id"] for r in batch.assignments.select("addr_id").collect())
 
-    # restart with a new file drop: old epochs are not reprocessed
-    _drop_pages(spark, src, 80, 130, "b")
-    ingest.incremental_merge(spark, src, out, ckpt,
+    pages = spark.createDataFrame(pd.concat(pdfs, ignore_index=True),
+                                  schema=schemas.PAGES)
+    res = run_merge(spark, pages, existing)
+    return res, tiling.assign_tiles(res.assignments, tm=res.tile_map)
+
+
+@pytest.fixture(scope="module")
+def st5(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("st5")
+    src, out, ckpt = (str(root / d) for d in ("src", "out", "ckpt"))
+    existing = pg.existing_osm_df(spark, ST5_PAGES)
+    drops = _st5_drops()
+    seen: list[tuple[int, int]] = []
+    for pdf in drops[:2]:
+        _drop(spark, src, pdf)
+    ingest.incremental_merge(spark, src, out, ckpt, existing,
+                             max_files_per_trigger=1,
                              on_batch=lambda e, n: seen.append((e, n)))
-    data2 = spark.read.parquet(os.path.join(out, "data"))
-    assert data2.count() > n1
-    assert data2.select("addr_id").distinct().count() == data2.count()
+    fp_first_run = fingerprint(_st5_data(spark, out))
+    # restart with a new file drop: old epochs are not reprocessed
+    _drop(spark, src, drops[2])
+    ingest.incremental_merge(spark, src, out, ckpt, existing,
+                             max_files_per_trigger=1,
+                             on_batch=lambda e, n: seen.append((e, n)))
+    return {"src": src, "out": out, "ckpt": ckpt, "existing": existing,
+            "drops": drops, "seen": seen, "fp_first_run": fp_first_run}
+
+
+def test_st5_incremental_merge_resume(spark, st5):
+    assert [e for e, _ in st5["seen"]] == [0, 1, 2]
+    data = _st5_data(spark, st5["out"])
+    assert st5["seen"][-1][1] == data.count()
+    assert "tile" in data.columns and "decision" in data.columns
+    # after the first run the output was already the batch merge of
+    # the drops streamed so far
+    _, ref = _run_merge_over(spark, st5["drops"][:2], st5["existing"])
+    assert st5["fp_first_run"] == fingerprint(ref)
+    # no lineage-barrier dir and no epoch markers
+    assert sorted(os.listdir(st5["out"])) == ["captures", "data", "state"]
+
+
+def test_st5_equals_run_merge_over_the_union(spark, st5):
+    """Buildings of earlier microbatches are candidates, decisions are
+    global, a later recapture replaces the url's content and an older
+    one arriving late does not: the stream's output is run_merge's over
+    the union of the drops, fingerprint, output sets and tiles."""
+    from mergeaddressesandbuildings_spark.plans import incremental as inc
+
+    res, ref = _run_merge_over(spark, st5["drops"], st5["existing"])
+    data = _st5_data(spark, st5["out"])
+    assert fingerprint(data) == fingerprint(ref)
+    tiles = lambda df: sorted(map(tuple, df.select("addr_id", "tile").collect()))  # noqa: E731
+    assert tiles(data) == tiles(ref)
+    assignments, sets, _, _ = inc.current_outputs(
+        spark, os.path.join(st5["out"], "state"))
+    assert sorted(map(tuple, sets.collect())) == \
+        sorted(map(tuple, res.sets.collect()))
+    assignments.unpersist()
+
+
+def test_st5_conflicting_capture_raises(spark, st5):
+    """The same warc_ts with other text: the state cannot tell which
+    capture the full merge keeps, so the epoch fails loudly and the
+    output stays as it was."""
+    before = fingerprint(_st5_data(spark, st5["out"]))
+    own = pg.gen_pages_pdf([CONFLICTED])
+    clash = own.loc[[own["warc_ts"].idxmax()]].assign(text="conflicting text")
+    _drop(spark, st5["src"], clash)
+    with pytest.raises(Exception, match=re.escape(clash["url"].iloc[0])):
+        ingest.incremental_merge(spark, st5["src"], st5["out"], st5["ckpt"],
+                                 st5["existing"], max_files_per_trigger=1)
+    assert fingerprint(_st5_data(spark, st5["out"])) == before
