@@ -192,6 +192,7 @@ def main() -> None:
         out.update({"fingerprint": fp, "n_assignments": n_assign,
                     "n_tiles": n_tiles})
         assignments.unpersist()
+        tm.unpersist()
 
     out["wall_s"] = round(time.monotonic() - t0, 2)
     print(json.dumps(out))

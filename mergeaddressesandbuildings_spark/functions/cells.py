@@ -163,7 +163,6 @@ def cover_bbox(
     max_lat: np.ndarray,
     max_lon: np.ndarray,
     level: int = config.CELL_LEVEL,
-    max_cells_per_row: int = config.MAX_COVER_CELLS,
 ) -> list[np.ndarray]:
     """COMPLETE cell cover of each bbox at ``level`` (T2: polygon cell
     cover).
@@ -172,20 +171,20 @@ def cover_bbox(
     superset cover is always join-correct (the PIP/kNN refine is exact),
     and building footprints are tiny relative to level-12 cells so the
     cover is 1–4 cells in practice. Returns a list of int64 arrays
-    (ragged). A row whose range would exceed ``max_cells_per_row``
-    raises ``ValueError`` — the SAME validation as the SQL cover path
+    (ragged). A row whose range would exceed ``MAX_COVER_CELLS`` raises
+    ``ValueError`` — the SAME validation as the SQL cover path
     (cells_sql.bbox_cover_cells_expr), so a degenerate oversized ring
     fails loudly in every join strategy instead of silently losing
-    candidates (tests/test_cells.py::test_cover_bbox_oversized_raises).
+    candidates.
     """
     x0, y0 = lonlat_to_xy(np.asarray(min_lat), np.asarray(min_lon), level)
     x1, y1 = lonlat_to_xy(np.asarray(max_lat), np.asarray(max_lon), level)
     n_cells = (x1 - x0 + 1) * (y1 - y0 + 1)
-    if len(n_cells) and int(n_cells.max()) > max_cells_per_row:
+    if len(n_cells) and int(n_cells.max()) > config.MAX_COVER_CELLS:
         bad = int(np.argmax(n_cells))
         raise ValueError(
             f"bbox cover of row {bad} spans {int(n_cells[bad])} level-{level} "
-            f"cells (> {max_cells_per_row}): degenerate ring "
+            f"cells (> {config.MAX_COVER_CELLS}): degenerate ring "
             f"lat[{float(np.asarray(min_lat)[bad])}, {float(np.asarray(max_lat)[bad])}] "
             f"lon[{float(np.asarray(min_lon)[bad])}, {float(np.asarray(max_lon)[bad])}]"
         )

@@ -83,8 +83,7 @@ def cell_from_xy_expr(x: Column, y: Column, level) -> Column:
 
 def bbox_cover_cells_expr(min_lat: Column, min_lon: Column,
                           max_lat: Column, max_lon: Column,
-                          level: int,
-                          max_cells: int = config.MAX_COVER_CELLS) -> Column:
+                          level: int) -> Column:
     """array<long> of ALL level-``level`` cells intersecting the bbox —
     pure column expressions (``sequence`` over the x/y integer ranges,
     cross product via nested ``transform``, then the same spread/encode
@@ -92,9 +91,9 @@ def bbox_cover_cells_expr(min_lat: Column, min_lon: Column,
     dedupe: two overlapping rings always share a bbox-cover cell, and at
     building sizes the cover is 1–4 cells.
 
-    A bbox spanning more than ``max_cells`` cells raises at execution
-    time (``raise_error``) — the SAME validation as the numpy path
-    (cells.cover_bbox), so oversized rings fail loudly in every
+    A bbox spanning more than ``MAX_COVER_CELLS`` cells raises at
+    execution time (``raise_error``) — the SAME validation as the numpy
+    path (cells.cover_bbox), so oversized rings fail loudly in every
     strategy instead of silently losing candidates.
 
     The x/y bit-spreads are hoisted into their OWN per-axis transforms
@@ -116,10 +115,10 @@ def bbox_cover_cells_expr(min_lat: Column, min_lon: Column,
         )
     )
     n = (xhi - xlo + 1) * (yhi - ylo + 1)
-    return F.when(n <= F.lit(max_cells), cover).otherwise(
+    return F.when(n <= F.lit(config.MAX_COVER_CELLS), cover).otherwise(
         F.raise_error(
             F.concat(
-                F.lit(f"bbox cover spans more than {max_cells} level-{level} "
+                F.lit(f"bbox cover spans more than {config.MAX_COVER_CELLS} level-{level} "
                       "cells: degenerate ring lat["),
                 min_lat.cast("string"), F.lit(", "), max_lat.cast("string"),
                 F.lit("] lon["),

@@ -48,8 +48,7 @@ def haversine_m_col(lat1, lon1, lat2, lon2) -> F.Column:
     return 2.0 * config.EARTH_RADIUS_M * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 
-def dedupe_addresses(addresses: DataFrame, existing_nodes: DataFrame,
-                     eps_m: float = config.ADDR_DEDUPE_EPS_M) -> DataFrame:
+def dedupe_addresses(addresses: DataFrame, existing_nodes: DataFrame) -> DataFrame:
     """J4: drop new addresses duplicating an existing OSM address node."""
     a = addresses.withColumn("_st", street_norm_col(F.col("street"))) \
                  .withColumn("_hn", hn_norm_col(F.col("housenumber")))
@@ -61,7 +60,8 @@ def dedupe_addresses(addresses: DataFrame, existing_nodes: DataFrame,
     )
     hits = (
         a.join(F.broadcast(e), ["_st", "_hn"], "inner")
-        .filter(haversine_m_col(F.col("lat"), F.col("lon"), F.col("_elat"), F.col("_elon")) <= eps_m)
+        .filter(haversine_m_col(F.col("lat"), F.col("lon"), F.col("_elat"), F.col("_elon"))
+                <= config.ADDR_DEDUPE_EPS_M)
         .select("addr_id")
         .distinct()
     )
@@ -95,8 +95,7 @@ def _overlap_pairs_kernel(batches):
             yield pd.DataFrame({"building_id": ids})
 
 
-def dedupe_buildings(new_buildings: DataFrame, existing_ways: DataFrame,
-                     join_level: int = config.DEDUPE_JOIN_LEVEL) -> DataFrame:
+def dedupe_buildings(new_buildings: DataFrame, existing_ways: DataFrame) -> DataFrame:
     """J3: drop new buildings overlapping an existing way footprint.
 
     Candidate generation is a plain Catalyst equi-join on a FINE-level
@@ -114,7 +113,8 @@ def dedupe_buildings(new_buildings: DataFrame, existing_ways: DataFrame,
             F.explode(
                 cells_sql.bbox_cover_cells_expr(
                     F.col(p("min_lat")), F.col(p("min_lon")),
-                    F.col(p("max_lat")), F.col(p("max_lon")), join_level,
+                    F.col(p("max_lat")), F.col(p("max_lon")),
+                    config.DEDUPE_JOIN_LEVEL,
                 )
             ),
         )

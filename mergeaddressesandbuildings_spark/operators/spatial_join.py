@@ -58,10 +58,10 @@ class BldIndex:
     rings, bboxes, and a sorted fine-cell cover for searchsorted
     candidate lookup. Pickles as raw buffers (fast to ship per task,
     unlike a pandas frame holding Python-list rings, whose per-task
-    unpickle dominated the old broadcast path)."""
+    unpickle dominated the old broadcast path). The cover is at
+    ``REFINE_INDEX_LEVEL``, the pair-join's level."""
 
-    def __init__(self, buildings_pdf: pd.DataFrame, level: int):
-        self.level = level
+    def __init__(self, buildings_pdf: pd.DataFrame):
         self.ids = buildings_pdf["building_id"].to_numpy(dtype=np.int64)
         self.areas = buildings_pdf["area_m2"].to_numpy(dtype=np.float64)
         self.min_lat = buildings_pdf["min_lat"].to_numpy(dtype=np.float64)
@@ -77,7 +77,8 @@ class BldIndex:
             )
         )
         covers = cells.cover_bbox(
-            self.min_lat, self.min_lon, self.max_lat, self.max_lon, level
+            self.min_lat, self.min_lon, self.max_lat, self.max_lon,
+            config.REFINE_INDEX_LEVEL,
         )
         lens = np.fromiter((len(c) for c in covers), dtype=np.int64,
                            count=len(covers))
@@ -105,9 +106,8 @@ class BldIndex:
         return np.repeat(qpt, cnt), self.cover_rows[pos]
 
 
-def build_broadcast_index(buildings_pdf: pd.DataFrame,
-                          level: int = config.REFINE_INDEX_LEVEL) -> BldIndex:
-    return BldIndex(buildings_pdf, level)
+def build_broadcast_index(buildings_pdf: pd.DataFrame) -> BldIndex:
+    return BldIndex(buildings_pdf)
 
 
 def broadcast_index_for(buildings: DataFrame,
@@ -161,7 +161,7 @@ def _cand_frame(addr_ids: np.ndarray, building_ids: np.ndarray,
     )
 
 
-def _probe_cells(plat: np.ndarray, plon: np.ndarray, level: int,
+def _probe_cells(plat: np.ndarray, plon: np.ndarray,
                  cutoff_m: float) -> tuple[np.ndarray, np.ndarray]:
     """kNN probe cells → (point index, fine cell): each point's 3×3
     fine-cell neighborhood (valid while cutoff ≤ one fine-cell width —
@@ -169,7 +169,7 @@ def _probe_cells(plat: np.ndarray, plon: np.ndarray, level: int,
     (conservative rect lower bound under the refine's own metric):
     typically 1–4 of the 9 survive, shrinking the candidate lookup
     proportionally."""
-    fine = cells.encode(plat, plon, level)
+    fine = cells.encode(plat, plon, config.REFINE_INDEX_LEVEL)
     nb = cells.neighbors(fine).reshape(-1)  # (n*9,)
     qpt = np.repeat(np.arange(len(plat), dtype=np.int64), 9)
     b0, b1, b2, b3 = cells.cell_bounds(nb)
@@ -180,7 +180,7 @@ def _probe_cells(plat: np.ndarray, plon: np.ndarray, level: int,
 def _pip_pairs(plat, plon, addr_ids, index: BldIndex) -> pd.DataFrame:
     """PIP over broadcast index: fine-cell lookup → bbox filter → one
     flattened-edge pair-PIP pass."""
-    fine = cells.encode(plat, plon, index.level)
+    fine = cells.encode(plat, plon, config.REFINE_INDEX_LEVEL)
     pair_pt, pair_bld = index.candidates(fine, np.arange(len(plat), dtype=np.int64))
     keep = (
         (plat[pair_pt] >= index.min_lat[pair_bld])
@@ -201,7 +201,7 @@ def _knn_pairs(plat, plon, addr_ids, index: BldIndex, cutoff_m: float) -> pd.Dat
     """kNN over broadcast index: pruned 3×3 fine-neighborhood lookup
     (:func:`_probe_cells`) → padded-bbox filter → one flattened-edge
     pair-distance pass."""
-    qpt, qcells = _probe_cells(plat, plon, index.level, cutoff_m)
+    qpt, qcells = _probe_cells(plat, plon, cutoff_m)
     pair_pt, pair_bld = index.candidates(qcells, qpt)
     # a building cover spanning several neighbor cells yields duplicate
     # pairs — dedupe with one sort so the distance pass runs once per pair
@@ -228,7 +228,7 @@ def _knn_pairs(plat, plon, addr_ids, index: BldIndex, cutoff_m: float) -> pd.Dat
 
 
 def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
-                          level: int, knn_cutoff_m: float | None) -> DataFrame:
+                          knn_cutoff_m: float | None) -> DataFrame:
     """Shuffle path for J1/J2 at corpus scale: a Catalyst equi-join
     on FINE-level cells (addresses at their cell — or its 3×3
     neighborhood for kNN — against exploded building bbox-cover cells),
@@ -238,6 +238,7 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
     skew, which AQE's skew-join split handles. Shuffle volume carries
     each candidate pair's ring once; candidate counts stay near-linear
     because the fine cell (~1 km) bounds the match radius."""
+    level = config.REFINE_INDEX_LEVEL
     a = addresses.select("addr_id", "lat", "lon")
     if knn_cutoff_m is None:
         a = a.withColumn(
@@ -257,7 +258,7 @@ def _pair_join_candidates(addresses: DataFrame, buildings: DataFrame,
                     continue
                 qpt, qcells = _probe_cells(b["lat"].to_numpy(np.float64),
                                            b["lon"].to_numpy(np.float64),
-                                           level, knn_cutoff_m)
+                                           knn_cutoff_m)
                 rep = b.iloc[qpt].reset_index(drop=True)
                 rep["fcell"] = qcells
                 yield rep
@@ -339,9 +340,7 @@ def pip_candidates(addresses: DataFrame, buildings: DataFrame,
     else by the fine-cell pair-join."""
     if broadcast_index is not None:
         return _broadcast_refine(addresses, broadcast_index, _pip_pairs)
-    return _pair_join_candidates(
-        addresses, buildings, config.REFINE_INDEX_LEVEL, knn_cutoff_m=None
-    )
+    return _pair_join_candidates(addresses, buildings, knn_cutoff_m=None)
 
 
 def knn_candidates(addresses: DataFrame, buildings: DataFrame,
@@ -350,23 +349,19 @@ def knn_candidates(addresses: DataFrame, buildings: DataFrame,
                    broadcast_index: BldIndex | None = None) -> DataFrame:
     """J2: (addr, building, dist) candidate pairs within ``cutoff_m``
     over each address's 3×3 fine-cell neighborhood (T3); same path
-    choice as :func:`pip_candidates`. Both paths search at the fine
-    level (the index's own, or ``REFINE_INDEX_LEVEL``), so ``level`` is
-    not read; it is still accepted so existing keyword callers keep
-    working. A pair can surface more than once (a building cover
-    spanning several neighbor cells) with identical rows — harmless for
-    the top-1 window; callers needing distinct pairs dedupe."""
-    fine_level = (broadcast_index.level if broadcast_index is not None
-                  else config.REFINE_INDEX_LEVEL)
-    assert cells.min_cell_width_m(fine_level, 80.0) >= cutoff_m, (
+    choice as :func:`pip_candidates`. Both paths search at
+    ``REFINE_INDEX_LEVEL``, so ``level`` is not read; it is still
+    accepted so existing keyword callers keep working. A pair can
+    surface more than once (a building cover spanning several neighbor
+    cells) with identical rows — harmless for the top-1 window; callers
+    needing distinct pairs dedupe."""
+    assert cells.min_cell_width_m(config.REFINE_INDEX_LEVEL, 80.0) >= cutoff_m, (
         "kNN cutoff exceeds one fine-cell width — neighborhood incomplete (§8.5)"
     )
     if broadcast_index is not None:
         pair_fn = lambda plat, plon, ids, idx: _knn_pairs(plat, plon, ids, idx, cutoff_m)
         return _broadcast_refine(addresses, broadcast_index, pair_fn)
-    return _pair_join_candidates(
-        addresses, buildings, config.REFINE_INDEX_LEVEL, knn_cutoff_m=cutoff_m
-    )
+    return _pair_join_candidates(addresses, buildings, knn_cutoff_m=cutoff_m)
 
 
 def _pick_winner(cands: DataFrame, order_col: str, method: str) -> DataFrame:

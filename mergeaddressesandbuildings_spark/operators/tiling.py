@@ -10,8 +10,8 @@ iterate until no tile exceeds the budget or MAX_CELL_LEVEL.
 Scale notes:
 - the encode is a pure column expression (cells_sql) — whole-stage
   codegen, no Python round trip;
-- the recursive split is computed in ONE lazy plan (see
-  :func:`assign_tiles`): a single data-cardinality shuffle plus small
+- the recursive split is computed in ONE plan (see
+  :func:`tile_map`): a single data-cardinality shuffle plus small
   aggregations over the distinct-fine-cell counts. No driver loop, no
   collected ``isin`` lists (at 10^12 elements the over-budget set can
   reach ~10^8 ids and must stay distributed), no expression-tree growth
@@ -29,61 +29,54 @@ from mergeaddressesandbuildings_spark import config
 from mergeaddressesandbuildings_spark.functions import cells_sql
 
 
-def assign_tiles(points: DataFrame,
-                 budget: int = config.TILE_MAX_ELEMS,
-                 level: int = config.CELL_LEVEL,
-                 max_level: int = config.MAX_CELL_LEVEL,
-                 tm: DataFrame | None = None) -> DataFrame:
-    """points(elem_id, lat, lon, ...) → same + ``tile`` column.
-
-    Single-pass formulation of the recursive split. Cell counts are
-    monotone non-increasing down the hierarchy (a child never holds more
-    points than its parent), so the iterative "split over-budget tiles
-    one level per round" fixpoint is exactly: *tile(p) = the first
-    ancestor of p's max_level cell — scanning from the base level down —
-    whose total count ≤ budget, else the max_level cell itself*. That
-    closed form needs no driver-side loop:
-
-      1. one hash-agg: count per max_level cell (the only shuffle that
-         touches the data's cardinality);
-      2. ancestor counts: explode each fine cell's ancestor chain
-         (prefix-coded Morton ⇒ parent = cell >> 2) over the COUNTS
-         DataFrame — at most (max_level−level+1) × distinct-fine-cells
-         rows, tiny relative to the data;
-      3. first under-budget ancestor per fine cell (left_anti against
-         the over-budget set + min(pos));
-      4. one equi-join of the data against the fine-cell→tile map (AQE
-         broadcasts it when small).
-
-    Everything is lazy — no collect, no localCheckpoint, no per-round
-    jobs — and parallelism-invariant (pure function of global counts).
-    A previous per-round driver loop cost ~4 jobs/round and 17 s on a
-    19k-row input; this plan runs in the noise.
-    """
-    x, y = cells_sql.xy_expr(F.col("lat"), F.col("lon"), max_level)
+def assign_tiles(points: DataFrame, tm: DataFrame) -> DataFrame:
+    """points(elem_id, lat, lon, ...) → same + ``tile`` column, joined
+    through the fine-cell → tile map ``tm`` (:func:`tile_map`)."""
+    x, y = cells_sql.xy_expr(F.col("lat"), F.col("lon"), config.MAX_CELL_LEVEL)
     df = points.withColumn("_x", x).withColumn("_y", y)
-    if tm is None:
-        tm = tile_map(points, budget=budget, level=level, max_level=max_level)
     return df.join(tm, ["_x", "_y"]).drop("_x", "_y")
 
 
 def tile_map(points: DataFrame,
              budget: int = config.TILE_MAX_ELEMS,
-             level: int = config.CELL_LEVEL,
-             max_level: int = config.MAX_CELL_LEVEL) -> DataFrame:
+             level: int = config.CELL_LEVEL) -> DataFrame:
     """The fine-cell → tile mapping ``(_x, _y, tile)`` for the points
-    universe (see :func:`assign_tiles` for the derivation). Exposed
-    separately so a consumer that already knows a row's coordinates can
-    join on the (much smaller) distinct-cell map directly instead of
-    joining full point rows back by element id.
+    universe, persisted and materialized: the caller owns its one cache
+    and unpersists it after its last read. A consumer that already
+    knows a row's coordinates joins this distinct-cell map directly
+    (:func:`assign_tiles`) instead of joining full point rows back by
+    element id.
 
-    The map is KEYED by the raw level-``max_level`` (x, y) integer
-    coords, not the Morton id: the big side then only evaluates two
-    floor-divisions per row, and the 60-op Morton bit-spread runs once
-    per DISTINCT cell on the aggregated (small) side — inlining that
-    chain per join key per union branch overflowed janino's 64 KB
-    method limit and dropped the whole tiling stage to interpreted
-    execution (round-1 bench tail)."""
+    Single-pass formulation of the recursive split. Cell counts are
+    monotone non-increasing down the hierarchy (a child never holds more
+    points than its parent), so the iterative "split over-budget tiles
+    one level per round" fixpoint is exactly: *tile(p) = the first
+    ancestor of p's MAX_CELL_LEVEL cell — scanning from the base level
+    down — whose total count ≤ budget, else the MAX_CELL_LEVEL cell
+    itself*. That closed form needs no driver-side loop:
+
+      1. one hash-agg: count per fine cell (the only shuffle that
+         touches the data's cardinality);
+      2. ancestor counts: explode each fine cell's ancestor chain
+         (prefix-coded Morton ⇒ parent = cell >> 2) over the COUNTS
+         DataFrame — at most (MAX_CELL_LEVEL−level+1) ×
+         distinct-fine-cells rows, tiny relative to the data;
+      3. first under-budget ancestor per fine cell (left_anti against
+         the over-budget set + min(pos)).
+
+    One action, no collect, no localCheckpoint, no per-round jobs, and
+    parallelism-invariant (pure function of global counts). A
+    previous per-round driver loop cost ~4 jobs/round and 17 s on a
+    19k-row input; this plan runs in the noise.
+
+    The map is KEYED by the raw fine-level (x, y) integer coords, not
+    the Morton id: the big side then only evaluates two floor-divisions
+    per row, and the 60-op Morton bit-spread runs once per DISTINCT
+    cell on the aggregated (small) side — inlining that chain per join
+    key per union branch overflowed janino's 64 KB method limit and
+    dropped the whole tiling stage to interpreted execution (round-1
+    bench tail)."""
+    max_level = config.MAX_CELL_LEVEL
     n_lvls = max_level - level + 1
     x, y = cells_sql.xy_expr(F.col("lat"), F.col("lon"), max_level)
     df = points.withColumn("_x", x).withColumn("_y", y)
@@ -99,16 +92,17 @@ def tile_map(points: DataFrame,
         )
         .withColumn("_chain", chain)
     )
-    # materialize the distinct-cell counts ONCE: three consumers below
-    # (ancestor totals, position scan, final join base) would otherwise
-    # each inline the full points-union + aggregation subtree — re-running
-    # the only data-cardinality shuffle up to 3× AND fusing ~15k lines of
-    # generated code into one processNext(), which overflows janino's
-    # 64 KB method limit and silently drops the stage to interpreted
-    # execution. The counts table is per-DISTINCT-fine-cell (orders of
-    # magnitude smaller than the points), so caching it is cheap.
+    # cache the distinct-cell counts: three consumers below (ancestor
+    # totals, position scan, final join base) would otherwise each
+    # inline the full points-union + aggregation subtree — re-running
+    # the only data-cardinality shuffle up to 3× AND fusing ~15k lines
+    # of generated code into one processNext(), which overflows
+    # janino's 64 KB method limit and silently drops the stage to
+    # interpreted execution. The counts table is per-DISTINCT-fine-cell
+    # (orders of magnitude smaller than the points), so caching it is
+    # cheap. AQE materializes it as its own query stage inside the
+    # map's count below, which then releases it.
     counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
-    counts.count()  # eager: lazy persist races the three-branch fan-out
     anc = (
         counts.select(F.explode("_chain").alias("_anc"), "_n")
         .groupBy("_anc").agg(F.sum("_n").alias("_t"))
@@ -121,7 +115,7 @@ def tile_map(points: DataFrame,
         pos.join(over, "_anc", "left_anti")
         .groupBy("_cmax").agg(F.min("_pos").alias("_p"))
     )
-    return (
+    tm = (
         counts.join(first_ok, "_cmax", "left")
         .select(
             "_x", "_y",
@@ -130,7 +124,11 @@ def tile_map(points: DataFrame,
                 (F.coalesce(F.col("_p"), F.lit(n_lvls - 1)) + 1).cast("int"),
             ).alias("tile"),
         )
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    tm.count()
+    counts.unpersist()
+    return tm
 
 
 def tile_points(assignments: DataFrame, buildings: DataFrame) -> DataFrame:

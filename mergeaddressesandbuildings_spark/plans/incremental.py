@@ -219,9 +219,7 @@ def _with_cell(winners: tuple[DataFrame, DataFrame],
 
 def full_build(spark: SparkSession, pages: DataFrame,
                existing_osm: DataFrame | None, state_dir: str,
-               level: int = config.CELL_LEVEL,
-               knn_cutoff_m: float = config.KNN_CUTOFF_M,
-               broadcast_max: int = config.BROADCAST_BUILDINGS_MAX) -> dict:
+               level: int = config.CELL_LEVEL) -> dict:
     """Run the full pipeline once and persist the incremental state
     tables, replacing any state a previous build left in ``state_dir``
     (only this engine's tables and meta.json are removed). Returns
@@ -262,24 +260,23 @@ def full_build(spark: SparkSession, pages: DataFrame,
     if ex_ways is not None:
         ex_ways.unpersist()
 
-    winners = merge.winner_stage(addresses, buildings, knn_cutoff_m,
-                                 broadcast_max)
+    winners = merge.winner_stage(addresses, buildings, config.KNN_CUTOFF_M,
+                                 config.BROADCAST_BUILDINGS_MAX)
     ice.write_iceberg(_with_cell(winners, addresses)
                       .repartitionByRange(nfiles, "cell"),
                       _t(state_dir, "winners"))
     for w in winners:
         w.unpersist()
 
-    params = {"level": level, "knn_cutoff_m": knn_cutoff_m,
-              "broadcast_max": broadcast_max}
+    params = {"level": level, "knn_cutoff_m": config.KNN_CUTOFF_M,
+              "broadcast_max": config.BROADCAST_BUILDINGS_MAX}
     _commit_meta(state_dir, params)
     return {**{name: ice.record_count(_t(state_dir, name))
                for name in _TABLES}, **params}
 
 
 def apply_delta(spark: SparkSession, page_changes: DataFrame,
-                state_dir: str,
-                deleted_col: str = "deleted") -> dict:
+                state_dir: str) -> dict:
     """Splice a url-keyed page change set into the state (module
     docstring: contract, closure math). Returns delta metrics —
     notably ``n_affected_addresses`` / ``n_sub_buildings``, the actual
@@ -297,7 +294,6 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
         timings[stage] = round(now - _t0, 2)
         _t0 = now
 
-    has_del = deleted_col in page_changes.columns
     # LOCALIZE the changed-url set (delta-sized): a local frame
     # broadcasts in every downstream join, and — decisive here — its
     # plan shares no subtree with the insert frames' lineage. Shared
@@ -308,11 +304,10 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     # closure rings below.
     changed_urls = _localize(page_changes.select("url").distinct())
     upserts = page_changes
-    if has_del:
+    if "deleted" in page_changes.columns:
         upserts = upserts.filter(
-            ~F.coalesce(F.col(deleted_col), F.lit(False)))
-    upserts = merge.fan_out(spark, upserts.drop(deleted_col)
-                            if has_del else upserts)
+            ~F.coalesce(F.col("deleted"), F.lit(False))).drop("deleted")
+    upserts = merge.fan_out(spark, upserts)
 
     new_records = extract.extract_records(upserts, level=level)
     new_records = new_records.persist()
@@ -423,14 +418,14 @@ def apply_delta(spark: SparkSession, page_changes: DataFrame,
     }
 
 
-def current_outputs(spark: SparkSession, state_dir: str,
-                    budget: int = config.TILE_MAX_ELEMS):
+def current_outputs(spark: SparkSession, state_dir: str):
     """(assignments, sets, tiles, tile_map) from the current state —
     run_merge's decisions and ``output_stage`` over the spliced
     element tables (element-scale; no extraction, no geometry
     kernels). ``tile_map`` is the distinct fine-cell → tile map, the
     frame jobs/incremental.py joins assignments against for the
-    fingerprint-bearing flat output."""
+    fingerprint-bearing flat output. ``assignments`` and ``tile_map``
+    are cached: the caller unpersists both after its last read."""
     meta = _load_meta(state_dir)
     addresses = _read(spark, state_dir, meta, "addresses")
     buildings = _read(spark, state_dir, meta, "buildings")
@@ -443,8 +438,8 @@ def current_outputs(spark: SparkSession, state_dir: str,
                              winners.filter(~is_pip), buildings)
     assignments = assignments.persist()
     assignments.count()
-    sets, _, tm, tiles = merge.output_stage(assignments, buildings, budget,
-                                            meta["level"])
+    sets, tm, tiles = merge.output_stage(assignments, buildings,
+                                         config.TILE_MAX_ELEMS, meta["level"])
     return assignments, sets, tiles, tm
 
 

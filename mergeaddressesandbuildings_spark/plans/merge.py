@@ -15,12 +15,14 @@
                     tiling (T4/T5) ──► tile column, budgeted
 
 Every stage is a DataFrame; the only Python crossings are the Arrow
-kernels (extraction, PIP/kNN refine, tile encode). Each stage is
-defined once here — :func:`fan_out`, :func:`element_stage` (its
-split/P3/dedupe part is :func:`new_elements`), :func:`winner_stage`,
-:func:`output_stage` and the pinned :data:`FINGERPRINT` — and
-:func:`run_merge` and plans/incremental.py compose the same functions,
-so the incremental path cannot drift from the full merge.
+kernels (J3 ring-overlap refine, PIP/kNN refine and, on the shuffle
+path, the kNN probe-cell expansion): extraction and the tile encode are
+JVM column expressions. Each stage is defined once here —
+:func:`fan_out`, :func:`element_stage` (its split/P3/dedupe part is
+:func:`new_elements`), :func:`winner_stage`, :func:`output_stage` and
+the pinned :data:`FINGERPRINT` — and :func:`run_merge` and
+plans/incremental.py compose the same functions, so the incremental
+path cannot drift from the full merge.
 """
 
 from __future__ import annotations
@@ -54,10 +56,9 @@ class MergeResult:
     assignments: DataFrame
     sets: DataFrame
     tiles: DataFrame  # assignments+buildings with tile column
-    tile_points: DataFrame  # the tile universe (elem_id, lat, lon, kind)
-    tile_map: DataFrame  # distinct fine-cell → tile map (computed ONCE;
-    # consumers that know a row's coordinates join this small map
-    # directly instead of re-deriving it — jobs/merge.py)
+    tile_map: DataFrame  # distinct fine-cell → tile map (computed ONCE
+    # and cached — the caller unpersists it; consumers that know a
+    # row's coordinates join this small map directly — jobs/merge.py)
 
 
 def _lineage_barrier(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
@@ -163,14 +164,13 @@ def winner_stage(addresses: DataFrame, buildings: DataFrame,
 
 def output_stage(assignments: DataFrame, buildings: DataFrame,
                  budget: int, level: int
-                 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """Materialized assignments → (output sets, tile points, fine-cell →
-    tile map, tiles)."""
+                 ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Materialized assignments → (output sets, cached fine-cell → tile
+    map, tiles)."""
     sets = dec.output_sets(assignments, buildings)
     points = tiling.tile_points(assignments, buildings)
     tm = tiling.tile_map(points, budget=budget, level=level)
-    tiles = tiling.assign_tiles(points, budget=budget, level=level, tm=tm)
-    return sets, points, tm, tiles
+    return sets, tm, tiling.assign_tiles(points, tm)
 
 
 def fingerprint(tiled: DataFrame) -> tuple[int, int, int]:
@@ -190,7 +190,6 @@ def run_merge(
     existing_osm: DataFrame | None = None,
     level: int = config.CELL_LEVEL,
     budget: int = config.TILE_MAX_ELEMS,
-    knn_cutoff_m: float = config.KNN_CUTOFF_M,
     broadcast_max: int = config.BROADCAST_BUILDINGS_MAX,
     county_ring: tuple | None = None,
     barrier_dir: str = "auto",
@@ -236,7 +235,7 @@ def run_merge(
         ex_ways.unpersist()
 
     pip_winners, knn_winners = winner_stage(addresses, buildings,
-                                            knn_cutoff_m, broadcast_max)
+                                            config.KNN_CUTOFF_M, broadcast_max)
 
     assignments = dec.assign(addresses, pip_winners, knn_winners, buildings)
     # lineage barrier #2: assignments fan into output sets, tiling, and
@@ -244,7 +243,7 @@ def run_merge(
     assignments = _lineage_barrier(spark, assignments, f"{barrier_dir}/assignments")
     pip_winners.unpersist()
     knn_winners.unpersist()
-    sets, points, tm, tiles = output_stage(assignments, buildings, budget, level)
+    sets, tm, tiles = output_stage(assignments, buildings, budget, level)
 
     return MergeResult(
         addresses=addresses,
@@ -252,6 +251,5 @@ def run_merge(
         assignments=assignments,
         sets=sets,
         tiles=tiles,
-        tile_points=points,
         tile_map=tm,
     )

@@ -866,6 +866,7 @@ def merge_holes(spark, sf_dir):
 
     pages, existing = pg.holed_frames(spark)
     res = run_merge(spark, pages, existing)
+    res.tile_map.unpersist()  # the assignments are a barrier scan
     return res.assignments.select(
         "addr_id", "url", "building_id", "method", "decision"
     )

@@ -178,15 +178,18 @@ def incremental_merge(
         try:
             if pages.isEmpty():
                 return
+            # one assignment per post-J4 address: n is the address count
             if seen:
-                inc.apply_delta(spark, pages.drop("text_hash"), state_dir)
+                n = inc.apply_delta(spark, pages.drop("text_hash"),
+                                    state_dir)["n_addresses_total"]
             else:  # rebuilt until the first epoch's captures commit
-                inc.full_build(spark, pages.drop("text_hash"), existing_osm, state_dir)
+                n = inc.full_build(spark, pages.drop("text_hash"), existing_osm,
+                                   state_dir)["addresses"]
             assignments, _, _, tm = inc.current_outputs(spark, state_dir)
-            n = assignments.count()
-            (tiling.assign_tiles(assignments, tm=tm)
+            (tiling.assign_tiles(assignments, tm)
              .write.partitionBy("tile").mode("overwrite").parquet(data_dir))
             assignments.unpersist()
+            tm.unpersist()
             keys = pages.select("url", "warc_ts", "text_hash")
             if seen:
                 ice.merge_upsert(spark, captures_dir, keys, ["url"])

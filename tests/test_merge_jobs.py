@@ -73,8 +73,9 @@ def test_merge_jobs_agree_and_leave_no_barriers(spark, tmp_path):
 def test_run_merge_releases_its_caches(spark, tmp_path):
     """run_merge unpersists each frame it caches once a lineage barrier
     holds its rows, so repeated merges (one per streaming microbatch)
-    keep at most one cache each: the tile-count frame that the
-    returned lazy tile_map still reads. The output is unchanged."""
+    keep at most one cache each: the returned tile_map, which the
+    caller owns. Once the caller unpersists it, no cache the merge
+    made is left. The output is unchanged."""
     from mergeaddressesandbuildings_spark.operators import tiling
     from mergeaddressesandbuildings_spark.plans.merge import (
         fingerprint, run_merge)
@@ -82,12 +83,12 @@ def test_run_merge_releases_its_caches(spark, tmp_path):
 
     jsc = spark.sparkContext._jsc
     pages, existing = pg.pages_df(spark, 200), pg.existing_osm_df(spark, 200)
-    sizes = [jsc.getPersistentRDDs().size()]  # the session is shared
+    before = jsc.getPersistentRDDs().size()  # the session is shared
     for i in range(2):
         res = run_merge(spark, pages, existing,
                         barrier_dir=str(tmp_path / f"barrier{i}"))
-        sizes.append(jsc.getPersistentRDDs().size())
-    assert max(b - a for a, b in zip(sizes, sizes[1:])) <= 1, sizes
-    assert fingerprint(tiling.assign_tiles(res.assignments,
-                                           tm=res.tile_map)) == \
-        (-5992241864211959338, 193, 29)
+        assert jsc.getPersistentRDDs().size() - before <= 1
+        fp = fingerprint(tiling.assign_tiles(res.assignments, tm=res.tile_map))
+        res.tile_map.unpersist()
+        assert jsc.getPersistentRDDs().size() == before
+    assert fp == (-5992241864211959338, 193, 29)

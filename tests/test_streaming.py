@@ -184,19 +184,25 @@ def st5(spark, tmp_path_factory):
     existing = pg.existing_osm_df(spark, ST5_PAGES)
     drops = _st5_drops()
     seen: list[tuple[int, int]] = []
+    cached: list[int] = []  # the session's cached RDDs after each epoch
+    jsc = spark.sparkContext._jsc
+
+    def on_batch(e: int, n: int) -> None:
+        seen.append((e, n))
+        cached.append(jsc.getPersistentRDDs().size())
+
     for pdf in drops[:2]:
         _drop(spark, src, pdf)
     ingest.incremental_merge(spark, src, out, ckpt, existing,
-                             max_files_per_trigger=1,
-                             on_batch=lambda e, n: seen.append((e, n)))
+                             max_files_per_trigger=1, on_batch=on_batch)
     fp_first_run = fingerprint(_st5_data(spark, out))
     # restart with a new file drop: old epochs are not reprocessed
     _drop(spark, src, drops[2])
     ingest.incremental_merge(spark, src, out, ckpt, existing,
-                             max_files_per_trigger=1,
-                             on_batch=lambda e, n: seen.append((e, n)))
+                             max_files_per_trigger=1, on_batch=on_batch)
     return {"src": src, "out": out, "ckpt": ckpt, "existing": existing,
-            "drops": drops, "seen": seen, "fp_first_run": fp_first_run}
+            "drops": drops, "seen": seen, "cached": cached,
+            "fp_first_run": fp_first_run}
 
 
 def test_st5_incremental_merge_resume(spark, st5):
@@ -216,7 +222,8 @@ def test_st5_equals_run_merge_over_the_union(spark, st5):
     """Buildings of earlier microbatches are candidates, decisions are
     global, a later recapture replaces the url's content and an older
     one arriving late does not: the stream's output is run_merge's over
-    the union of the drops, fingerprint, output sets and tiles."""
+    the union of the drops, fingerprint, output sets and tiles. An
+    epoch leaves no cache behind."""
     from mergeaddressesandbuildings_spark.plans import incremental as inc
 
     res, ref = _run_merge_over(spark, st5["drops"], st5["existing"])
@@ -224,11 +231,13 @@ def test_st5_equals_run_merge_over_the_union(spark, st5):
     assert fingerprint(data) == fingerprint(ref)
     tiles = lambda df: sorted(map(tuple, df.select("addr_id", "tile").collect()))  # noqa: E731
     assert tiles(data) == tiles(ref)
-    assignments, sets, _, _ = inc.current_outputs(
+    assignments, sets, _, tm = inc.current_outputs(
         spark, os.path.join(st5["out"], "state"))
     assert sorted(map(tuple, sets.collect())) == \
         sorted(map(tuple, res.sets.collect()))
     assignments.unpersist()
+    tm.unpersist()
+    assert len(set(st5["cached"])) == 1, st5["cached"]
 
 
 def test_st5_conflicting_capture_raises(spark, st5):
